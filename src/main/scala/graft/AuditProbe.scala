@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool behind `ParallelismAuditSpec`: plans every registry query against
   * a deliberately 2-file corpus with the guard's size skip disabled and
   * prints any kernel node the `ParallelismAudit` walker finds unguarded.
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object AuditProbe {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val tgt = s"/tmp/audit2f_${new java.io.File(src).getName}"
     val marker = new java.io.File(tgt, "_DONE")

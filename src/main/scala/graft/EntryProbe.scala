@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-smoke probe: `SparkEntry.entry` must work on a session built the
   * way the DRIVER builds one — bare, with none of the test harness's confs
   * preset (in particular no `nanosAsLong`, which `SparkEntry.t` sets at
@@ -9,11 +7,9 @@ import org.apache.spark.sql.SparkSession
   * this probe is kept as a one-command local mirror of it. */
 object EntryProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // the driver's own session does not carry this engine convention
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling main for the LOW-DIVERSITY corpus regime (not part of
@@ -15,13 +14,7 @@ import org.apache.spark.sql.functions._
   * Usage: FloodProbe <n> [threshold] */
 object FloodProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .appName("flood-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
     val n = args(0).toLong
     val threshold = args.drop(1).headOption.map(_.toDouble).getOrElse(0.8)

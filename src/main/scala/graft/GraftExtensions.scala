@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** Catalyst integration point: registers the engine's native expressions so they are
   * usable from plain SQL in any session created with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`):
+  * a session builder's `withExtensions(new GraftExtensions)`):
   *
   *   SELECT rolling_hash64(text)             -- codegen'd FNV-style rolling hash
   *   SELECT sorted_intersect_count(a, b)     -- allocation-free sorted-set intersect

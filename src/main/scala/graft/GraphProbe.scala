@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Bm25, LinkGraph}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling main for the r14 retrieval/link-graph operators (not
@@ -20,14 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object GraphProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graph-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def timed[A](label: String)(body: => A): A = {
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool for the optimization rounds (r18): run one registry query on a
   * bench-shaped session under a job listener and print every Spark job it
@@ -18,15 +17,7 @@ object JobProbe {
     val name = args(0)
     val src = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     sys.env.get("GRAFT_CONF").foreach(_.split(",").map(_.trim)
       .filter(_.contains("=")).foreach { kv =>

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Multimodal}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling main for the multimodal near-dup path (not part of the
@@ -21,14 +21,7 @@ import org.apache.spark.sql.functions._
   * Usage: MediaProbe gen|phash|pairs|audio <dir> [nImages] [dupFactor] */
 object MediaProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("media-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
     val mode = args(0)
     val dir = args(1)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool for the optimization rounds: dump `.explain("formatted")` for
   * named registry queries to files (the `plans/r17/<query>_{before,after}.txt`
   * deliverable). Bench-shaped session (same master/shuffle/AQE settings), so
@@ -22,15 +20,7 @@ object PlanProbe {
     val suffix = args(1)
     val sel = args(2)
     val src = args.drop(3).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_CONF="k=v,k=v": session confs for plan captures (e.g. force the
     // size-gated pins on to show the at-scale plan shape at bench scale)

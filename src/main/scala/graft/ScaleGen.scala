@@ -22,20 +22,12 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir) = args.take(2)
     val copies = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     // only stop the session on exit if this main OWNS it — under a test
     // harness getOrCreate returns the suite's shared session, and stopping
     // that would poison every later suite in the JVM
     val preExisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def tbl(n: String): DataFrame = spark.read.parquet(s"$inDir/$n.parquet")
     def off(n: String, key: String): Long =

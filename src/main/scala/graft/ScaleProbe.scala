@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-census probe (r10 verdict #3/#4): prices the operators whose sf10
@@ -23,16 +22,7 @@ object ScaleProbe {
     val sel = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def want(op: String): Boolean = sel.forall(_.contains(op))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val tag = new java.io.File(sfDir).getName
     def timed(op: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()

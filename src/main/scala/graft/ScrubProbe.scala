@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling main for the scrub-rebuild comparison (not part of the
@@ -11,15 +10,7 @@ import org.apache.spark.sql.functions._
   * the rebuild halves can be attributed separately from the shared half. */
 object ScrubProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("scrub-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val dir = args(0)
     val w = args.drop(1).headOption.map(_.toInt).getOrElse(20)
     def docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -9,16 +9,7 @@ object Verify {
     // re-verification of a single query (driver always passes exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter = args.drop(2).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val toRun = SparkEntry.queries
       .filter { case (name, _) => nameFilter.forall(name.contains) }

@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.io.Warc
 import graft.operators.SyntheticWarc
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiling main for WARC ingestion (not part of the driver
@@ -22,14 +21,7 @@ import org.apache.spark.sql.functions._
   * Usage: WarcProbe gen|read <dir> [nDocs] [nFiles] */
 object WarcProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("warc-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
     val mode = args(0)
     val dir = args(1)

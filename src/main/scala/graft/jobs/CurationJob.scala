@@ -288,28 +288,16 @@ object CurationJob {
                    afterHostCap: Option[Long] = None)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, args(0))
     finally spark.stop()
   }
 
   /** Returns per-stage row counts (None = output existed, S13 skip). */
   def run(spark: SparkSession, cfgPath: String): Option[Stats] = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    def str(f: String, d: String): String =
-      if (cfg.schema.fieldNames.contains(f) && !cfg.isNullAt(cfg.fieldIndex(f)))
-        cfg.get(cfg.fieldIndex(f)).toString else d
-    def strSeq(f: String): Seq[String] =
-      if (cfg.schema.fieldNames.contains(f) && !cfg.isNullAt(cfg.fieldIndex(f)))
-        cfg.getSeq[String](cfg.fieldIndex(f)) else Nil
-    val outPath = cfg.getAs[String]("output_path")
+    val cfg = JobConfig.read(spark, cfgPath)
+    import cfg.{str, strSeq}
+    val outPath = cfg.req("output_path")
     // S13 gate on the COMPLETION marker, not the dir: the job can write up
     // to four outputs (sink, bucketed table, shards, report) — a crash
     // between them used to leave a dir the existence gate treated as done,
@@ -329,7 +317,7 @@ object CurationJob {
     // — on a 2-file sf10 corpus they serialized onto 2 tasks (r10 review).
     // Downstream operator guards see this Repartition and skip (no double
     // shuffle).
-    val docsPath = cfg.getAs[String]("documents_path")
+    val docsPath = cfg.req("documents_path")
     val inputDf = str("input_format", "parquet") match {
       case "parquet" => spark.read.parquet(docsPath)
       case "jsonl" =>
@@ -416,16 +404,8 @@ object CurationJob {
                   // second pass over the lake) and selects the list per
                   // row; probe langs outside the map fall back to
                   // justext_stopwords (may be empty = legacy two-rule).
-                  val byLang: Map[String, Seq[String]] =
-                    if (cfg.schema.fieldNames
-                          .contains("justext_stopwords_by_lang") &&
-                        !cfg.isNullAt(cfg.fieldIndex(
-                          "justext_stopwords_by_lang"))) {
-                      val r = cfg.getStruct(cfg.fieldIndex(
-                        "justext_stopwords_by_lang"))
-                      r.schema.fieldNames.map(k =>
-                        k -> r.getSeq[String](r.fieldIndex(k))).toMap
-                    } else Map.empty
+                  val byLang =
+                    cfg.obj("justext_stopwords_by_lang")(_.strSeq(_))
                   require(sw.nonEmpty || byLang.nonEmpty,
                     "warc_html_extract=justext needs justext_stopwords " +
                       "(or justext_stopwords_by_lang)")
@@ -711,13 +691,8 @@ object CurationJob {
     // space-separated words per unit of content than an English one).
     // Still one fenced scan-stage predicate: the map folds into a CASE.
     val minWordsDefault = str("min_words", "20").toLong
-    val minWordsByLang: Map[String, Long] =
-      if (cfg.schema.fieldNames.contains("min_words_by_lang") &&
-          !cfg.isNullAt(cfg.fieldIndex("min_words_by_lang"))) {
-        val r = cfg.getStruct(cfg.fieldIndex("min_words_by_lang"))
-        r.schema.fieldNames.map(k =>
-          k -> r.get(r.fieldIndex(k)).toString.toDouble.toLong).toMap
-      } else Map.empty
+    val minWordsByLang =
+      cfg.obj("min_words_by_lang")(_.req(_).toDouble.toLong)
     val wordFloor: org.apache.spark.sql.Column =
       if (minWordsByLang.isEmpty) lit(minWordsDefault)
       else {
@@ -938,14 +913,11 @@ object CurationJob {
 
     // 4. optional deterministic mixture sampling
     val mixCol = str("mix_strata_col", "")
+    val fractions = cfg.obj("mix_fractions")(_.req(_).toDouble)
     val mixed =
-      if (mixCol.nonEmpty && cfg.schema.fieldNames.contains("mix_fractions") &&
-        !cfg.isNullAt(cfg.fieldIndex("mix_fractions"))) {
-        val fracRow = cfg.getStruct(cfg.fieldIndex("mix_fractions"))
-        val fractions = fracRow.schema.fieldNames.map(k =>
-          k -> fracRow.get(fracRow.fieldIndex(k)).toString.toDouble).toMap
+      if (mixCol.nonEmpty && fractions.nonEmpty)
         DataMix.stratifiedSample(scrubbed, idCol, mixCol, fractions)
-      } else scrubbed
+      else scrubbed
 
     // 4b. optional DSIR importance resample down to a document budget:
     // in-domain LM on the configured slice vs a base LM on the whole
@@ -1123,13 +1095,11 @@ object CurationJob {
       // bucket boundaries follow SORTED split names — a JSON object is
       // unordered, and the hash-range cut must be reproducible outside
       // this job (the q145 oracle discipline)
-      val splits: Seq[(String, Double)] =
-        if (cfg.schema.fieldNames.contains("training_splits") &&
-          !cfg.isNullAt(cfg.fieldIndex("training_splits"))) {
-          val row = cfg.getStruct(cfg.fieldIndex("training_splits"))
-          row.schema.fieldNames.toSeq.sorted.map(k =>
-            k -> row.get(row.fieldIndex(k)).toString.toDouble)
-        } else Seq("test" -> 0.05, "train" -> 0.9, "val" -> 0.05)
+      val splits: Seq[(String, Double)] = {
+        val m = cfg.obj("training_splits")(_.req(_).toDouble)
+        if (m.nonEmpty) m.toSeq.sorted
+        else Seq("test" -> 0.05, "train" -> 0.9, "val" -> 0.05)
+      }
       val qSplit = DataMix.assignSplitByComponent(
           queries.select(col("q_id").as(idCol)), idCol, dedupLabels, splits)
         .select(col(idCol).as("q_id"), col("split_key"), col("split"))
@@ -1251,13 +1221,7 @@ object CurationJob {
       require(budgetStr.nonEmpty,
         "mixture_plan_path needs mixture_budget_tokens")
       val budget = budgetStr.toLong
-      val weights: Map[String, Long] =
-        if (cfg.schema.fieldNames.contains("mixture_weights") &&
-          !cfg.isNullAt(cfg.fieldIndex("mixture_weights"))) {
-          val row = cfg.getStruct(cfg.fieldIndex("mixture_weights"))
-          row.schema.fieldNames.map(k =>
-            k -> row.get(row.fieldIndex(k)).toString.toLong).toMap
-        } else Map.empty
+      val weights = cfg.obj("mixture_weights")(_.req(_).toLong)
       val priced = curated.select(col(idCol), col(strataCol),
         size(graft.functions.TextFns.words(col(textCol)))
           .cast("long").as("n_tok"))

@@ -18,12 +18,7 @@ object DischargeInputJob {
     val (cfgPath, start, end) = RainfallInputJob.parseArgs(args)
     RainfallInputJob.validateWindowTs(start)
     RainfallInputJob.validateWindowTs(end)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try {
       val (ran, fgt) = run(spark, cfgPath, start, end)
       println(s"[discharge] ran=$ran latest_fgt=${fgt.getOrElse("none")}")
@@ -38,24 +33,24 @@ object DischargeInputJob {
     * `get_obs_end` of inputs/gen_mike_input_dis_linux.py:176). Database-native
     * column types are kept here — a cast above the scan would block aggregate
     * pushdown; `run` normalizes for the pipeline AFTER the probe. */
-  def readSeries(spark: SparkSession, cfg: org.apache.spark.sql.Row,
+  def readSeries(spark: SparkSession, cfg: JobConfig,
                  start: String, end: String): org.apache.spark.sql.DataFrame =
-    if (cfg.schema.fieldNames.contains("series_jdbc_url")) {
-      graft.io.JdbcScan.table(spark, cfg.getAs[String]("series_jdbc_url"),
-        cfg.getAs[String]("series_jdbc_table"))
-        .filter(col("time") >= to_timestamp(lit(start)) &&
-          col("time") <= to_timestamp(lit(end)))
-    } else {
-      spark.read.parquet(cfg.getAs[String]("series_path"))
-        .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
-          col("time") <= lit(end).cast("timestamp_ntz"))
+    cfg.opt("series_jdbc_url") match {
+      case Some(url) =>
+        graft.io.JdbcScan.table(spark, url, cfg.req("series_jdbc_table"))
+          .filter(col("time") >= to_timestamp(lit(start)) &&
+            col("time") <= to_timestamp(lit(end)))
+      case None =>
+        spark.read.parquet(cfg.req("series_path"))
+          .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
+            col("time") <= lit(end).cast("timestamp_ntz"))
     }
 
   /** Returns (whether the tick ran, latest_fgt = obs end of the raw series). */
   def run(spark: SparkSession, cfgPath: String, start: String,
           end: String): (Boolean, Option[java.time.LocalDateTime]) = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    val outputPath = cfg.getAs[String]("output_path")
+    val cfg = JobConfig.read(spark, cfgPath)
+    val outputPath = cfg.req("output_path")
     val series = readSeries(spark, cfg, start, end)
     // the reference derives the tick's fgt from the series' observation end, not
     // wall clock — re-runs over the same data are tagged identically (T4-friendly)

@@ -40,22 +40,12 @@ object ExtractToWarehouseJob {
     val gated = args.contains("--gated")
     val fgt = args.sliding(2, 1).collectFirst { case Array("-f", v) => v }
     if (!gated && fgt.isEmpty) sys.error("missing -f <fgt timestamp> (or --gated)")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try {
       if (gated) runGated(spark, cfgPath)
       else run(spark, cfgPath, fgt.get)
     } finally spark.stop()
   }
-
-  private def opt(cfg: org.apache.spark.sql.Row, field: String, default: String) =
-    if (cfg.schema.fieldNames.contains(field) && !cfg.isNullAt(cfg.fieldIndex(field)))
-      cfg.getString(cfg.fieldIndex(field))
-    else default
 
   /** Returns (facts upserted, unmatched station names).
     *
@@ -70,8 +60,8 @@ object ExtractToWarehouseJob {
     *  4. run bookkeeping: insert_run/update_start_date once per new series,
     *     update_latest_fgt every tick. */
   def run(spark: SparkSession, cfgPath: String, fgt: String): (Long, Seq[String]) = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    runWithCfg(spark, cfg, cfg.getAs[String]("results_csv"), fgt)
+    val cfg = JobConfig.read(spark, cfgPath)
+    runWithCfg(spark, cfg, cfg.req("results_csv"), fgt)
   }
 
   /** T3 gated mode (ref `outputs/extract_mike_data_to_db.sh:5-32`): one
@@ -81,16 +71,11 @@ object ExtractToWarehouseJob {
   def runGated(spark: SparkSession, cfgPath: String,
                nowMs: Long = System.currentTimeMillis(),
                todayOverride: Option[String] = None): Seq[(String, Long)] = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
+    val cfg = JobConfig.read(spark, cfgPath)
     val dirs = RunDirGate.freshRunDirs(
-      cfg.getAs[String]("outputs_root"),
-      resultFile = opt(cfg, "result_file", "resmike11_WL.csv"),
-      // JSON numbers arrive as Long, not String — go through Any
-      maxAgeMinutes =
-        if (cfg.schema.fieldNames.contains("max_age_minutes") &&
-          !cfg.isNullAt(cfg.fieldIndex("max_age_minutes")))
-          cfg.get(cfg.fieldIndex("max_age_minutes")).toString.toLong
-        else 40L,
+      cfg.req("outputs_root"),
+      resultFile = cfg.str("result_file", "resmike11_WL.csv"),
+      maxAgeMinutes = cfg.str("max_age_minutes", "40").toLong,
       nowMs = nowMs, todayOverride = todayOverride)
     dirs.map { rd =>
       System.err.println(s"[extract] gated run: ${rd.dir} fgt=${rd.fgt}")
@@ -99,13 +84,13 @@ object ExtractToWarehouseJob {
     }
   }
 
-  private def runWithCfg(spark: SparkSession, cfg: org.apache.spark.sql.Row,
+  private def runWithCfg(spark: SparkSession, cfg: JobConfig,
                          resultsCsv: String, fgt: String): (Long, Seq[String]) = {
-    val url = cfg.getAs[String]("jdbc_url")
-    val (simTag, model) = (cfg.getAs[String]("sim_tag"), cfg.getAs[String]("model"))
-    val (variable, unit) = (cfg.getAs[String]("variable"), cfg.getAs[String]("unit"))
+    val url = cfg.req("jdbc_url")
+    val (simTag, model) = (cfg.req("sim_tag"), cfg.req("model"))
+    val (variable, unit) = (cfg.req("variable"), cfg.req("unit"))
     val wide = MikeCsv.readWideCsv(spark, resultsCsv)
-    val csvDim = MikeCsv.readDimCsv(spark, cfg.getAs[String]("stations_csv"),
+    val csvDim = MikeCsv.readDimCsv(spark, cfg.req("stations_csv"),
       stationSchema)
     // dim get-or-create (S12/J7; ref outputs/extract_water_level.py:217-223)
     import graft.ops.TimeSeriesOps.seriesId
@@ -113,33 +98,34 @@ object ExtractToWarehouseJob {
     JdbcUpsert.getOrCreateDim(spark,
       Seq(model).toDF("model")
         .select(seriesId(lit("source"), col("model")).as("source_id"), col("model")),
-      url, opt(cfg, "source_table", "source_dim"), Seq("model"))
+      url, cfg.str("source_table", "source_dim"), Seq("model"))
     JdbcUpsert.getOrCreateDim(spark,
       Seq(variable).toDF("variable")
         .select(seriesId(lit("variable"), col("variable")).as("variable_id"), col("variable")),
-      url, opt(cfg, "variable_table", "variable_dim"), Seq("variable"))
+      url, cfg.str("variable_table", "variable_dim"), Seq("variable"))
     JdbcUpsert.getOrCreateDim(spark,
       Seq(unit).toDF("unit")
         .select(seriesId(lit("unit"), col("unit")).as("unit_id"), col("unit")),
-      url, opt(cfg, "unit_table", "unit_dim"), Seq("unit"))
+      url, cfg.str("unit_table", "unit_dim"), Seq("unit"))
     val dim = JdbcUpsert.getOrCreateDim(spark, csvDim,
-        url, opt(cfg, "station_table", "station_dim"), Seq("station_id"))
+        url, cfg.str("station_table", "station_dim"), Seq("station_id"))
       .select("station", "station_id", "latitude", "longitude")
-    val (facts0, unmatched) = MikeJobs.extractToWarehouse(wide, dim, fgt,
+    val (facts, unmatched) = MikeJobs.extractToWarehouse(wide, dim, fgt,
       simTag, model, variable, unit)
     // optional lake sink (100 TB path): fgt-partitioned versioned parquet deltas
     // alongside (or ahead of) the relational warehouse. Both sinks are actions,
-    // so the fact plan is persisted when it feeds two of them.
-    val lakeDir = opt(cfg, "lake_dir", "")
-    val facts = if (lakeDir.nonEmpty)
-      facts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else facts0
-    if (lakeDir.nonEmpty) VersionedFactStore.appendTick(facts, lakeDir)
-    val n = JdbcUpsert.upsert(facts, url,
-      cfg.getAs[String]("fact_table"), Seq("tms_id", "time", "fgt"))
+    // so the fact plan is persisted while it feeds two of them.
+    val lakeDir = cfg.str("lake_dir", "")
+    if (lakeDir.nonEmpty)
+      facts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = try {
+      if (lakeDir.nonEmpty) VersionedFactStore.appendTick(facts, lakeDir)
+      JdbcUpsert.upsert(facts, url,
+        cfg.req("fact_table"), Seq("tms_id", "time", "fgt"))
+    } finally if (lakeDir.nonEmpty) facts.unpersist()
     // T5 run bookkeeping (ref :90-97)
     JdbcUpsert.maintainRuns(spark, MikeJobs.runMeta(wide, dim, simTag, model,
-      variable, unit), url, opt(cfg, "run_table", "run"), fgt)
+      variable, unit), url, cfg.str("run_table", "run"), fgt)
     val missing = unmatched.collect().map(_.getString(0)).toSeq
     // ref behavior: log stations absent from the dim (extract_water_level.py:103-104)
     missing.foreach(m => System.err.println(s"[extract] station not in dim: $m"))

@@ -78,41 +78,16 @@ object MediaCurationJob {
                          survivors: Long)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, args(0))
     finally spark.stop()
   }
 
   /** Returns per-stage row counts (None = output existed, S13 skip). */
   def run(spark: SparkSession, cfgPath: String): Option[Stats] = {
-    // the config is a one-object JSON file: parse it driver-side (Jackson,
-    // via the Hadoop FS so non-local paths keep working) instead of a
-    // spark.read.json — the inference+first() pair cost two Spark jobs per
-    // tick, pure scheduling latency in a multi-tick driver (r18, guide §5)
-    val cfgP = new org.apache.hadoop.fs.Path(cfgPath)
-    val cfgTxt = {
-      val fs = cfgP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(cfgP)
-      try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    }
-    val cfg = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(cfgTxt)
-    def str(f: String, d: => String): String = {
-      val n = cfg.get(f)
-      if (n == null || n.isNull) d
-      else if (n.isIntegralNumber) n.asLong.toString
-      else n.asText
-    }
-    val outPath = str("output_path", sys.error("output_path required"))
+    val cfg = JobConfig.read(spark, cfgPath)
+    import cfg.str
+    val outPath = cfg.req("output_path")
     // S13 gate on the COMPLETION marker, not the dir: the job writes two
     // outputs (media, sigs) — a crash between them leaves a dir that a
     // dir-existence gate would treat as done, silently skipping a store-less
@@ -165,8 +140,7 @@ object MediaCurationJob {
       stageTimes += stage -> (now - tLast) / 1e9
       tLast = now
     }
-    val mediaRaw = spark.read.parquet(
-      str("media_path", sys.error("media_path required")))
+    val mediaRaw = spark.read.parquet(cfg.req("media_path"))
     val total = mediaRaw.count()
     lap("read+count")
 

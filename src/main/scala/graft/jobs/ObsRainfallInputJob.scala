@@ -1,7 +1,6 @@
 package graft.jobs
 
 import java.time.LocalDateTime
-import java.time.format.DateTimeFormatter
 
 import graft.io.MikeCsv
 import org.apache.spark.sql.SparkSession
@@ -35,19 +34,12 @@ object ObsRainfallInputJob {
     StructField("latitude", DoubleType, nullable = false),
     StructField("longitude", DoubleType, nullable = false)))
 
-  private val Fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-
   /** ref :85-96: window timestamps must be exact hours. */
   def validateHourTs(ts: String): Unit = {
     val t = LocalDateTime.parse(ts.replace(' ', 'T'))
     require(t.getSecond == 0, s"Seconds should be always 00: $ts")
     require(t.getMinute == 0, s"Minutes should be always 00: $ts")
   }
-
-  /** ref :240-247: default window = [today-3d 00:00, today+2d 00:00]. */
-  def defaultWindow(now: LocalDateTime): (String, String) = (
-    now.minusDays(3).toLocalDate.atStartOfDay.format(Fmt),
-    now.plusDays(2).toLocalDate.atStartOfDay.format(Fmt))
 
   /** ref :261: `'mike_rf_obs_{start}_{end}_{step}.txt'` with " "->"_", ":"->"-". */
   def defaultFileName(start: String, end: String, step: Int): String =
@@ -60,18 +52,12 @@ object ObsRainfallInputJob {
 
   def main(args: Array[String]): Unit = {
     val (cfgPath, sOpt, eOpt, step) = parseArgs(args)
-    val (defS, defE) = defaultWindow(LocalDateTime.now())
+    // ref :240-247: the same day-aligned horizon as the cron entry's
+    val (defS, defE) = PrepMikeInputsJob.defaultWindow(LocalDateTime.now())
     val (start, end) = (sOpt.getOrElse(defS), eOpt.getOrElse(defE))
     sOpt.foreach(validateHourTs)
     eOpt.foreach(validateHourTs)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, cfgPath, start, end, step)
     finally spark.stop()
   }
@@ -80,17 +66,13 @@ object ObsRainfallInputJob {
   def run(spark: SparkSession, cfgPath: String, start: String, end: String,
           step: Int): Boolean = {
     require(step % 5 == 0, "Time step should be a multiple of 5.")
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    def opt(f: String): Option[String] =
-      if (cfg.schema.fieldNames.contains(f) && !cfg.isNullAt(cfg.fieldIndex(f)) &&
-        cfg.getString(cfg.fieldIndex(f)).nonEmpty)
-        Some(cfg.getString(cfg.fieldIndex(f)))
-      else None
+    val cfg = JobConfig.read(spark, cfgPath)
+    def opt(f: String): Option[String] = cfg.opt(f).filter(_.nonEmpty)
     val outPath = opt("output_dir").getOrElse(".") + "/" +
       opt("output_file_name").getOrElse(defaultFileName(start, end, step))
     Maintenance.runIdempotent(outPath) {
       val stations = MikeCsv.readDimCsv(spark,
-        cfg.getAs[String]("stations_csv"), stationSchema)
+        cfg.req("stations_csv"), stationSchema)
       // column order = stations-CSV row order, like the reference's insertion-
       // ordered station_dict merge loop (dim-scale collect). limit(n+1)-guarded
       // like the other driver-side scalars: a mis-pointed config (series file
@@ -103,7 +85,7 @@ object ObsRainfallInputJob {
         rows.map(_.getString(0)).toSeq
       }
       // readings contributing to right-closed buckets labeled in [start, end]
-      val series = spark.read.parquet(cfg.getAs[String]("series_path"))
+      val series = spark.read.parquet(cfg.req("series_path"))
         .filter(col("time") > lit(start).cast("timestamp_ntz") -
           expr(s"interval $step minutes") &&
           col("time") <= lit(end).cast("timestamp_ntz"))

@@ -36,14 +36,7 @@ object PrepMikeInputsJob {
     val m = args.drop(1).sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
     val (ds, de) = defaultWindow(LocalDateTime.now())
     val (start, end) = (m.getOrElse("-s", ds), m.getOrElse("-e", de))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try {
       run(spark, cfgPath, start, end).foreach { case (step, ok, err) =>
         println(s"[prep] $step ok=$ok${err.fold("")(e => s" error=$e")}")
@@ -55,18 +48,14 @@ object PrepMikeInputsJob {
     * failure never stops the remaining steps (reference behavior). */
   def run(spark: SparkSession, cfgPath: String, start: String,
           end: String): Seq[(String, Boolean, Option[String])] = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    def path(field: String): Option[String] =
-      if (cfg.schema.fieldNames.contains(field) && !cfg.isNullAt(cfg.fieldIndex(field)))
-        Some(cfg.getString(cfg.fieldIndex(field)))
-      else None
+    val cfg = JobConfig.read(spark, cfgPath)
     val steps: Seq[(String, String => Unit)] = Seq(
       "rainfall" -> ((p: String) => RainfallInputJob.run(spark, p, start, end): Unit),
       "discharge" -> ((p: String) => DischargeInputJob.run(spark, p, start, end): Unit),
       "tide" -> ((p: String) => TideInputJob.run(spark, p, start, end): Unit),
       "raw_rainfall" -> ((p: String) => RawRainfallInputJob.run(spark, p, start, end): Unit))
     steps.flatMap { case (name, f) =>
-      path(s"${name}_config").map { p =>
+      cfg.opt(s"${name}_config").map { p =>
         Try(f(p)) match {
           case Success(_) => (name, true, None)
           case Failure(e) =>

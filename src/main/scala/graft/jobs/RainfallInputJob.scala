@@ -45,23 +45,16 @@ object RainfallInputJob {
   def main(args: Array[String]): Unit = {
     val (cfgPath, start, end) = parseArgs(args)
     validateWindowTs(start); validateWindowTs(end)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, cfgPath, start, end)
     finally spark.stop()
   }
 
   def run(spark: SparkSession, cfgPath: String, start: String, end: String): Boolean = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    val seriesPath = cfg.getAs[String]("series_path")
-    val coeffsCsv = cfg.getAs[String]("coefficients_csv")
-    val outputPath = cfg.getAs[String]("output_path")
+    val cfg = JobConfig.read(spark, cfgPath)
+    val seriesPath = cfg.req("series_path")
+    val coeffsCsv = cfg.req("coefficients_csv")
+    val outputPath = cfg.req("output_path")
     // S13: skip the tick if the artifact already exists
     Maintenance.runIdempotent(outputPath) {
       val series = spark.read.parquet(seriesPath)

@@ -30,31 +30,24 @@ object RawRainfallInputJob {
     val (cfgPath, start, end) = RainfallInputJob.parseArgs(args)
     RainfallInputJob.validateWindowTs(start)
     RainfallInputJob.validateWindowTs(end)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, cfgPath, start, end)
     finally spark.stop()
   }
 
   def run(spark: SparkSession, cfgPath: String, start: String, end: String): Boolean = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    val outputPath = cfg.getAs[String]("output_path")
+    val cfg = JobConfig.read(spark, cfgPath)
+    val outputPath = cfg.req("output_path")
     // S5 active-stations gate (re-expressed): only stations with at least one
     // observation inside [start, end] participate — the stored-proc's
     // "stations with data in range" semantics
     // (ref: inputs/gen_mike_input_rf_linux_all_stations_raw.py:141-147)
     Maintenance.runIdempotent(outputPath) {
-      val series = spark.read.parquet(cfg.getAs[String]("series_path"))
+      val series = spark.read.parquet(cfg.req("series_path"))
         .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
           col("time") <= lit(end).cast("timestamp_ntz"))
       val stations = MikeCsv.readDimCsv(spark,
-        cfg.getAs[String]("stations_csv"), stationSchema)
+        cfg.req("stations_csv"), stationSchema)
       val active = stations.join(
         series.select(col("obs_id")).distinct(), Seq("obs_id"), "left_semi")
       val wide = MikeJobs.rawRainfallInput(spark, series, active, start, end)

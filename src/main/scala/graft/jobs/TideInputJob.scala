@@ -16,21 +16,16 @@ object TideInputJob {
     val (cfgPath, start, end) = RainfallInputJob.parseArgs(args)
     RainfallInputJob.validateWindowTs(start)
     RainfallInputJob.validateWindowTs(end)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, cfgPath, start, end)
     finally spark.stop()
   }
 
   def run(spark: SparkSession, cfgPath: String, start: String, end: String): Boolean = {
-    val cfg = spark.read.option("multiLine", true).json(cfgPath).first()
-    val outputPath = cfg.getAs[String]("output_path")
+    val cfg = JobConfig.read(spark, cfgPath)
+    val outputPath = cfg.req("output_path")
     Maintenance.runIdempotent(outputPath) {
-      val series = spark.read.parquet(cfg.getAs[String]("series_path"))
+      val series = spark.read.parquet(cfg.req("series_path"))
       val out = MikeJobs.tideInput(spark, series, start, end)
       MikeCsv.writeHeaderlessSeries(out, outputPath)
     }

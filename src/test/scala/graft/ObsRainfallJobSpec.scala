@@ -54,7 +54,7 @@ class ObsRainfallJobSpec extends SparkSpec {
   }
 
   test("CLI surface: defaults, file-name mangling, validators") {
-    val (s, e) = ObsRainfallInputJob.defaultWindow(
+    val (s, e) = graft.jobs.PrepMikeInputsJob.defaultWindow(
       java.time.LocalDateTime.parse("2026-08-12T10:30:00"))
     assert(s == "2026-08-09 00:00:00" && e == "2026-08-14 00:00:00")
     assert(ObsRainfallInputJob.defaultFileName(s, e, 15) ==

@@ -44,9 +44,12 @@ class WarehouseJobSpec extends SparkSpec {
          | "jdbc_url": "$url", "fact_table": "facts", "run_table": "runs",
          | "lake_dir": "$dir/lake", "sim_tag": "evening_18:00",
          | "model": "mike11_2016", "variable": "WaterLevel", "unit": "m"}""".stripMargin)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val (n1, missing1) = ExtractToWarehouseJob.run(spark, s"$dir/cfg.json",
       "2024-01-01 01:00:00")
     assert(n1 == 2 && missing1 == Seq("Ghost Station"))
+    // the fact frame cached for the two sinks is released once both ran
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore).isEmpty)
     // dims were get-or-created from config + CSV
     assert(readTable(url, "source_dim").count() == 1)
     assert(readTable(url, "variable_dim").count() == 1)
@@ -130,7 +133,7 @@ class WarehouseJobSpec extends SparkSpec {
          | "output_path": "$dir/out"}""".stripMargin)
     // the job's ACTUAL probe composition (readSeries -> obsEndFrame): the MAX
     // must compile into the database, not run client-side over the table
-    val cfg = spark.read.option("multiLine", true).json(s"$dir/cfg.json").first()
+    val cfg = graft.jobs.JobConfig.read(spark, s"$dir/cfg.json")
     val probe = graft.jobs.MikeJobs.obsEndFrame(
       graft.jobs.DischargeInputJob.readSeries(spark, cfg,
         "2024-01-01 00:00:00", "2024-01-01 00:45:00"))
