@@ -991,7 +991,7 @@ object SparkEntry {
       .orderBy(col("doc_id"))
 
   /** Duplicate-cluster resolution: near-dup pairs (q23's exact Jaccard set) ->
-    * connected components (unified entry, auto strategy) -> min-id cluster
+    * connected components (unified entry) -> min-id cluster
     * labels, the "keep one survivor per cluster" step after pairwise dedup. */
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame =
     Dedup.components(

@@ -45,9 +45,12 @@ object PrepMikeInputsJob {
   }
 
   /** Runs every configured generator; returns (step, succeeded, error). A step
-    * failure never stops the remaining steps (reference behavior). */
+    * failure never stops the remaining steps (reference behavior). A window
+    * off the 15-minute grid (P9) throws before any step runs. */
   def run(spark: SparkSession, cfgPath: String, start: String,
           end: String): Seq[(String, Boolean, Option[String])] = {
+    RainfallInputJob.validateWindowTs(start)
+    RainfallInputJob.validateWindowTs(end)
     val cfg = JobConfig.read(spark, cfgPath)
     val steps: Seq[(String, String => Unit)] = Seq(
       "rainfall" -> ((p: String) => RainfallInputJob.run(spark, p, start, end): Unit),

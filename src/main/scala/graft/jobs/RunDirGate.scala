@@ -1,9 +1,10 @@
 package graft.jobs
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.FileNotFoundException
 import java.time.{Duration, Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -56,38 +57,42 @@ object RunDirGate {
     * the gate is testable against a fixture tree (and so callers replaying
     * history can pin the reference wall-clock). Directories without the result
     * file are skipped — same outcome as the reference, where the unset mtime
-    * makes the age test fail. */
+    * makes the age test fail.
+    *
+    * The root, its listing and the CSV mtimes resolve through the Hadoop
+    * `FileSystem` of `Maintenance.sessionConf()`, as `Maintenance`'s gates
+    * do, so a `file:`, `hdfs://` or `s3a://` root is walked like a local one.
+    * A scheme-less root reports scheme-less paths, as the local walk did. */
   def freshRunDirs(outputsRoot: String,
                    resultFile: String = "resmike11_WL.csv",
                    maxAgeMinutes: Long = 40L,
                    nowMs: Long = System.currentTimeMillis(),
                    todayOverride: Option[String] = None,
                    utcOffsetMinutes: Int = 330): Seq[RunDir] = {
-    val root = Paths.get(outputsRoot)
-    if (!Files.isDirectory(root)) return Seq.empty
+    val root = new Path(outputsRoot)
+    val fs = root.getFileSystem(Maintenance.sessionConf())
+    def status(p: Path): Option[FileStatus] =
+      try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
+    // the walk includes the root itself, as `Files.walk` does
+    def walk(d: FileStatus): Seq[FileStatus] =
+      d +: fs.listStatus(d.getPath).toSeq.filter(_.isDirectory).flatMap(walk)
+    def shown(p: Path): String =
+      if (root.toUri.getScheme == null) Path.getPathWithoutSchemeAndAuthority(p).toString
+      else p.toString
     val day = todayOverride.getOrElse(today(nowMs, utcOffsetMinutes))
-    val stream = Files.walk(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(day))
-        .flatMap { dir =>
-          val csv = dir.resolve(resultFile)
-          for {
-            mtime <- mtimeSec(csv)
-            // shell integer-minute arithmetic: (CURRENT - FILE_MODIFIED_TIME)/60
-            if (nowMs / 1000L - mtime) / 60L < maxAgeMinutes
-            fgt <- fgtFromDirname(dir.getFileName.toString)
-          } yield RunDir(dir.toString, csv.toString, fgt)
-        }
-        .toSeq.sortBy(_.dir)
-    } finally stream.close()
+    status(root).filter(_.isDirectory).toSeq.flatMap(walk)
+      .filter(_.getPath.getName.startsWith(day))
+      .flatMap { dir =>
+        val csv = new Path(dir.getPath, resultFile)
+        for {
+          st <- status(csv) if st.isFile
+          // shell integer-minute arithmetic: (CURRENT - FILE_MODIFIED_TIME)/60
+          if (nowMs / 1000L - st.getModificationTime / 1000L) / 60L < maxAgeMinutes
+          fgt <- fgtFromDirname(dir.getPath.getName)
+        } yield RunDir(shown(dir.getPath), shown(csv), fgt)
+      }
+      .sortBy(_.dir)
   }
-
-  private def mtimeSec(p: Path): Option[Long] =
-    if (Files.isRegularFile(p)) Some(Files.getLastModifiedTime(p).toMillis / 1000L)
-    else None
 
   /** Data-sized analog of the dirname parse for multi-directory scans: derive
     * each row's fgt from `input_file_name()` with one codegen'd

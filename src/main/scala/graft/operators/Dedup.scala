@@ -851,11 +851,10 @@ object Dedup {
   def admitBatchIntoComponents(labels: DataFrame, corpus: DataFrame,
                                incoming: DataFrame, idCol: String,
                                textCol: String, n: Int, threshold: Double,
-                               blockCols: Seq[String],
-                               strategy: String = "auto"): DataFrame = {
+                               blockCols: Seq[String]): DataFrame = {
     val (pairs, free) = admissionPairsManaged(corpus, incoming, idCol, textCol,
       n, threshold, blockCols, viaCheckpoint = false)
-    admitIntoComponentsManaged(labels, pairs, "id_a", "id_b", strategy, free)
+    admitIntoComponentsManaged(labels, pairs, "id_a", "id_b", free)
   }
 
   /** Exact-substring near-dup signal: document pairs sharing at least one
@@ -948,10 +947,10 @@ object Dedup {
   }
 
   /** Duplicate-window-INSTANCE positions per document — the first-occurrence
-    * rule both scrub routes (and the `ScrubProbe` decomposition) share: a
-    * window instance is a duplicate iff its content's corpus-global first
-    * occurrence (min (id, pos) struct) is not itself. Single-sourced so a
-    * tie-break change cannot drift the routes apart. Returns (id, __pos). */
+    * rule both scrub routes share: a window instance is a duplicate iff its
+    * content's corpus-global first occurrence (min (id, pos) struct) is not
+    * itself. Single-sourced so a tie-break change cannot drift the routes
+    * apart. Returns (id, __pos). */
   private def dupWindowPositions(d: DataFrame, idCol: String, textCol: String,
                                  windowTokens: Int): DataFrame = {
     val wins = d.select(col(idCol),
@@ -1515,7 +1514,7 @@ object Dedup {
   }
 
   /** `connectedComponents` with convergence threaded through the RETURN value
-    * — the form `components("auto")` branches on. Control flow never reads the
+    * — the form `components` branches on. Control flow never reads the
     * shared `lastConverged` var, so concurrent CC runs in one JVM cannot
     * interleave each other's escape decisions; the vars stay write-only test
     * observability. */
@@ -1576,8 +1575,6 @@ object Dedup {
       labels = next.select(col("id"), col("comp"))
       converged = changed == 0L
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $i changed=$changed")
     }
     edges.unpersist()
     p.unpersist()
@@ -1589,40 +1586,32 @@ object Dedup {
   @volatile private[graft] var lastRounds: Int = 0
 
   /** Whether the last CC call reached its fixpoint inside the round budget —
-    * TEST OBSERVABILITY ONLY: `components("auto")`'s escape branches on its
+    * TEST OBSERVABILITY ONLY: `components`' escape branches on its
     * own run's return value (`ccPropagate`), never on this shared var. */
   @volatile private[graft] var lastConverged: Boolean = true
 
   /** Unified cluster-resolution entry point — the one the composites call.
     *
-    * Strategies:
-    *  - `"auto"` (default): min-label propagation with its pointer jump — the
-    *    low-shuffle path that real near-dup graphs (short diameter: pairs,
-    *    stars, small blobs) converge on in 1–3 rounds — ESCAPING to the
-    *    large/small-star algorithm when the round budget is exhausted without
-    *    a fixpoint: the partially-collapsed labels contract the graph (each
-    *    original edge is rewritten to its endpoints' current labels), star
-    *    finishes the tiny quotient graph under its O(log² n) any-topology
-    *    bound, and the final label composes the two. Callers no longer choose
-    *    blind: common graphs never pay star's extra per-round shuffle,
-    *    adversarial chains can no longer exhaust propagation.
-    *  - `"propagate"` / `"star"`: force one variant (benchmarks, specs).
+    * Graphs under the edge budget label driver-locally (union-find); larger
+    * ones run min-label propagation with its pointer jump — the low-shuffle
+    * path that real near-dup graphs (short diameter: pairs, stars, small
+    * blobs) converge on in 1–3 rounds — ESCAPING to the large/small-star
+    * algorithm when `propagateRounds` is exhausted without a fixpoint: the
+    * partially-collapsed labels contract the graph (each original edge is
+    * rewritten to its endpoints' current labels), star finishes the tiny
+    * quotient graph under its O(log² n) any-topology bound, and the final
+    * label composes the two. Common graphs never pay star's extra per-round
+    * shuffle, adversarial chains can no longer exhaust propagation.
+    * `connectedComponents` / `connectedComponentsStar` stay public as the
+    * single-variant references the specs compare against.
     *
     * Same output contract as both variants: (id, component = min id of the
     * transitive cluster) for every id appearing in `pairs`. */
   def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                 strategy: String = "auto",
-                 propagateRounds: Int = 8): DataFrame = strategy match {
-    case "propagate" => connectedComponents(pairs, idA, idB)
-    case "star" => connectedComponentsStar(pairs, idA, idB)
-    case "auto" =>
-      componentsLocalIfSmall(pairs, idA, idB).getOrElse {
-        componentsAutoDistributed(pairs, idA, idB, propagateRounds)
-      }
-    case other =>
-      throw new IllegalArgumentException(
-        s"unknown CC strategy '$other' (auto|propagate|star)")
-  }
+                 propagateRounds: Int = 8): DataFrame =
+    componentsLocalIfSmall(pairs, idA, idB).getOrElse {
+      componentsAutoDistributed(pairs, idA, idB, propagateRounds)
+    }
 
   /** Edge-count budget for the driver-local CC fast path (r18): below it the
     * whole pair set collects and a union-find labels it in-process — ONE
@@ -1708,7 +1697,7 @@ object Dedup {
           nullable = false)))))
   }
 
-  /** The pre-r18 "auto" body: min-label propagation escaping to star on a
+  /** The distributed route: min-label propagation escaping to star on a
     * pathological topology. */
   private def componentsAutoDistributed(pairs: DataFrame, idA: String,
                                         idB: String,
@@ -1828,8 +1817,6 @@ object Dedup {
       cnt = nextCnt
       converged = !changed
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-star] round $i edges=$cnt changed=$changed")
     }
     // converged star: every child has exactly one (child, root) edge; roots
     // (and any node never demoted to child) label themselves
@@ -2167,7 +2154,7 @@ object Dedup {
     * rows never paired survive untouched (left-anti against the non-canonical
     * cluster members).
     *
-    * `components` is EAGER (every strategy's convergence loop runs an action
+    * `components` is EAGER (every CC route's convergence loop runs an action
     * per round) and its labels are checkpoint-truncated, so by the time it
     * returns, the pair subtree — including any operator-internal persisted
     * prep frames — has been fully consumed: `freeUpstream` unpersists those
@@ -2216,9 +2203,8 @@ object Dedup {
     * Same cache contract as the composites: the returned frame pins only
     * checkpoint blocks; `Dedup.release(result)` after the final action. */
   def admitIntoComponents(labels: DataFrame, newPairs: DataFrame,
-                          idA: String = "id_a", idB: String = "id_b",
-                          strategy: String = "auto"): DataFrame =
-    admitIntoComponentsManaged(labels, newPairs, idA, idB, strategy, () => ())
+                          idA: String = "id_a", idB: String = "id_b"): DataFrame =
+    admitIntoComponentsManaged(labels, newPairs, idA, idB, () => ())
 
   /** `admitIntoComponents` with the composites' upstream-release hook:
     * `freeUpstream` runs once the eager quotient CC has fully consumed
@@ -2226,7 +2212,6 @@ object Dedup {
     * be freed without orphaning the lazy result. */
   private def admitIntoComponentsManaged(labels: DataFrame, newPairs: DataFrame,
                                          idA: String, idB: String,
-                                         strategy: String,
                                          freeUpstream: () => Unit): DataFrame = {
     val lab = labels.select(col("id"), col("component"))
     // the edge frame is typically the output of a whole near-dup pipeline
@@ -2255,7 +2240,7 @@ object Dedup {
       .filter(col("id_a") =!= col("id_b"))
     // quotient nodes are real ids (roots are minima, unlabeled ids are
     // themselves), so quotient labels ARE final labels for their nodes
-    val q = components(contracted, "id_a", "id_b", strategy)
+    val q = components(contracted, "id_a", "id_b")
     // roots that already have rows in `labels` (every touched root has its
     // self-row by the CC contract) — checkpointed so unpersisting `touched`
     // below cannot orphan the lazy result
@@ -2312,8 +2297,7 @@ object Dedup {
     * after the final action. */
   def forgetFromComponents(labels: DataFrame, pairs: DataFrame,
                            deleted: DataFrame,
-                           idA: String = "id_a", idB: String = "id_b",
-                           strategy: String = "auto"): DataFrame = {
+                           idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     val lab = labels.select(col("id"), col("component"))
     val del = deleted.select(col(deleted.columns.head).as("id")).distinct()
       .localCheckpoint(eager = true)
@@ -2338,7 +2322,7 @@ object Dedup {
         "left_anti")
       .join(broadcast(del.select(col("id").as("id_b"))), Seq("id_b"),
         "left_anti")
-    val recc = components(sub, "id_a", "id_b", strategy)
+    val recc = components(sub, "id_a", "id_b")
     // untouched clusters keep their labels verbatim (second streamed pass)
     lab.join(broadcast(affectedRoots), Seq("component"), "left_anti")
       .select(col("id"), col("component"))

@@ -125,10 +125,10 @@ class DedupSpec extends SparkSpec {
     // second-moment probe must AUTO-detect the regime (mean df is ~1 here —
     // a mean-based probe provably misses it); its cost ratio grows linearly
     // in n (~20 at n=3000, ~135 at n=20000 where the default dial of 64
-    // trips — the FloodProbe receipt), so the spec pins the trip mechanism
-    // at an explicit low dial to stay fast.
+    // trips, measured at that n), so the spec pins the trip mechanism at an
+    // explicit low dial to stay fast.
     val flood = spark.range(3000).as[Long]
-      .map(d => (d, WarcProbe.docText(d))).toDF("doc_id", "text")
+      .map(d => (d, DedupSpec.docText(d))).toDF("doc_id", "text")
     withDial("8") {
       val cand = Dedup.ngramPrefixCandidates(flood, "doc_id", "text", 3, 0.8, Nil)
       assert(cand.count() < 100000) // hash order emits 2.69M at this n
@@ -488,13 +488,11 @@ class DedupSpec extends SparkSpec {
       val viaAuto = Dedup.components(pairs).as[(Long, Long)].collect().toMap
       assert(Dedup.lastConverged && Dedup.lastRounds <= 3)
       assert(viaAuto == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
-      // explicit strategies dispatch; unknown strategy refuses
-      assert(Dedup.components(pairs, strategy = "star")
+      // both single-variant references agree
+      assert(Dedup.connectedComponentsStar(pairs)
         .as[(Long, Long)].collect().toMap == viaAuto)
-      assert(Dedup.components(pairs, strategy = "propagate")
+      assert(Dedup.connectedComponents(pairs)
         .as[(Long, Long)].collect().toMap == viaAuto)
-      assertThrows[IllegalArgumentException](
-        Dedup.components(pairs, strategy = "bogus"))
     } finally spark.conf.unset(Dedup.MaxLocalEdgesKey)
   }
 
@@ -512,10 +510,10 @@ class DedupSpec extends SparkSpec {
       val pairs = edges.toDF("id_a", "id_b")
       val local = Dedup.components(pairs) // under the 2M default: local
       assert(Dedup.lastRounds == 0 && Dedup.lastConverged)
-      val want = Dedup.components(pairs, strategy = "propagate")
+      val want = Dedup.connectedComponents(pairs)
         .as[(Long, Long)].collect().toMap
       assert(local.as[(Long, Long)].collect().toMap == want)
-      assert(Dedup.components(pairs, strategy = "star")
+      assert(Dedup.connectedComponentsStar(pairs)
         .as[(Long, Long)].collect().toMap == want)
       // forced over-budget: auto falls through to the distributed loop
       spark.conf.set(Dedup.MaxLocalEdgesKey, "1")
@@ -1291,5 +1289,24 @@ class DedupSpec extends SparkSpec {
       lshPlanes = 6, lshBands = 8)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(found == Set((9001L, 9002L)))
+  }
+}
+
+object DedupSpec {
+  /** ~1 KB deterministic pseudo-paragraph (UTF-8 ASCII) for doc `d`: 14 stems
+    * plus one doc-unique token — the low-diversity flood corpus. */
+  private def docText(d: Long): String = {
+    val words = Array("the", "quick", "corpus", "stream", "record", "capture",
+      "parse", "filter", "sample", "token", "layer", "model", "batch", "scale")
+    val sb = new java.lang.StringBuilder(1100)
+    var s = d * 2654435761L + 12345L
+    var i = 0
+    while (sb.length < 1000) {
+      s = s * 6364136223846793005L + 1442695040888963407L
+      sb.append(words(((s >>> 33) % words.length).toInt)).append(' ')
+      i += 1
+      if (i % 12 == 0) sb.append("doc").append(d).append(". ")
+    }
+    sb.toString
   }
 }

@@ -487,6 +487,46 @@ class MultimodalSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L, 0), (1L, 3L, editDist), (2L, 3L, editDist)))
   }
 
+  test("planted image near-dup groups: pair count equals the planted formula") {
+    // each group renders one random 9x8 cell-block pattern (the dHash grid's
+    // own geometry); every copy perturbs 40 scattered bytes by < 8, so cell
+    // means move < 1 luma step. Ids ending in 99 are undecodable junk.
+    def lcg(seed0: Long): () => Int = {
+      var s = seed0 * 6364136223846793005L + 1442695040888963407L
+      () => { s = s * 6364136223846793005L + 1442695040888963407L
+              ((s >>> 33) & 0x7fffffff).toInt }
+    }
+    def ppm(groupSeed: Long, copySeed: Long): Array[Byte] = {
+      val w = 48; val h = 48
+      val g = lcg(groupSeed)
+      val cells = Array.fill(9 * 8)(g() % 256)
+      val pix = Array.tabulate[Byte](w * h * 3) { i =>
+        val px = i / 3
+        cells((px / w) * 8 / h * 9 + (px % w) * 9 / w).toByte
+      }
+      val c = lcg(copySeed)
+      for (_ <- 0 until 40) {
+        val at = c() % pix.length
+        pix(at) = ((pix(at) & 0xff) ^ (c() % 8)).toByte
+      }
+      s"P6\n$w $h\n255\n".getBytes("US-ASCII") ++ pix
+    }
+    val (n, dup) = (200L, 5L)
+    val rows = (0L until n).map { id =>
+      Row(id, "image",
+        if (id % 100 == 99) Array[Byte](9, 9, 9) else ppm(id / dup + 1, id + 1),
+        null)
+    }
+    val lake = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows), Multimodal.mediaSchema)
+    val pairs = Multimodal.imageNearDupPairs(lake,
+        Multimodal.anyImagePhashHasher(), maxHamming = 4, maxBucket = 4096)
+      .select($"id_a", $"id_b").as[(Long, Long)].collect()
+    assert(pairs.forall { case (a, b) => a / dup == b / dup })
+    // C(5,2) per intact group, C(4,2) for the two groups that hold junk
+    assert(pairs.length == 38 * 10 + 2 * 6)
+  }
+
   test("y4m video: real luma decode, chroma-blind frame hashes, clip near-dup " +
        "by shared distinct frame signatures") {
     import graft.operators.{PnmCodec, Y4mCodec}

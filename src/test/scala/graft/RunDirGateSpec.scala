@@ -53,6 +53,20 @@ class RunDirGateSpec extends SparkSpec {
       todayOverride = Some(today)).isEmpty)
   }
 
+  test("freshRunDirs walks a file: URI root like the plain path") {
+    val root = fixtureTree()
+    val plain = RunDirGate.freshRunDirs(root.toString, nowMs = nowMs,
+      todayOverride = Some(today))
+    val uri = RunDirGate.freshRunDirs(root.toUri.toString, nowMs = nowMs,
+      todayOverride = Some(today))
+    assert(uri.map(_.dir.split('/').last) ==
+      Seq(s"${today}_06-00-00", s"${today}_09-15-30_rerun"))
+    assert(uri.map(_.fgt) == plain.map(_.fgt))
+    assert(uri.forall(_.resultCsv.startsWith("file:")))
+    // a scheme-less root keeps reporting scheme-less paths
+    assert(plain.forall(_.dir.startsWith(root.toString)))
+  }
+
   test("today follows the reference's UTC+5:30 calendar") {
     // 2023-11-14T22:13:20Z -> 2023-11-15 in UTC+5:30
     assert(RunDirGate.today(nowMs) == "2023-11-15")

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps two invariants from drifting back: `GraftSession` is the only place
-  * that builds a SparkSession, and no CLI job reads its config through Spark
-  * (`JobConfig` parses it on the driver). */
+/** Keeps four invariants from drifting back: `GraftSession` is the only place
+  * that builds a SparkSession, no CLI job reads its config through Spark
+  * (`JobConfig` parses it on the driver), the only mains are the CLI jobs and
+  * three tools, and no env var is read outside `GraftSession` and `Bench`. */
 class SessionConfigGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -35,5 +36,19 @@ class SessionConfigGuardSpec extends AnyFunSuite {
   test("no CLI job reads its config with a Spark JSON read") {
     val offenders = hits(main.resolve("graft/jobs"), "option(\"multiLine\"")
     assert(offenders.isEmpty, s"read job configs through JobConfig: $offenders")
+  }
+
+  test("mains live only in jobs/ and the Bench, Verify and ScaleGen tools") {
+    val tools = Seq("Bench", "Verify", "ScaleGen").map(t => s"graft/$t.scala:")
+    val offenders = hits(main, "def main(").filterNot(h =>
+      h.startsWith("graft/jobs/") || tools.exists(h.startsWith))
+    assert(offenders.isEmpty, s"no dev mains in src/main: $offenders")
+  }
+
+  test("environment variables are read only by GraftSession and Bench") {
+    val readers = Seq("GraftSession", "Bench").map(t => s"graft/$t.scala:")
+    val offenders = (hits(main, "sys.env") ++ hits(main, "System.getenv"))
+      .filterNot(h => readers.exists(h.startsWith))
+    assert(offenders.isEmpty, s"no new env knobs: $offenders")
   }
 }

@@ -495,8 +495,7 @@ class SimilaritySpec extends SparkSpec {
     //     scores every sibling identically and recall collapses to the
     //     tie-break (~0.15) — the recall a user buys back with the
     //     residual/m/ksub dials is real and large.
-    // GraphProbe's `recall` mode measures the same numbers at sf1/sf10
-    // for BASELINE.md.
+    // BASELINE.md records the same census at sf1/sf10.
     val corpus = (0 until 32).flatMap { c =>
       (0 until 40).map { j =>
         (c * 40L + j, Array.tabulate(64) { d =>

@@ -206,6 +206,14 @@ class WarehouseJobSpec extends SparkSpec {
     assert(status == Map("rainfall" -> false, "tide" -> true, "discharge" -> true))
     assert(new java.io.File(s"$dir/tide_out").exists)
     assert(new java.io.File(s"$dir/dis_out").exists)
+    // an off-quarter window is refused before any step writes (P9)
+    Files.writeString(dir.resolve("prep2.json"),
+      s"""{"tide_config": "$dir/tide2.json"}""")
+    Files.writeString(dir.resolve("tide2.json"),
+      s"""{"series_path": "$dir/series", "output_path": "$dir/tide2_out"}""")
+    assertThrows[IllegalArgumentException](graft.jobs.PrepMikeInputsJob.run(
+      spark, s"$dir/prep2.json", "2024-01-01 00:07:00", "2024-01-01 00:15:00"))
+    assert(!new java.io.File(s"$dir/tide2_out").exists)
     // default horizon is day-aligned now-3d .. now+2d (T6)
     val (s0, e0) = graft.jobs.PrepMikeInputsJob.defaultWindow(
       java.time.LocalDateTime.parse("2024-06-10T14:37:22"))
