@@ -14,17 +14,15 @@ import org.apache.spark.sql.functions._
   * the same `(tms_id, time, fgt)` keys overwrites identical values
   * (ref semantics: outputs/extract_water_level.py:96-97, `insert_data(..., upsert=True)`).
   *
-  * Dialects: MySQL (the reference's warehouse, ref: requirements.txt:6 PyMySQL) gets
-  * a single-statement `INSERT ... ON DUPLICATE KEY UPDATE` batch; the generic/Derby
-  * path uses UPDATE-then-INSERT (Derby's MERGE cannot take a VALUES source). */
+  * The URL picks the statement shape. A `jdbc:mysql:` or `jdbc:mariadb:` URL (the
+  * reference's warehouse, ref: requirements.txt:6 PyMySQL) gets a single-statement
+  * `INSERT ... ON DUPLICATE KEY UPDATE` batch. Every other URL gets UPDATE, then
+  * INSERT when no row matched: any ANSI JDBC target takes it, Derby included
+  * (Derby's MERGE cannot take a VALUES source). */
 object JdbcUpsert {
 
-  sealed trait Dialect
-  /** Single-statement upsert, batched. Param order: all columns. */
-  case object MySqlDialect extends Dialect
-  /** Two statements: UPDATE (params: non-keys then keys); if no row matched,
-    * INSERT (params: all columns). Works on any ANSI JDBC target incl. Derby. */
-  case object UpdateInsertDialect extends Dialect
+  private def isMySql(url: String): Boolean =
+    url.startsWith("jdbc:mysql:") || url.startsWith("jdbc:mariadb:")
 
   private def mysqlSql(table: String, cols: Seq[String], keyCols: Seq[String]) = {
     val updates = cols.filterNot(keyCols.contains)
@@ -61,53 +59,52 @@ object JdbcUpsert {
     * (callers must not re-count with a second action; at 100× a re-run of the
     * CSV→unpivot→join pipeline doubles the job). */
   def upsert(df: DataFrame, url: String, table: String, keyCols: Seq[String],
-             dialect: Dialect = UpdateInsertDialect, batchSize: Int = 1000): Long = {
+             batchSize: Int = 1000): Long = {
     val cols = df.columns.toSeq
     val nonKeys = cols.filterNot(keyCols.contains)
     val written = df.sparkSession.sparkContext.longAccumulator("graft.upserted")
-    dialect match {
-      case MySqlDialect =>
-        val sql = mysqlSql(table, cols, keyCols)
-        df.foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.nonEmpty) {
-            val conn = DriverManager.getConnection(url)
-            try {
-              conn.setAutoCommit(false)
-              val ps = conn.prepareStatement(sql)
-              var n = 0
-              rows.foreach { r =>
-                bind(ps, r, cols, cols); ps.addBatch(); n += 1; written.add(1L)
-                if (n % batchSize == 0) ps.executeBatch()
-              }
-              ps.executeBatch()
-              conn.commit()
-            } finally conn.close()
-          }
+    if (isMySql(url)) {
+      val sql = mysqlSql(table, cols, keyCols)
+      df.foreachPartition { (rows: Iterator[Row]) =>
+        if (rows.nonEmpty) {
+          val conn = DriverManager.getConnection(url)
+          try {
+            conn.setAutoCommit(false)
+            val ps = conn.prepareStatement(sql)
+            var n = 0
+            rows.foreach { r =>
+              bind(ps, r, cols, cols); ps.addBatch(); n += 1; written.add(1L)
+              if (n % batchSize == 0) ps.executeBatch()
+            }
+            ps.executeBatch()
+            conn.commit()
+          } finally conn.close()
         }
-      case UpdateInsertDialect =>
-        val uSql = updateSql(table, cols, keyCols)
-        val iSql = insertSql(table, cols)
-        df.foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.nonEmpty) {
-            val conn = DriverManager.getConnection(url)
-            try {
-              conn.setAutoCommit(false)
-              val up = conn.prepareStatement(uSql)
-              val ins = conn.prepareStatement(iSql)
-              var n = 0
-              rows.foreach { r =>
-                bind(up, r, nonKeys ++ keyCols, cols)
-                written.add(1L)
-                if (up.executeUpdate() == 0) {
-                  bind(ins, r, cols, cols); ins.addBatch(); n += 1
-                  if (n % batchSize == 0) ins.executeBatch()
-                }
+      }
+    } else {
+      val uSql = updateSql(table, cols, keyCols)
+      val iSql = insertSql(table, cols)
+      df.foreachPartition { (rows: Iterator[Row]) =>
+        if (rows.nonEmpty) {
+          val conn = DriverManager.getConnection(url)
+          try {
+            conn.setAutoCommit(false)
+            val up = conn.prepareStatement(uSql)
+            val ins = conn.prepareStatement(iSql)
+            var n = 0
+            rows.foreach { r =>
+              bind(up, r, nonKeys ++ keyCols, cols)
+              written.add(1L)
+              if (up.executeUpdate() == 0) {
+                bind(ins, r, cols, cols); ins.addBatch(); n += 1
+                if (n % batchSize == 0) ins.executeBatch()
               }
-              ins.executeBatch()
-              conn.commit()
-            } finally conn.close()
-          }
+            }
+            ins.executeBatch()
+            conn.commit()
+          } finally conn.close()
         }
+      }
     }
     written.value
   }
@@ -118,13 +115,12 @@ object JdbcUpsert {
     * writers converge on identical rows without an id-allocator; the upsert makes
     * the race a benign overwrite-with-equal-values. */
   def getOrCreateDim(spark: SparkSession, candidates: DataFrame, url: String,
-                     table: String, keyCols: Seq[String],
-                     dialect: Dialect = UpdateInsertDialect): DataFrame = {
+                     table: String, keyCols: Seq[String]): DataFrame = {
     val existing = spark.read.format("jdbc")
       .option("url", url).option("dbtable", table).load()
     val missing = candidates.join(existing.select(keyCols.map(col): _*),
       keyCols, "left_anti")
-    upsert(missing, url, table, keyCols, dialect)
+    upsert(missing, url, table, keyCols)
     spark.read.format("jdbc").option("url", url).option("dbtable", table).load()
   }
 
@@ -139,7 +135,7 @@ object JdbcUpsert {
     * holds (sim_tag, source_id, ...); it is dim-sized (thousands of rows at most),
     * so both passes are trivially cheap next to the fact upsert. */
   def maintainRuns(spark: SparkSession, runs: DataFrame, url: String, table: String,
-                   fgt: String, dialect: Dialect = UpdateInsertDialect): Unit = {
+                   fgt: String): Unit = {
     val fgtTs = lit(fgt).cast("timestamp_ntz")
     val existing = spark.read.format("jdbc")
       .option("url", url).option("dbtable", table).load().select("tms_id")
@@ -147,10 +143,10 @@ object JdbcUpsert {
     val missing = runs.join(existing, Seq("tms_id"), "left_anti")
       .withColumn("start_date", fgtTs)
       .withColumn("latest_fgt", fgtTs)
-    upsert(missing, url, table, Seq("tms_id"), dialect)
+    upsert(missing, url, table, Seq("tms_id"))
     // update_latest_fgt: every tick, all touched series (start_date untouched —
     // the 2-column frame updates only latest_fgt)
     val tick = runs.select(col("tms_id")).withColumn("latest_fgt", fgtTs)
-    upsert(tick, url, table, Seq("tms_id"), dialect)
+    upsert(tick, url, table, Seq("tms_id"))
   }
 }

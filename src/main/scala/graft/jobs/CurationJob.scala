@@ -42,11 +42,12 @@ import org.apache.spark.sql.functions._
   *   "wet_export_indexed": false,      //   + the CDX parquet at
   *                                     //   `<path>_cdx` (byte-range
   *                                     //   fetch / CDXJ interop)
-  *   "warc_html_to_text": true,        //   strip text/html captures to text
-  *                                     //   (HtmlToTextExpr) in the scan
-  *   "warc_html_extract": "full",      //   or "main": block-level
-  *                                     //   boilerplate drop (jusText rules,
-  *                                     //   HtmlMainTextExpr); "justext":
+  *   "warc_html_extract": "full",      //   text/html captures are stripped
+  *                                     //   in the scan: "full" =
+  *                                     //   HtmlToTextExpr; "main": block-
+  *                                     //   level boilerplate drop (jusText
+  *                                     //   rules, HtmlMainTextExpr);
+  *                                     //   "justext":
   *                                     //   the four-class scheme — needs
   *                                     //   justext_stopwords, or (r15)
   *                                     //   justext_stopwords_by_lang =
@@ -57,10 +58,11 @@ import org.apache.spark.sql.functions._
   *                                     //   q28 language-ID kernel so
   *                                     //   block_cols/mixture/report strata
   *                                     //   work on raw crawls
-  *   "warc_url_normalize": true,       //   canonicalize urls (q129 kernel)
-  *                                     //   BEFORE ids are assigned
   *   "warc_url_dedup": false,          //   one row per canonical url
-  *                                     //   (deterministic min-capture)
+  *                                     //   (deterministic min-capture);
+  *                                     //   urls are always canonicalized
+  *                                     //   (q129 kernel) BEFORE ids are
+  *                                     //   assigned
   *   "host_blocklist": ["spam.test"],  //   canonical hosts dropped at scan
   *   "robots_path": "",                //   retroactive RFC 9309 compliance:
   *                                     //   parquet (host, robots_txt) — each
@@ -88,8 +90,8 @@ import org.apache.spark.sql.functions._
   *   "bm25_index_table": "",           //   r15: publish the BM25 serving
   *                                     //   index over the curated corpus
   *                                     //   (q140 machinery; Bm25.add/
-  *                                     //   remove ticks maintain it)
-  *   "bm25_index_buckets": 32,         //   its BucketedStore layout dial
+  *                                     //   remove ticks maintain it;
+  *                                     //   32 BucketedStore buckets)
   *   "training_pairs_output_path": "", // r16: publish the retrieval-
   *                                     //   TRAINING data product beside
   *                                     //   the corpus — per sampled query
@@ -116,12 +118,11 @@ import org.apache.spark.sql.functions._
   *                                     //   parquet: also mine DENSE
   *                                     //   negatives via IVF+PQ with the
   *                                     //   same gold exclusion ("" =
-  *                                     //   sparse-only)
-  *   "training_dense_nprobe": 4,       //   IVF cells probed per dense
-  *                                     //   search — mining AND the QA
-  *                                     //   card ride the same dial, so
-  *                                     //   the card scores exactly the
-  *                                     //   configuration that mined
+  *                                     //   sparse-only); each dense search
+  *                                     //   probes 4 IVF cells — mining AND
+  *                                     //   the QA card, so the card scores
+  *                                     //   exactly the configuration that
+  *                                     //   mined
   *   "training_eval_path": "",         // r17: optional QA card — one row
   *                                     //   per retriever (recall/MRR/
   *                                     //   nDCG@k e6 ints, q154's
@@ -145,12 +146,10 @@ import org.apache.spark.sql.functions._
   *                                     //   SERVE from it when both dials
   *                                     //   are on). Needs
   *                                     //   training_embeddings_path.
-  *   "ivfpq_centroids": 16,            //   coarse cells
-  *   "ivfpq_m": 4, "ivfpq_ksub": 16,   //   PQ budget (see the measured
-  *                                     //   recall census in BASELINE.md —
-  *                                     //   residual+bigger m/ksub buy
-  *                                     //   rank fidelity)
-  *   "ivfpq_residual": false,          //   IVFADC residual encoding
+  *   "ivfpq_centroids": 16,            //   coarse cells; the PQ budget is
+  *                                     //   the Similarity.buildIvfPqIndex
+  *                                     //   default (m=4, ksub=16, raw
+  *                                     //   vectors)
   *   "tokenized_output_path": "",      // r16/r17: publish the TRAINING-
   *                                     //   READY tokenized corpus — one
   *                                     //   row per packed PIECE: (id,
@@ -263,13 +262,9 @@ import org.apache.spark.sql.functions._
   *                                     //   bucketed+sorted catalog table on
   *                                     //   id_col — admission ticks join it
   *                                     //   with ZERO corpus shuffle ("" = off)
-  *   "shard_export_n": 0,              // optional deterministic shard export
-  *   "shard_export_salt": 0,           //   (q81): <output_path>_shards/
+  *   "shard_export_n": 0               // optional deterministic shard export
+  *                                     //   (q81): <output_path>_shards/
   *                                     //   shard=K/, (hash,id) order (0 = off)
-  *   "plan_audit": false               // optional measurement: per-stage
-  *                                     //   [curate-plan] lines with plan-node
-  *                                     //   counts + Catalyst phase ms (the
-  *                                     //   driver planning-tail decomposition)
   * }
   * Usage: CurationJob <config.json>
   *
@@ -379,65 +374,54 @@ object CurationJob {
               .select(col("node").as("__host"),
                 col("pr_e12").as("host_rank_e12")))
           }
-        val stripped =
-          if (!str("warc_html_to_text", "true").toBoolean) td
-          else {
-            // "full" = html_to_text (WET-equivalent whole page);
-            // "main" = html_main_text (block-level boilerplate drop —
-            // nav/footer link soup stays out of the corpus);
-            // "justext" (r14) = the four-class scheme — REQUIRES
-            // justext_stopwords (the per-language stopword list is what
-            // stopword density means); lenHigh/stopLow/stopHigh dials
-            // default to the paper-shaped 10 words / 0.25 / 0.45
-            val extractor: org.apache.spark.sql.Column =
-              str("warc_html_extract", "full") match {
-                case "main" =>
-                  graft.functions.TextFns.htmlMainText(col("text"))
-                case "justext" =>
-                  val sw = strSeq("justext_stopwords")
-                  // r15: justext_stopwords_by_lang = {"en": [...], ...} —
-                  // stopword DENSITY is only meaningful against the page's
-                  // own language's function words (jusText ships one list
-                  // per language). The lang is probed IN-ROW on the
-                  // whole-page text (q28 kernel over html_to_text — one
-                  // extra decode in the same scan stage, no shuffle, no
-                  // second pass over the lake) and selects the list per
-                  // row; probe langs outside the map fall back to
-                  // justext_stopwords (may be empty = legacy two-rule).
-                  val byLang =
-                    cfg.obj("justext_stopwords_by_lang")(_.strSeq(_))
-                  require(sw.nonEmpty || byLang.nonEmpty,
-                    "warc_html_extract=justext needs justext_stopwords " +
-                      "(or justext_stopwords_by_lang)")
-                  val minW = str("justext_min_words", "5").toInt
-                  val mld = str("justext_max_link_density_e6", "500000").toInt
-                  val lenHigh = str("justext_len_high_words", "10").toInt
-                  val stopLow = str("justext_stop_low_e6", "250000").toInt
-                  val stopHigh = str("justext_stop_high_e6", "450000").toInt
-                  if (byLang.isEmpty)
-                    graft.functions.TextFns.htmlMainTextJustext(col("text"),
-                      minW, mld, sw, lenHigh, stopLow, stopHigh)
-                  else
-                    graft.functions.TextFns.htmlMainTextJustextByLang(
-                      col("text"),
-                      graft.functions.TextFns.langIdPredict(
-                        graft.functions.TextFns.htmlToText(col("text"))),
-                      byLang, sw, minW, mld, lenHigh, stopLow, stopHigh)
-                case _ => graft.functions.TextFns.htmlToText(col("text"))
-              }
-            td.withColumn("text",
-              when(col("mime") === "text/html", extractor)
-                .otherwise(col("text")))
+        // "full" = html_to_text (WET-equivalent whole page);
+        // "main" = html_main_text (block-level boilerplate drop —
+        // nav/footer link soup stays out of the corpus);
+        // "justext" (r14) = the four-class scheme — REQUIRES
+        // justext_stopwords (the per-language stopword list is what
+        // stopword density means); its block rules are fixed at 5 min
+        // words, 0.5 max link density and the paper-shaped 10 words /
+        // 0.25 / 0.45 length and stopword-density bounds
+        val extractor: org.apache.spark.sql.Column =
+          str("warc_html_extract", "full") match {
+            case "main" =>
+              graft.functions.TextFns.htmlMainText(col("text"))
+            case "justext" =>
+              val sw = strSeq("justext_stopwords")
+              // r15: justext_stopwords_by_lang = {"en": [...], ...} —
+              // stopword DENSITY is only meaningful against the page's
+              // own language's function words (jusText ships one list
+              // per language). The lang is probed IN-ROW on the
+              // whole-page text (q28 kernel over html_to_text — one
+              // extra decode in the same scan stage, no shuffle, no
+              // second pass over the lake) and selects the list per
+              // row; probe langs outside the map fall back to
+              // justext_stopwords (may be empty = legacy two-rule).
+              val byLang =
+                cfg.obj("justext_stopwords_by_lang")(_.strSeq(_))
+              require(sw.nonEmpty || byLang.nonEmpty,
+                "warc_html_extract=justext needs justext_stopwords " +
+                  "(or justext_stopwords_by_lang)")
+              if (byLang.isEmpty)
+                graft.functions.TextFns.htmlMainTextJustext(col("text"),
+                  5, 500000, sw, 10, 250000, 450000)
+              else
+                graft.functions.TextFns.htmlMainTextJustextByLang(
+                  col("text"),
+                  graft.functions.TextFns.langIdPredict(
+                    graft.functions.TextFns.htmlToText(col("text"))),
+                  byLang, sw, 5, 500000, 10, 250000, 450000)
+            case _ => graft.functions.TextFns.htmlToText(col("text"))
           }
         // URL canonicalization BEFORE ids: the same page arrives as
         // `HTTP://Host:80/a?utm_...#f` and `http://host/a`, and ids keyed
         // on raw URIs double-count it (q129 kernel; identity on already-
-        // canonical urls, so on by default)
-        val canon =
-          if (str("warc_url_normalize", "true").toBoolean)
-            stripped.withColumn("url",
-              graft.functions.UrlFns.urlNormalize(col("url")))
-          else stripped
+        // canonical urls)
+        val canon = td
+          .withColumn("text",
+            when(col("mime") === "text/html", extractor)
+              .otherwise(col("text")))
+          .withColumn("url", graft.functions.UrlFns.urlNormalize(col("url")))
         // optional host blocklist: spam/adult/trap domains drop at the
         // scan (exact canonical-host match against a config-sized set —
         // a literal IN filter, no join)
@@ -577,55 +561,11 @@ object CurationJob {
     // receipt that says WHERE a full-stage run spends its time (r10: the
     // first sf10 receipt had to be diagnosed with jstack)
     val stageTimes = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // "plan_audit": true (opt-in, measurement-only) — decompose the DRIVER
-    // planning tail the sf10 receipt exposed (~4.6 min of non-task wall):
-    // a QueryExecutionListener records, per action, the logical/physical
-    // plan-node counts and the QueryPlanningTracker phase durations
-    // (analysis/optimization/planning — the single-threaded Catalyst work),
-    // drained per stage into `[curate-plan]` stderr lines beside the wall
-    // laps. Measurement first, code second (r10 verdict #6).
-    val planAudit = str("plan_audit", "false").toBoolean
-    final case class PlanRec(logicalNodes: Int, physicalNodes: Int,
-                             catalystMs: Long)
-    val planRecs = new java.util.concurrent.ConcurrentLinkedQueue[PlanRec]()
-    val planListener: Option[org.apache.spark.sql.util.QueryExecutionListener] =
-      if (!planAudit) None
-      else {
-        val l = new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = {
-            val logical = qe.optimizedPlan.collect { case _ => 1 }.sum
-            val physical =
-              graft.plans.ParallelismAudit.countNodes(qe.executedPlan)
-            val catalystMs = qe.tracker.phases.valuesIterator
-              .map(_.durationMs).sum
-            planRecs.add(PlanRec(logical, physical, catalystMs))
-          }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        }
-        spark.listenerManager.register(l)
-        Some(l)
-      }
     var tLast = System.nanoTime()
     def lap(stage: String): Unit = {
       val now = System.nanoTime()
       stageTimes += stage -> (now - tLast) / 1e9
       tLast = now
-      if (planAudit) {
-        // listener delivery is async — give the bus a beat, then drain what
-        // has landed; attribution is per-stage-approximate by design
-        Thread.sleep(200)
-        val recs = Iterator.continually(planRecs.poll()).takeWhile(_ != null)
-          .toSeq
-        if (recs.nonEmpty) System.err.println(
-          s"[curate-plan] stage=$stage actions=${recs.size} " +
-            s"logical_nodes_max=${recs.map(_.logicalNodes).max} " +
-            s"physical_nodes_max=${recs.map(_.physicalNodes).max} " +
-            s"catalyst_ms_sum=${recs.map(_.catalystMs).sum}")
-      }
     }
     val input = raw.count()
     lap("read+count")
@@ -974,7 +914,7 @@ object CurationJob {
     if (bm25Table.nonEmpty) {
       graft.operators.Bm25
         .buildIndex(spark.read.parquet(outPath), idCol, textCol)
-        .save(bm25Table, str("bm25_index_buckets", "32").toInt)
+        .save(bm25Table, 32)
       lap("bm25_index_publish")
     }
     // 5b3b. optional DENSE serving-index publication (r16 — the IVF+PQ
@@ -983,9 +923,9 @@ object CurationJob {
     // was written, saved cell-partitioned (probes prune at the file
     // index); day-two ivfPqAdd/ivfPqRemove ticks maintain it under the
     // frozen-quantizer contract (AnnServeStream.maintain is the streaming
-    // driver). Trained quantizers (iters=2/refineIters=2 — the serving
-    // dial, not the oracle's seed pick); recall/budget dials per the
-    // measured census in BASELINE.md.
+    // driver). Trained quantizers (iters=2/refineIters=2, not the
+    // oracle's seed pick); the PQ budget is the operator's default (see the
+    // measured recall census in BASELINE.md).
     val ivfPqPath = str("ivfpq_index_path", "")
     val tpEmbPath = str("training_embeddings_path", "")
     if (ivfPqPath.nonEmpty) {
@@ -997,10 +937,7 @@ object CurationJob {
           Seq("vec_id"), "left_semi")
       graft.operators.Similarity.buildIvfPqIndex(emb,
           nCentroids = str("ivfpq_centroids", "16").toInt,
-          m = str("ivfpq_m", "4").toInt,
-          ksub = str("ivfpq_ksub", "16").toInt,
-          iters = 2, refineIters = 2,
-          residual = str("ivfpq_residual", "false").toBoolean)
+          iters = 2, refineIters = 2)
         .save(ivfPqPath)
       lap("ivfpq_index_publish")
     }
@@ -1060,26 +997,21 @@ object CurationJob {
             if (ivfPqPath.nonEmpty)
               graft.operators.Similarity.IvfPqIndex.load(spark, ivfPqPath)
             else {
-              // the one-shot fallback honors the SAME quality dials as the
-              // published index — a hardcoded m=4/ksub=16 here would mine
-              // near-noise negatives on tie-dense corpora (the measured
-              // recall-census collapse) while the published-index route
-              // mined real ones
+              // the one-shot fallback builds with the SAME coarse cells and
+              // PQ budget as the published index, so both routes mine from
+              // one configuration
               val cents = graft.operators.Similarity.kmeansCentroids(emb,
                 nCentroids = str("ivfpq_centroids", "16").toInt, iters = 2)
               graft.operators.Similarity.buildIvfPqIndexFrom(emb, cents,
-                m = str("ivfpq_m", "4").toInt,
-                ksub = str("ivfpq_ksub", "16").toInt, iters = 2,
-                residual = str("ivfpq_residual", "false").toBoolean)
+                iters = 2)
             }
           val qEmb = emb.join(queries.select(col("q_id").as("vec_id")),
             Seq("vec_id"), "left_semi")
           Some((didx, qEmb, emb))
         }
-      // the serve-quality dial: probing more cells trades latency for
-      // recall — mined negatives and the QA card's dense row both ride it,
+      // probe depth: mined negatives and the QA card's dense row share it,
       // so the card measures EXACTLY the configuration that mined
-      val denseNProbe = str("training_dense_nprobe", "4").toInt
+      val denseNProbe = 4
       val negatives = denseCtx match {
         case None => sparseNeg
         case Some((didx, qEmb, _)) =>
@@ -1278,7 +1210,7 @@ object CurationJob {
     val nShards = str("shard_export_n", "0").toInt
     if (nShards > 0) {
       DataMix.writeShards(spark.read.parquet(outPath), idCol,
-        outPath + "_shards", nShards, str("shard_export_salt", "0").toLong)
+        outPath + "_shards", nShards)
       lap("shard_export")
     }
 
@@ -1302,7 +1234,6 @@ object CurationJob {
     System.err.println(s"[curate] $stats")
     System.err.println("[curate-times] " + stageTimes
       .map { case (k, v) => f"$k=$v%.1fs" }.mkString(" "))
-    planListener.foreach(spark.listenerManager.unregister)
     Maintenance.touchDone(outPath, spark.sparkContext.hadoopConfiguration)
     Some(stats)
   }

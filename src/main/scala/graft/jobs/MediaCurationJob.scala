@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions._
   *   "output_path": "<dir>",          // <dir>/media + <dir>/sigs
   *   "modality": "image",             // image | audio | video
   *   "max_hamming": 4,                // image/audio near-dup radius
-  *   "max_bucket": 4096,              // flood star-collapse for the pair join
   *   "min_shared_frames": 2,          // video: clip near-dup threshold
-  *   "frame_every_nth": 1,            // video: frame sampling stride
+  *                                    //   (every frame is hashed)
+  *                                    // the pair join star-collapses any
+  *                                    //   bucket over 4096 members (the
+  *                                    //   flood guard), every modality
   *   "container_census_path": "",     // r17: optional — publish the
   *                                    //   compressed-container governance
   *                                    //   census (Multimodal
@@ -101,9 +103,7 @@ object MediaCurationJob {
 
     val modality = str("modality", "image")
     val maxHamming = str("max_hamming", "4").toInt
-    val maxBucket = str("max_bucket", "4096").toInt
     val minShared = str("min_shared_frames", "2").toInt
-    val everyNth = str("frame_every_nth", "1").toInt
     val maintainedStore = str("store_path", "")
     val tickId = {
       val t = str("tick_id", "")
@@ -166,7 +166,7 @@ object MediaCurationJob {
       case other => sys.error(s"unknown modality $other")
     }
     val frameHasher =
-      if (isVideo) Multimodal.anyVideoFrameHasher(everyNth) else null
+      if (isVideo) Multimodal.anyVideoFrameHasher() else null
 
     // ONE decode pass: the tick's signatures, checkpointed — the decode gate,
     // the admission probe, the pair join, and the published store all read it
@@ -220,10 +220,10 @@ object MediaCurationJob {
     val admittedSigs = if (rejectedIds == null) sigs
       else sigs.join(broadcast(rejectedIds), Seq("media_id"), "left_anti")
     val pairs = if (isVideo)
-      Multimodal.videoNearDupPairsFromSigs(admittedSigs, minShared, maxBucket)
+      Multimodal.videoNearDupPairsFromSigs(admittedSigs, minShared)
     else Dedup.simhashBandPairs(
       admittedSigs.select(col("media_id"), col("phash").as("simhash")),
-      "media_id", maxHamming, maxBucket)
+      "media_id", maxHamming, maxBucket = 4096)
     val labels = Dedup.components(pairs)
     lap("pairs+cc")
     // EVERYTHING that falls out of the tick is small — junk, store dups, and
@@ -252,16 +252,14 @@ object MediaCurationJob {
     // The survivor count rides the media write as an OBSERVED metric —
     // the old read-back count paid a listing + metadata job per tick for a
     // number the write itself already knew (r18, guide §5 driver work).
+    // A failed write cancels its sibling and returns only once both ended,
+    // so a retry never races a store append still in flight.
     val obs = new org.apache.spark.sql.Observation()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val mediaWrite = Future {
+    graft.Concurrent.all(spark)(() => {
       media.join(broadcast(dropIds), Seq("media_id"), "left_anti")
         .observe(obs, count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$outPath/media")
-    }
-    val sigsWrite = Future {
+    }, () => {
       // the tick's signature store: SURVIVOR signatures only (rejected and
       // shadowed rows are represented by their store/survivor twins)
       sigs.join(broadcast(dropIds), Seq("media_id"), "left_anti")
@@ -276,9 +274,7 @@ object MediaCurationJob {
       if (maintainedStore.nonEmpty)
         graft.io.SignatureStore.appendTick(
           spark.read.parquet(s"$outPath/sigs"), maintainedStore, tickId)
-    }
-    Await.result(mediaWrite, Duration.Inf)
-    Await.result(sigsWrite, Duration.Inf)
+    })
     lap("write+append")
     if (maintainedStore.nonEmpty) {
       // in-job maintenance: compaction BEFORE the _DONE stamp is safe — a

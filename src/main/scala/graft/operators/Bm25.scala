@@ -89,17 +89,13 @@ object Bm25 {
       // pins — submit them concurrently so the later writes back-fill the
       // earlier ones' task tails (guide §2.6 overlap independent jobs);
       // sequential saves paid four full job latencies end to end
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val saves = Seq(
-        Future(BucketedStore.save(tf, s"${name}_tf", idCol, nBuckets)),
-        Future(BucketedStore.save(dl, s"${name}_dl", idCol, nBuckets)),
-        Future(BucketedStore.save(df, s"${name}_df", "token", nBuckets)),
-        Future(BucketedStore.save(
+      graft.Concurrent.all(spark)(
+        () => BucketedStore.save(tf, s"${name}_tf", idCol, nBuckets),
+        () => BucketedStore.save(dl, s"${name}_dl", idCol, nBuckets),
+        () => BucketedStore.save(df, s"${name}_df", "token", nBuckets),
+        () => BucketedStore.save(
           Seq((idCol, nDocs, totTokens)).toDF("id_col", "n_docs",
-            "tot_tokens"), s"${name}_meta", "id_col", 1)))
-      saves.foreach(Await.result(_, Duration.Inf))
+            "tot_tokens"), s"${name}_meta", "id_col", 1))
       // the saves consumed the in-memory frames: the tables are the
       // artifact now, serve via load()
       release()
@@ -283,15 +279,9 @@ object Bm25 {
     // postings), so they submit concurrently (guide §2.6) — the metadata
     // count back-fills the tokenize+aggregate job instead of preceding it
     // as a separate driver round trip.
-    val (nDocs, totTokens) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val nF = Future(docs.count())
-      val tF = Future(tf.agg(coalesce(sum(col("tf")), lit(0L)))
-        .first().getLong(0))
-      (Await.result(nF, Duration.Inf), Await.result(tF, Duration.Inf))
-    }
+    val Seq(nDocs, totTokens) = graft.Concurrent.all(docs.sparkSession)(
+      () => docs.count(),
+      () => tf.agg(coalesce(sum(col("tf")), lit(0L))).first().getLong(0))
     // same double-reference single evaluation as [[search]]'s qTerms
     // (r17 opt, r18 leak-free form)
     val qTerms = Dedup.localizeIfHeavy(queries.select(col(qIdCol),

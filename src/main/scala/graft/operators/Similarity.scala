@@ -66,15 +66,11 @@ object Similarity {
       // directories at the file index — the ANN equivalent of date-partitioned
       // fact tables. The two independent writes submit concurrently (guide
       // §2.6): the tiny centroids write back-fills the cells write's tail.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(Seq(
-        Future(cells.write.mode("overwrite")
-          .partitionBy("cell").parquet(s"$dir/cells")),
-        Future(centroids.write.mode("overwrite")
-          .parquet(s"$dir/centroids")))), Duration.Inf)
-      ()
+      graft.Concurrent.all(cells.sparkSession)(
+        () => cells.write.mode("overwrite")
+          .partitionBy("cell").parquet(s"$dir/cells"),
+        () => centroids.write.mode("overwrite")
+          .parquet(s"$dir/centroids"))
     }
   }
 
@@ -544,17 +540,13 @@ object Similarity {
       // of queueing three extra driver round trips behind it
       val spark = cells.sparkSession
       import spark.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(Seq(
-        Future(cells.write.mode("overwrite")
-          .partitionBy("cell").parquet(s"$dir/cells")),
-        Future(centroids.write.mode("overwrite").parquet(s"$dir/centroids")),
-        Future(books.write.mode("overwrite").parquet(s"$dir/books")),
-        Future(Seq(residual).toDF("residual")
-          .write.mode("overwrite").parquet(s"$dir/meta")))), Duration.Inf)
-      ()
+      graft.Concurrent.all(spark)(
+        () => cells.write.mode("overwrite")
+          .partitionBy("cell").parquet(s"$dir/cells"),
+        () => centroids.write.mode("overwrite").parquet(s"$dir/centroids"),
+        () => books.write.mode("overwrite").parquet(s"$dir/books"),
+        () => Seq(residual).toDF("residual")
+          .write.mode("overwrite").parquet(s"$dir/meta"))
     }
   }
 

@@ -990,6 +990,9 @@ class CurationJobSpec extends SparkSpec {
       .collect().toMap
     assert(rows.keySet == Set("http://site.test/page", "http://site.test/other"))
     assert(rows("http://site.test/page") == s"$filler the first fetch")
+    // ids are assigned AFTER canonicalization: each is the hash of its
+    // canonical url, so every re-fetch variant maps to one id
+    assert(out.filter($"doc_id" =!= xxhash64($"url")).isEmpty)
   }
 
   test("curation job: host blocklist drops at scan; host_cap quotas per site") {

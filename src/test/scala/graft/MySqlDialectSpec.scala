@@ -8,10 +8,11 @@ import scala.collection.mutable
 import graft.io.JdbcUpsert
 
 /** Executes the MySQL `INSERT ... ON DUPLICATE KEY UPDATE` upsert branch END
-  * TO END — the one dialect no test engine in this sandbox speaks (no MySQL,
-  * no H2; Derby runs the update-insert dialect).
+  * TO END — the one dialect no test engine here speaks (no MySQL, no H2;
+  * Derby runs the update-insert path).
   *
-  * The target is a minimal in-JVM JDBC driver (`MiniMysql`) whose prepared
+  * The target is a minimal in-JVM JDBC driver (`MiniMysql`) for `jdbc:mysql:`
+  * and `jdbc:mariadb:` URLs — the URLs that select the branch — whose prepared
   * statements PARSE the exact statement text the dialect emits and apply
   * MySQL's documented upsert semantics to a keyed in-memory table: insert
   * when the primary key is absent, otherwise apply each `col = VALUES(col)`
@@ -123,12 +124,16 @@ object MiniMysql {
       Array(classOf[Connection]), h).asInstanceOf[Connection]
   }
 
-  private val Prefix = "jdbc:minimysql:"
+  private val Prefixes = Seq("jdbc:mysql:", "jdbc:mariadb:")
 
+  /** The database is the URL's last path segment:
+    * `jdbc:mysql://localhost/warehouse` → `warehouse`. */
   object MiniDriver extends Driver {
     override def connect(url: String, info: java.util.Properties): Connection =
-      if (acceptsURL(url)) connection(url.stripPrefix(Prefix)) else null
-    override def acceptsURL(url: String): Boolean = url.startsWith(Prefix)
+      if (acceptsURL(url)) connection(url.substring(url.lastIndexOf('/') + 1))
+      else null
+    override def acceptsURL(url: String): Boolean =
+      Prefixes.exists(url.startsWith)
     override def getPropertyInfo(url: String, info: java.util.Properties) =
       Array.empty[java.sql.DriverPropertyInfo]
     override def getMajorVersion: Int = 1
@@ -150,15 +155,14 @@ class MySqlDialectSpec extends SparkSpec {
   test("MySQL upsert dialect executes end to end: insert, conflict-update, " +
     "idempotent re-run — against MySQL ON DUPLICATE KEY semantics") {
     MiniMysql.register()
-    val url = "jdbc:minimysql:warehouse"
+    val url = "jdbc:mysql://localhost/warehouse"
     MiniMysql.createTable("warehouse", "facts",
       cols = Seq("tms_id", "t", "v"), keyCols = Seq("tms_id", "t"))
     // 3 partitions: exercises one-connection-per-partition plus the empty
     // partition guard on a 2-row frame
     val df1 = Seq(("a", 1, 1.0), ("a", 2, 2.0)).toDF("tms_id", "t", "v")
       .repartition(3)
-    assert(JdbcUpsert.upsert(df1, url, "facts", Seq("tms_id", "t"),
-      dialect = JdbcUpsert.MySqlDialect) == 2L)
+    assert(JdbcUpsert.upsert(df1, url, "facts", Seq("tms_id", "t")) == 2L)
     def state(): Set[(String, Int, Double)] =
       MiniMysql.tableRows("warehouse", "facts")
         .map(r => (r(0).asInstanceOf[String],
@@ -166,13 +170,11 @@ class MySqlDialectSpec extends SparkSpec {
           r(2).asInstanceOf[Number].doubleValue())).toSet
     assert(state() === Set(("a", 1, 1.0), ("a", 2, 2.0)))
     // idempotent re-run: same keys, same values
-    JdbcUpsert.upsert(df1, url, "facts", Seq("tms_id", "t"),
-      dialect = JdbcUpsert.MySqlDialect)
+    JdbcUpsert.upsert(df1, url, "facts", Seq("tms_id", "t"))
     assert(state() === Set(("a", 1, 1.0), ("a", 2, 2.0)))
     // conflict-update + fresh insert in one batch (the late-fgt overwrite)
     val df2 = Seq(("a", 2, 20.0), ("a", 3, 3.0)).toDF("tms_id", "t", "v")
-    JdbcUpsert.upsert(df2, url, "facts", Seq("tms_id", "t"),
-      dialect = JdbcUpsert.MySqlDialect)
+    JdbcUpsert.upsert(df2, url, "facts", Seq("tms_id", "t"))
     assert(state() === Set(("a", 1, 1.0), ("a", 2, 20.0), ("a", 3, 3.0)))
     // the statement TEXT is the reference's PyMySQL upsert shape, pinned
     val prepared = MiniMysql.preparedTexts.distinct
@@ -186,14 +188,36 @@ class MySqlDialectSpec extends SparkSpec {
   test("MySQL upsert dialect batches: a frame larger than batchSize flushes " +
     "mid-stream and still lands every row") {
     MiniMysql.register()
-    val url = "jdbc:minimysql:warehouse"
+    val url = "jdbc:mysql://localhost/warehouse"
     MiniMysql.createTable("warehouse", "big",
       cols = Seq("tms_id", "t", "v"), keyCols = Seq("tms_id", "t"))
     val n = 257
     val df = (0 until n).map(i => ("s", i, i * 1.5)).toDF("tms_id", "t", "v")
       .repartition(2)
     assert(JdbcUpsert.upsert(df, url, "big", Seq("tms_id", "t"),
-      dialect = JdbcUpsert.MySqlDialect, batchSize = 100) == n.toLong)
+      batchSize = 100) == n.toLong)
     assert(MiniMysql.tableRows("warehouse", "big").size == n)
+  }
+
+  test("the URL selects the dialect: a bare upsert to a jdbc:mysql: or " +
+    "jdbc:mariadb: URL prepares the ON DUPLICATE KEY UPDATE statement") {
+    MiniMysql.register()
+    MiniMysql.createTable("curw", "runs", cols = Seq("tms_id", "latest_fgt"),
+      keyCols = Seq("tms_id"))
+    val df = Seq(("a", "2024-01-01"), ("b", "2024-01-01"))
+      .toDF("tms_id", "latest_fgt")
+    Seq("jdbc:mysql://localhost:3306/curw", "jdbc:mariadb://localhost/curw")
+      .foreach { url =>
+        val seen = MiniMysql.preparedTexts.size
+        assert(JdbcUpsert.upsert(df, url, "runs", Seq("tms_id")) == 2L)
+        val prepared = MiniMysql.preparedTexts.drop(seen).distinct
+        assert(prepared == Seq(
+          """INSERT INTO runs (tms_id, latest_fgt)
+            |VALUES (?, ?)
+            |ON DUPLICATE KEY UPDATE latest_fgt = VALUES(latest_fgt)"""
+            .stripMargin), url)
+      }
+    assert(MiniMysql.tableRows("curw", "runs").map(_.head).toSet ==
+      Set("a", "b"))
   }
 }

@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps four invariants from drifting back: `GraftSession` is the only place
+/** Keeps six invariants from drifting back: `GraftSession` is the only place
   * that builds a SparkSession, no CLI job reads its config through Spark
   * (`JobConfig` parses it on the driver), the only mains are the CLI jobs and
-  * three tools, and no env var is read outside `GraftSession` and `Bench`. */
+  * three tools, no env var is read outside `GraftSession` and `Bench`, every
+  * curation-job config key is set by some test, and concurrent Spark actions
+  * go through `Concurrent` rather than the global ExecutionContext. */
 class SessionConfigGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -50,5 +52,38 @@ class SessionConfigGuardSpec extends AnyFunSuite {
     val offenders = (hits(main, "sys.env") ++ hits(main, "System.getenv"))
       .filterNot(h => readers.exists(h.startsWith))
     assert(offenders.isEmpty, s"no new env knobs: $offenders")
+  }
+
+  test("every curation-job config key is set somewhere under src/test") {
+    // the corpus's own column names: data-contract settings, like paths
+    val inputColumns = Set("id_col", "text_col", "mixture_strata_col",
+      "report_lang_col")
+    val keyRead = """\b(?:str|strSeq|opt|req|obj)\("([a-z0-9_]+)"""".r
+    val keys = Seq("CurationJob", "MediaCurationJob").flatMap { j =>
+      val src = Files.readString(main.resolve(s"graft/jobs/$j.scala"))
+      keyRead.findAllMatchIn(src).map(m => s"$j.${m.group(1)}").toSeq
+    }.distinct
+    assert(keys.size > 80, keys)
+    val tests = {
+      val files = Files.walk(Paths.get("src/test"))
+      try files.iterator.asScala
+        .filter(f => Files.isRegularFile(f) &&
+          f.getFileName.toString != "SessionConfigGuardSpec.scala")
+        .map(f => new String(Files.readAllBytes(f), "UTF-8")).toSeq
+      finally files.close()
+    }
+    val unset = keys.filterNot { jk =>
+      val k = jk.substring(jk.indexOf('.') + 1)
+      val word = ("(?<![A-Za-z0-9_])" + k + "(?![A-Za-z0-9_])").r
+      inputColumns(k) || tests.exists(word.findFirstIn(_).isDefined)
+    }
+    assert(unset.isEmpty,
+      s"config keys no test sets — inline them as constants: $unset")
+  }
+
+  test("no Spark action runs on the global ExecutionContext") {
+    val offenders = hits(main, "ExecutionContext.Implicits.global")
+    assert(offenders.isEmpty, s"submit concurrent actions through " +
+      s"graft.Concurrent: $offenders")
   }
 }
