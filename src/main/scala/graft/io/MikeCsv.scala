@@ -12,9 +12,11 @@ import org.apache.spark.sql.types._
   *  - headerless `time,value` series (discharge/tide inputs;
   *    ref: inputs/gen_mike_input_dis_linux.py:189, inputs/gen_mike_input_tide_linux.py:187)
   * MIKE consumes ONE time-ordered file, so the sinks honor a single-ordered-file
-  * contract (SURVEY.md §7.4.8): `orderBy(time).coalesce(1)`. That is a deliberate
-  * sequential tail on an otherwise distributed plan — acceptable because these files
-  * are model-interchange artifacts (hundreds of rows), never the 100 TB data path.
+  * contract (SURVEY.md §7.4.8): `coalesce(1).sortWithinPartitions(time)` — one
+  * partition sorted in place, without the range-partitioning sample job a global
+  * `orderBy` starts. That is a deliberate sequential tail on an otherwise
+  * distributed plan — acceptable because these files are model-interchange
+  * artifacts (hundreds of rows), never the 100 TB data path.
   */
 object MikeCsv {
 
@@ -39,18 +41,16 @@ object MikeCsv {
 
   /** S9: wide matrix sink, header + formatted time index, single ordered file. */
   def writeWideCsv(df: DataFrame, path: String, timeCol: String = "time"): Unit =
-    df.orderBy(col(timeCol))
+    df.coalesce(1).sortWithinPartitions(col(timeCol))
       .withColumn(timeCol, date_format(col(timeCol), TimeFmt))
-      .coalesce(1)
       .write.mode("overwrite").option("header", true)
       .option("emptyValue", "").csv(path)
 
   /** S10: headerless `time,value` series sink (discharge/tide inputs). */
   def writeHeaderlessSeries(df: DataFrame, path: String, timeCol: String = "time",
                             valueCol: String = "value"): Unit =
-    df.orderBy(col(timeCol))
+    df.coalesce(1).sortWithinPartitions(col(timeCol))
       .select(date_format(col(timeCol), TimeFmt), col(valueCol))
-      .coalesce(1)
       .write.mode("overwrite").option("header", false)
       .option("emptyValue", "").csv(path)
 

@@ -54,11 +54,15 @@ object ExtractToWarehouseJob {
     *     content hashes, so there is no id-allocator to coordinate);
     *  2. register CSV stations into the warehouse station dim get-or-create and
     *     join facts against the WAREHOUSE dim (stations already known to the
-    *     warehouse keep working even if dropped from the CSV);
+    *     warehouse keep working even if dropped from the CSV), collected once
+    *     into a local frame that the fact join, the run rows and the unmatched
+    *     list share;
     *  3. upsert facts keyed (tms_id, time, fgt) — row count from inside the
     *     writer, the plan executes once;
     *  4. run bookkeeping: insert_run/update_start_date once per new series,
-    *     update_latest_fgt every tick. */
+    *     update_latest_fgt every tick.
+    * Dims and runs are written on the driver over plain JDBC; only the facts
+    * take a distributed Spark job. */
   def run(spark: SparkSession, cfgPath: String, fgt: String): (Long, Seq[String]) = {
     val cfg = JobConfig.read(spark, cfgPath)
     runWithCfg(spark, cfg, cfg.req("results_csv"), fgt)
@@ -107,10 +111,12 @@ object ExtractToWarehouseJob {
       Seq(unit).toDF("unit")
         .select(seriesId(lit("unit"), col("unit")).as("unit_id"), col("unit")),
       url, cfg.str("unit_table", "unit_dim"), Seq("unit"))
-    val dim = JdbcUpsert.getOrCreateDim(spark, csvDim,
+    val warehouseDim = JdbcUpsert.getOrCreateDim(spark, csvDim,
         url, cfg.str("station_table", "station_dim"), Seq("station_id"))
       .select("station", "station_id", "latitude", "longitude")
-    val (facts, unmatched) = MikeJobs.extractToWarehouse(wide, dim, fgt,
+    val dim = spark.createDataFrame(
+      java.util.Arrays.asList(warehouseDim.collect(): _*), warehouseDim.schema)
+    val (facts, _) = MikeJobs.extractToWarehouse(wide, dim, fgt,
       simTag, model, variable, unit)
     // optional lake sink (100 TB path): fgt-partitioned versioned parquet deltas
     // alongside (or ahead of) the relational warehouse. Both sinks are actions,
@@ -124,9 +130,12 @@ object ExtractToWarehouseJob {
         cfg.req("fact_table"), Seq("tms_id", "time", "fgt"))
     } finally if (lakeDir.nonEmpty) facts.unpersist()
     // T5 run bookkeeping (ref :90-97)
-    JdbcUpsert.maintainRuns(spark, MikeJobs.runMeta(wide, dim, simTag, model,
+    JdbcUpsert.maintainRuns(MikeJobs.runMeta(wide, dim, simTag, model,
       variable, unit), url, cfg.str("run_table", "run"), fgt)
-    val missing = unmatched.collect().map(_.getString(0)).toSeq
+    // the unmatched branch from the schema: what the facts' anti-join finds,
+    // without running the CSV -> unpivot -> join plan a second time
+    val known = LocalDim.column(dim, "station").toSet
+    val missing = MikeJobs.stationColumns(wide).filterNot(known)
     // ref behavior: log stations absent from the dim (extract_water_level.py:103-104)
     missing.foreach(m => System.err.println(s"[extract] station not in dim: $m"))
     (n, missing)

@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   * Each builder is a pure plan function — no side effects, no collects — so Catalyst
   * sees the whole tree: the reference's 22-iteration join loop and 114-catchment
   * nested merge loop each collapse into one shuffle
-  * (ref: inputs/gen_mike_input_rf_linux.py:155-162,180-202).
+  * (ref: inputs/gen_mike_input_rf_linux.py:155-162,180-202). The plan functions
+  * still do no collects: the job layer collects each dim once (`LocalDim`) and
+  * passes in the local frame and what a plan needs from it on the driver —
+  * pivot keys, column orders — so every output plan runs exactly once.
   */
 object MikeJobs {
 
@@ -17,10 +20,12 @@ object MikeJobs {
     * series:  (obs_id, time, value)   raw 5-min observations
     * coeffs:  (name, obs_id, coefficient)  204-row dim -> broadcast
     * Steps: cleanse negatives (P3) -> right-closed 15-min resample (A1) -> row-mean
-    * impute (W4) -> weighted catchment fold (A3) -> pivot wide (R1). */
+    * impute (W4) -> weighted catchment fold (A3) -> pivot wide (R1).
+    * `catchments` are the output columns: the coefficient table's names in
+    * `sparkOrder`. */
   def rainfallInput(spark: SparkSession, series: DataFrame, coeffs: DataFrame,
                     startTs: String, endTs: String,
-                    catchments: Seq[String] = Nil): DataFrame = {
+                    catchments: Seq[String]): DataFrame = {
     val spine = timeSpine(spark, startTs, endTs, 15)
     val clean = cleanseNegatives(series, "value")
     val res = resampleSum(clean, "time", 900L, Seq("obs_id"), "value")
@@ -37,8 +42,9 @@ object MikeJobs {
 
   /** 3.2 extract-to-warehouse: wide MIKE result matrix -> long fact rows with
     * deterministic series ids and fgt versioning, plus the unmatched-station branch
-    * (anti-join) the reference logs (ref: outputs/extract_water_level.py:103-104).
-    * Returns (facts, unmatched). */
+    * the reference logs (ref: outputs/extract_water_level.py:103-104): the wide
+    * frame's station COLUMNS the dim does not name, so finding them reads the dim
+    * only, never the facts. Returns (facts, unmatched). */
   def extractToWarehouse(wide: DataFrame, stationDim: DataFrame, fgt: String,
                          simTag: String, model: String, variable: String,
                          unit: String): (DataFrame, DataFrame) = {
@@ -50,10 +56,16 @@ object MikeJobs {
         lit(unit), col("station_id")))
       .withColumn("fgt", lit(fgt).cast("timestamp_ntz"))
       .select(col("tms_id"), col("time"), col("fgt"), col("value"))
-    val unmatched = joined.filter(col("station_id").isNull)
-      .select(col("station")).distinct()
+    val spark = wide.sparkSession
+    import spark.implicits._
+    val unmatched = stationColumns(wide).toDF("station")
+      .join(stationDim.select(col("station")), Seq("station"), "left_anti")
     (matched, unmatched)
   }
+
+  /** The station columns of a wide MIKE result — its driver-known schema. */
+  def stationColumns(wide: DataFrame): Seq[String] =
+    wide.columns.filterNot(_ == "time").toSeq
 
   /** T5: run-dimension rows for the series this extract touches — one row per
     * matched station, carrying the same deterministic tms_id as the facts plus the
@@ -62,8 +74,7 @@ object MikeJobs {
     * schema), so building this frame scans no data at all. */
   def runMeta(wide: DataFrame, stationDim: DataFrame, simTag: String, model: String,
               variable: String, unit: String): DataFrame = {
-    val stationCols = wide.columns.filterNot(_ == "time").toSeq
-    stationDim.filter(col("station").isin(stationCols: _*))
+    stationDim.filter(col("station").isin(stationColumns(wide): _*))
       .select(
         seriesId(lit(simTag), lit(model), lit(variable), lit(unit),
           col("station_id")).as("tms_id"),
@@ -82,9 +93,10 @@ object MikeJobs {
     * (ref: :257-294). The k-NN map is computed once from the tiny station dim
     * (broadcast); every fill is a column-level coalesce — no iterative driver loops.
     *
-    * stations: (obs_id, station_name, latitude, longitude). */
+    * stations: (obs_id, station_name, latitude, longitude); `stationNames` are the
+    * output columns: its names in `sparkOrder`. */
   def rawRainfallInput(spark: SparkSession, series: DataFrame, stations: DataFrame,
-                       startTs: String, endTs: String,
+                       startTs: String, endTs: String, stationNames: Seq[String],
                        k: Int = 3, maxKm: Double = 100.0): DataFrame = {
     // faithful ordering (ref :268-277): raw -> dense 5-min spine (gaps -> NaN) ->
     // 15-min right-closed resample where an all-NaN bucket sums to 0.0 (the pandas
@@ -111,7 +123,7 @@ object MikeJobs {
     val named = imputed.join(broadcast(
         stations.select(col("obs_id"), col("station_name"))), "obs_id")
     pivotWide(named.withColumn("value", round(col("value"), 1)),
-      "time", "station_name", "value")
+      "time", "station_name", "value", stationNames)
   }
 
   /** 3.3 discharge/tide input: single long series -> spine-aligned, sentinel-cleansed,
@@ -165,12 +177,12 @@ object MikeJobs {
     * stations keep full precision) -> station_id -> station_name rename via the
     * dim (J5, ref :174-175) -> pivot wide (R1).
     *
-    * `stationOrder` pins the reference's column order (stations-CSV row order);
-    * empty = Spark's sorted pivot keys. The gap-flag window partitions by
-    * station — dim-scale cardinality, not data-scale. */
+    * `stationOrder` pins the reference's column order (stations-CSV row order).
+    * The gap-flag window partitions by station — dim-scale cardinality, not
+    * data-scale. */
   def obsRainfallInput(spark: SparkSession, series: DataFrame, stations: DataFrame,
-                       startTs: String, endTs: String, stepMinutes: Int = 15,
-                       stationOrder: Seq[String] = Nil): DataFrame = {
+                       startTs: String, endTs: String, stepMinutes: Int,
+                       stationOrder: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spine = timeSpine(spark, startTs, endTs, stepMinutes)
     val res = resampleSum(series, "time", stepMinutes * 60L, Seq("hash_id"), "value",

@@ -71,19 +71,12 @@ object ObsRainfallInputJob {
     val outPath = opt("output_dir").getOrElse(".") + "/" +
       opt("output_file_name").getOrElse(defaultFileName(start, end, step))
     Maintenance.runIdempotent(outPath) {
-      val stations = MikeCsv.readDimCsv(spark,
-        cfg.req("stations_csv"), stationSchema)
+      val stationsCsv = cfg.req("stations_csv")
+      val stations = LocalDim(
+        MikeCsv.readDimCsv(spark, stationsCsv, stationSchema), stationsCsv)
       // column order = stations-CSV row order, like the reference's insertion-
-      // ordered station_dict merge loop (dim-scale collect). limit(n+1)-guarded
-      // like the other driver-side scalars: a mis-pointed config (series file
-      // as stations_csv) must fail loudly, not OOM the driver
-      val order = {
-        val rows = stations.select(col("station_name")).limit(10001).collect()
-        require(rows.length <= 10000,
-          s"stations_csv has > 10000 rows — expected a dim-scale station list; " +
-            s"is a series file pointed at stations_csv?")
-        rows.map(_.getString(0)).toSeq
-      }
+      // ordered station_dict merge loop
+      val order = LocalDim.column(stations, "station_name")
       // readings contributing to right-closed buckets labeled in [start, end]
       val series = spark.read.parquet(cfg.req("series_path"))
         .filter(col("time") > lit(start).cast("timestamp_ntz") -

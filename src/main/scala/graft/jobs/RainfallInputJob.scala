@@ -1,13 +1,15 @@
 package graft.jobs
 
 import graft.io.MikeCsv
+import graft.ops.TimeSeriesOps.sparkOrder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** CLI for the rainfall-input pipeline (SURVEY.md §3.1) — the engine's equivalent of
   * `inputs/gen_mike_input_rf_linux.py`: config JSON + `-s/-e` window args, timestamp
-  * validation (P9), idempotence gate (S13), then ONE lazy Spark plan and a
+  * validation (P9), idempotence gate (S13), the coefficient table read once on
+  * the driver (it names the output columns), then ONE lazy Spark plan and a
   * single-ordered-file wide CSV sink (S9).
   *
   * Config JSON (flat, string-valued like the reference's
@@ -60,9 +62,11 @@ object RainfallInputJob {
       val series = spark.read.parquet(seriesPath)
         .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
           col("time") <= lit(end).cast("timestamp_ntz"))
-      val coeffs = MikeCsv.readDimCsv(spark, coeffsCsv, coeffSchema)
-        .withColumnRenamed("curw_obs_id", "obs_id")
-      val wide = MikeJobs.rainfallInput(spark, series, coeffs, start, end)
+      val coeffs = LocalDim(MikeCsv.readDimCsv(spark, coeffsCsv, coeffSchema)
+        .withColumnRenamed("curw_obs_id", "obs_id"), coeffsCsv)
+      val catchments = sparkOrder(LocalDim.column(coeffs, "name"))
+      val wide = MikeJobs.rainfallInput(spark, series, coeffs, start, end,
+        catchments)
       MikeCsv.writeWideCsv(wide, outputPath)
     }
   }

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.io.MikeCsv
+import graft.ops.TimeSeriesOps.sparkOrder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,7 +9,8 @@ import org.apache.spark.sql.types._
 /** CLI for the raw-rainfall (all-stations) input pipeline (SURVEY.md §3.3) — the
   * engine's `inputs/gen_mike_input_rf_linux_all_stations_raw.py`: per-station
   * 15-min resample with the pandas zero-quirk, k-NN neighbor gap-fill cascade,
-  * row-mean impute, station-name pivot, single ordered wide CSV.
+  * row-mean impute, station-name pivot over the active stations (read once on
+  * the driver), single ordered wide CSV.
   *
   * Config JSON:
   * {
@@ -46,11 +48,13 @@ object RawRainfallInputJob {
       val series = spark.read.parquet(cfg.req("series_path"))
         .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
           col("time") <= lit(end).cast("timestamp_ntz"))
-      val stations = MikeCsv.readDimCsv(spark,
-        cfg.req("stations_csv"), stationSchema)
-      val active = stations.join(
-        series.select(col("obs_id")).distinct(), Seq("obs_id"), "left_semi")
-      val wide = MikeJobs.rawRainfallInput(spark, series, active, start, end)
+      val stationsCsv = cfg.req("stations_csv")
+      val stations = MikeCsv.readDimCsv(spark, stationsCsv, stationSchema)
+      val active = LocalDim(stations.join(
+        series.select(col("obs_id")).distinct(), Seq("obs_id"), "left_semi"),
+        stationsCsv)
+      val names = sparkOrder(LocalDim.column(active, "station_name"))
+      val wide = MikeJobs.rawRainfallInput(spark, series, active, start, end, names)
       MikeCsv.writeWideCsv(wide, outputPath)
     }
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Core keyed, versioned time-series operators.
   *
@@ -120,16 +121,24 @@ object TimeSeriesOps {
       .agg(sum(col(weightCol) * col(valueCol)).as(outCol))
 
   /** R1: long -> wide pivot (`time × station` matrix for MIKE interchange).
-    * ref: inputs/gen_mike_input_rf_linux.py:155-162 (loop-of-joins). Passing explicit
-    * `keys` avoids the extra distinct-keys job and keeps column order deterministic —
-    * required for the single-file CSV contract (SURVEY.md §7.4.8).
+    * ref: inputs/gen_mike_input_rf_linux.py:155-162 (loop-of-joins). `keys` are
+    * required and are the output's column order — the single-file CSV contract
+    * needs a deterministic one (SURVEY.md §7.4.8). Callers read them from the dim
+    * on the driver: letting Spark infer them would run the whole upstream plan a
+    * second time just to collect its distinct keys. Pass them through
+    * `sparkOrder` for the layout Spark's own `pivot(col)` would give.
     */
   def pivotWide(long: DataFrame, timeCol: String, keyCol: String, valueCol: String,
-                keys: Seq[String] = Nil): DataFrame = {
-    val g = long.groupBy(col(timeCol))
-    val p = if (keys.nonEmpty) g.pivot(keyCol, keys) else g.pivot(keyCol)
-    p.agg(first(col(valueCol)))
-  }
+                keys: Seq[String]): DataFrame =
+    long.groupBy(col(timeCol)).pivot(keyCol, keys).agg(first(col(valueCol)))
+
+  /** The distinct `keys` in the order Spark's `pivot(col)` infers them: nulls
+    * first, then `UTF8String` byte order — UTF-8, which is not
+    * `String.compareTo`'s UTF-16 order once a key holds a character above
+    * U+FFFF (a surrogate pair sorts below U+E000..U+FFFF in UTF-16 only). */
+  def sparkOrder(keys: Seq[String]): Seq[String] =
+    keys.distinct.sortBy(k => Option(k).map(UTF8String.fromString))(
+      Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)))
 
   /** R2: wide -> long unpivot for warehouse insert.
     * ref: outputs/extract_water_level.py:75-78 (per-column loop).

@@ -59,6 +59,30 @@ class IoJobsSpec extends SparkSpec {
     assert(out.toSeq == Seq(1.0, 20.0, 3.0))
   }
 
+  test("generic upsert batches the UPDATEs, then INSERTs the rows no UPDATE " +
+    "matched") {
+    val url = "jdbc:derby:memory:batchupsert;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      st.execute("""CREATE TABLE facts (tms_id VARCHAR(64) NOT NULL, t INT NOT NULL,
+                   |  v DOUBLE, PRIMARY KEY (tms_id, t))""".stripMargin)
+      st.execute("INSERT INTO facts VALUES ('a', 1, 1.0), ('a', 3, 3.0), " +
+        "('a', 5, 5.0), ('b', 1, 7.0)")
+    } finally conn.close()
+    // one partition of 5 rows at batchSize 2: batches of 2, 2 and 1 rows, each
+    // mixing updated and inserted keys
+    val df = (1 to 5).map(t => ("a", t, 10.0 * t)).toDF("tms_id", "t", "v")
+      .coalesce(1)
+    assert(JdbcUpsert.upsert(df, url, "facts", Seq("tms_id", "t"),
+      batchSize = 2) == 5L)
+    val out = spark.read.format("jdbc").option("url", url)
+      .option("dbtable", "facts").load()
+      .as[(String, Int, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(out == Seq(("a", 1, 10.0), ("a", 2, 20.0), ("a", 3, 30.0),
+      ("a", 4, 40.0), ("a", 5, 50.0), ("b", 1, 7.0)))
+  }
+
   test("getOrCreateDim: insert-if-missing, stable ids, re-run no-op (S12/J7)") {
     val url = "jdbc:derby:memory:dimgc;create=true"
     val conn = java.sql.DriverManager.getConnection(url)

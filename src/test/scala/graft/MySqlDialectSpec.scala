@@ -149,6 +149,49 @@ object MiniMysql {
   }
 }
 
+/** A driver for `jdbc:noinfo:` URLs whose batches answer every statement with
+  * `Statement.SUCCESS_NO_INFO`, as the JDBC spec lets a driver do: it takes any
+  * statement text and stores nothing. */
+object NoInfoDriver extends Driver {
+  private def proxy[A](cls: Class[A])(f: (String, Array[AnyRef]) => AnyRef): A =
+    Proxy.newProxyInstance(cls.getClassLoader, Array(cls), new InvocationHandler {
+      def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = f(m.getName, args)
+    }).asInstanceOf[A]
+
+  private def statement(): PreparedStatement = {
+    var batched = 0
+    proxy(classOf[PreparedStatement]) {
+      case ("addBatch", _) => batched += 1; null
+      case ("executeBatch", _) =>
+        val res = Array.fill(batched)(java.sql.Statement.SUCCESS_NO_INFO)
+        batched = 0; res
+      case ("setObject" | "clearParameters" | "close", _) => null
+      case (other, _) => sys.error(s"NoInfoDriver PreparedStatement.$other unsupported")
+    }
+  }
+
+  override def connect(url: String, info: java.util.Properties): Connection =
+    if (!acceptsURL(url)) null
+    else proxy(classOf[Connection]) {
+      case ("prepareStatement", _) => statement()
+      case ("setAutoCommit" | "commit" | "rollback" | "close", _) => null
+      case (other, _) => sys.error(s"NoInfoDriver Connection.$other unsupported")
+    }
+  override def acceptsURL(url: String): Boolean = url.startsWith("jdbc:noinfo:")
+  override def getPropertyInfo(url: String, info: java.util.Properties) =
+    Array.empty[java.sql.DriverPropertyInfo]
+  override def getMajorVersion: Int = 1
+  override def getMinorVersion: Int = 0
+  override def jdbcCompliant(): Boolean = false
+  override def getParentLogger: java.util.logging.Logger =
+    throw new java.sql.SQLFeatureNotSupportedException()
+
+  @volatile private var registered = false
+  def register(): Unit = synchronized {
+    if (!registered) { DriverManager.registerDriver(this); registered = true }
+  }
+}
+
 class MySqlDialectSpec extends SparkSpec {
   import spark.implicits._
 
@@ -219,5 +262,15 @@ class MySqlDialectSpec extends SparkSpec {
       }
     assert(MiniMysql.tableRows("curw", "runs").map(_.head).toSet ==
       Set("a", "b"))
+  }
+
+  test("the UPDATE-then-INSERT path fails naming the table when the driver " +
+    "gives no update counts") {
+    NoInfoDriver.register()
+    val df = Seq(("a", 1, 1.0)).toDF("tms_id", "t", "v").coalesce(1)
+    val e = intercept[org.apache.spark.SparkException](
+      JdbcUpsert.upsert(df, "jdbc:noinfo:warehouse", "facts", Seq("tms_id", "t")))
+    assert(e.getMessage.contains("facts: the JDBC driver gave no update count"),
+      e.getMessage)
   }
 }

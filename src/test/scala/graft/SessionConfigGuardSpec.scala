@@ -6,12 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps six invariants from drifting back: `GraftSession` is the only place
+/** Keeps seven invariants from drifting back: `GraftSession` is the only place
   * that builds a SparkSession, no CLI job reads its config through Spark
   * (`JobConfig` parses it on the driver), the only mains are the CLI jobs and
   * three tools, no env var is read outside `GraftSession` and `Bench`, every
-  * curation-job config key is set by some test, and concurrent Spark actions
-  * go through `Concurrent` rather than the global ExecutionContext. */
+  * curation-job config key is set by some test, every pivot names its values,
+  * and concurrent Spark actions go through `Concurrent` rather than the global
+  * ExecutionContext. */
 class SessionConfigGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -79,6 +80,21 @@ class SessionConfigGuardSpec extends AnyFunSuite {
     }
     assert(unset.isEmpty,
       s"config keys no test sets — inline them as constants: $unset")
+  }
+
+  test("every pivot names its values") {
+    // `pivot(col)` alone infers its values by running the whole upstream plan
+    // once more; the values come from a dim instead (TimeSeriesOps.sparkOrder)
+    val oneArg = """\.pivot\((?:[^(),]|\([^()]*\))*\)""".r
+    val files = Files.walk(main)
+    val offenders = try files.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        val src = Files.readString(f)
+        oneArg.findAllMatchIn(src).map(m =>
+          s"${main.relativize(f)}:${src.take(m.start).count(_ == '\n') + 1}")
+      }
+    finally files.close()
+    assert(offenders.isEmpty, s"pass the pivot values: $offenders")
   }
 
   test("no Spark action runs on the global ExecutionContext") {

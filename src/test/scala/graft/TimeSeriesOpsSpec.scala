@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+
+import graft.jobs.{RainfallInputJob, RawRainfallInputJob}
 import graft.ops.TimeSeriesOps._
 import org.apache.spark.sql.functions._
 
@@ -108,5 +111,53 @@ class TimeSeriesOpsSpec extends SparkSpec {
       .filter($"station" === "s1").orderBy($"time")
       .select($"value").as[Double].collect()
     assert(out.toSeq == Seq(7.0, 5.0)) // t1 from n1; t2 falls through to n2
+  }
+
+  test("sparkOrder: keys sorted on the driver give the columns Spark's own " +
+    "inferred pivot gives, where UTF-16 and UTF-8 orders disagree") {
+    // U+FF01 sorts after a surrogate pair in UTF-16, before it in UTF-8
+    val keys = Seq("😀a", "！a", "b", null, "a", "！a")
+    assert(keys.distinct.filter(_ != null).sorted == Seq("a", "b", "😀a", "！a"))
+    assert(sparkOrder(keys) == Seq(null, "a", "b", "！a", "😀a"))
+    val long = keys.zipWithIndex.map { case (k, i) => ("t1", k, i.toDouble) }
+      .toDF("time", "station", "value")
+    val inferred = long.groupBy($"time").pivot("station").agg(first($"value"))
+    val named = pivotWide(long, "time", "station", "value", sparkOrder(keys))
+    assert(named.columns.toSeq == inferred.columns.toSeq)
+    assert(named.collect().toSeq == inferred.collect().toSeq)
+  }
+
+  test("a pivot-key dim of more than 10,000 rows fails naming its file") {
+    val dir = Files.createTempDirectory("bigdim")
+    Seq((101, java.time.LocalDateTime.parse("2024-01-01T00:05:00"), 1.0))
+      .toDF("obs_id", "time", "value").write.parquet(s"$dir/series")
+    val coeffs = dir.resolve("coefficients.csv")
+    Files.writeString(coeffs, ("name,curw_obs_id,coefficient" +:
+      (0 to 10000).map(i => s"C_$i,101,1.0")).mkString("\n"))
+    Files.writeString(dir.resolve("cfg.json"),
+      s"""{"series_path": "$dir/series", "coefficients_csv": "$coeffs",
+         | "output_path": "$dir/out"}""".stripMargin)
+    val e = intercept[IllegalArgumentException](RainfallInputJob.run(spark,
+      s"$dir/cfg.json", "2024-01-01 00:00:00", "2024-01-01 00:30:00"))
+    assert(e.getMessage.contains(s"$coeffs has more than 10000 rows"), e.getMessage)
+    assert(!Files.exists(dir.resolve("out")))
+  }
+
+  test("raw rainfall over a window no station reported in writes a " +
+    "header-only file") {
+    val dir = Files.createTempDirectory("rawempty")
+    Seq((1, java.time.LocalDateTime.parse("2024-01-02T00:05:00"), 1.0))
+      .toDF("obs_id", "time", "value").write.parquet(s"$dir/series")
+    Files.writeString(dir.resolve("stations.csv"), "obs_id,station_name,latitude," +
+      "longitude\n1,StA,6.90,79.90\n2,StB,7.00,79.90\n")
+    Files.writeString(dir.resolve("cfg.json"),
+      s"""{"series_path": "$dir/series", "stations_csv": "$dir/stations.csv",
+         | "output_path": "$dir/out"}""".stripMargin)
+    assert(RawRainfallInputJob.run(spark, s"$dir/cfg.json",
+      "2024-01-01 00:00:00", "2024-01-01 00:30:00"))
+    val parts = new java.io.File(s"$dir/out").listFiles
+      .filter(_.getName.endsWith(".csv"))
+    assert(parts.length == 1)
+    assert(Files.readString(parts.head.toPath) == "time\n")
   }
 }
