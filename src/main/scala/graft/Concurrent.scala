@@ -20,8 +20,10 @@ import org.apache.spark.sql.execution.SQLExecution
   * A tag rather than a job group, so the caller's group stays its own. */
 object Concurrent {
 
-  /** Runs `thunks` concurrently; their results, in order. */
+  /** Runs `thunks` concurrently; their results, in order. No thunks: `Nil`,
+    * without a pool. */
   def all[A](spark: SparkSession)(thunks: (() => A)*): Seq[A] = {
+    if (thunks.isEmpty) return Nil
     val sc = spark.sparkContext
     val tag = s"graft-concurrent-${UUID.randomUUID}"
     val pool = Executors.newFixedThreadPool(thunks.size, (r: Runnable) => {

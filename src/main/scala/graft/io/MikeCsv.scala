@@ -1,5 +1,9 @@
 package graft.io
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,15 +28,44 @@ object MikeCsv {
 
   /** S2: read a wide MIKE result matrix — first column is the time stamp, every other
     * column a station (double). Header row defines the station set dynamically,
-    * exactly like the reference's first-row-as-columns load (SURVEY.md §1.3). */
+    * exactly like the reference's first-row-as-columns load (SURVEY.md §1.3).
+    * The header is read on the driver and parsed by Spark's own CSV parser, so
+    * the read starts no Spark job of its own. */
   def readWideCsv(spark: SparkSession, path: String,
                   timeCol: String = "time"): DataFrame = {
-    val raw = spark.read.option("header", true).csv(path)
-    val srcTime = raw.columns.head
-    val stations = raw.columns.tail
+    import spark.implicits._
+    // a one-line local Dataset: Spark names the columns (quotes, duplicates,
+    // blanks) as for a file, without a job
+    val names = spark.read.option("header", true)
+      .csv(Seq(headerLine(spark, path)).toDS()).columns
+    val raw = spark.read.option("header", true)
+      .schema(StructType(names.map(StructField(_, StringType)))).csv(path)
+    val srcTime = names.head
+    val stations = names.tail
     raw.select(
       to_timestamp(col(srcTime), TimeFmt).cast("timestamp_ntz").as(timeCol) +:
         stations.map(s => col(s).cast(DoubleType).as(s)): _*)
+  }
+
+  /** The first non-blank line of `path`, or of the first file in name order in
+    * it when it is a directory (`_`- and `.`-prefixed files are skipped, as
+    * Spark's file listing skips them). A leading UTF-8 byte order mark is
+    * dropped, as Hadoop's line reader drops it. */
+  private def headerLine(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file = if (fs.getFileStatus(p).isFile) p else
+      fs.listStatus(p).filter(_.isFile).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(s"no data file in $path"))
+    val in = new BufferedReader(new InputStreamReader(fs.open(file), UTF_8))
+    try {
+      in.mark(1)
+      if (in.read() != '\uFEFF') in.reset()
+      Iterator.continually(in.readLine()).takeWhile(_ != null).find(_.trim.nonEmpty)
+        .getOrElse(throw new IllegalArgumentException(s"no header line in $file"))
+    } finally in.close()
   }
 
   /** S1: plain header CSV with an explicit schema (dims / coefficient tables). */

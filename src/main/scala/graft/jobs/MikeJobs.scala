@@ -97,7 +97,7 @@ object MikeJobs {
     * output columns: its names in `sparkOrder`. */
   def rawRainfallInput(spark: SparkSession, series: DataFrame, stations: DataFrame,
                        startTs: String, endTs: String, stationNames: Seq[String],
-                       k: Int = 3, maxKm: Double = 100.0): DataFrame = {
+                       maxKm: Double = 100.0): DataFrame = {
     // faithful ordering (ref :268-277): raw -> dense 5-min spine (gaps -> NaN) ->
     // 15-min right-closed resample where an all-NaN bucket sums to 0.0 (the pandas
     // 0.25 quirk — missing data reads as ZERO rain) -> negatives -> NaN. Only the

@@ -8,10 +8,14 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 
 /** The reference's top-level cron entry (`inputs/prep_mike_inputs.sh:33-47`)
-  * re-expressed as ONE job: all four input generators run in a single shared
-  * Spark session (one JVM, shared parquet footer/codegen caches) with the
-  * script's per-step isolation — a failing generator logs and the rest still run
-  * (the shell ran each with `>> log 2>&1`, never aborting the tick).
+  * re-expressed as ONE job: the four input generators run in a single shared
+  * Spark session (one JVM, shared parquet footer/codegen caches), concurrently,
+  * one `graft.Concurrent.all` thunk per configured step. The reference ran them
+  * one after another; they share no input or output, and their KB-sized jobs of
+  * 1–2 tasks each leave most cores idle when they take turns. The script's
+  * per-step isolation is kept: each thunk wraps its step in `Try`, so a failing
+  * generator logs and the rest still run to the end (the shell ran each with
+  * `>> log 2>&1`, never aborting the tick).
   *
   * Config JSON (paths to the per-generator configs; absent key = step skipped):
   * {
@@ -44,9 +48,10 @@ object PrepMikeInputsJob {
     } finally spark.stop()
   }
 
-  /** Runs every configured generator; returns (step, succeeded, error). A step
-    * failure never stops the remaining steps (reference behavior). A window
-    * off the 15-minute grid (P9) throws before any step runs. */
+  /** Runs every configured generator concurrently; returns (step, succeeded,
+    * error) in config order. A step failure never stops the other steps
+    * (reference behavior). A window off the 15-minute grid (P9) throws before
+    * any step runs. */
   def run(spark: SparkSession, cfgPath: String, start: String,
           end: String): Seq[(String, Boolean, Option[String])] = {
     RainfallInputJob.validateWindowTs(start)
@@ -57,16 +62,16 @@ object PrepMikeInputsJob {
       "discharge" -> ((p: String) => DischargeInputJob.run(spark, p, start, end): Unit),
       "tide" -> ((p: String) => TideInputJob.run(spark, p, start, end): Unit),
       "raw_rainfall" -> ((p: String) => RawRainfallInputJob.run(spark, p, start, end): Unit))
-    steps.flatMap { case (name, f) =>
-      cfg.opt(s"${name}_config").map { p =>
-        Try(f(p)) match {
-          case Success(_) => (name, true, None)
-          case Failure(e) =>
-            // ref isolation: log and continue (prep_mike_inputs.sh per-step logs)
-            System.err.println(s"[prep] $name failed: ${e.getMessage}")
-            (name, false, Option(e.getMessage))
-        }
-      }
+    val configured = steps.flatMap { case (name, f) =>
+      cfg.opt(s"${name}_config").map(p => name -> (() => Try(f(p))))
+    }
+    val outcomes = graft.Concurrent.all(spark)(configured.map(_._2): _*)
+    configured.map(_._1).zip(outcomes).map {
+      case (name, Success(_)) => (name, true, None)
+      case (name, Failure(e)) =>
+        // ref isolation: log and continue (prep_mike_inputs.sh per-step logs)
+        System.err.println(s"[prep] $name failed: ${e.getMessage}")
+        (name, false, Option(e.getMessage))
     }
   }
 }

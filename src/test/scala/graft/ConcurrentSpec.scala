@@ -31,6 +31,10 @@ class ConcurrentSpec extends SparkSpec {
     } finally sc.setJobDescription(null)
   }
 
+  test("Concurrent.all: no thunks, no pool") {
+    assert(Concurrent.all[Int](spark)() == Nil)
+  }
+
   test("Concurrent.all: a failing thunk cancels its sibling's running job " +
     "and is rethrown only after the sibling has ended") {
     val sc = spark.sparkContext

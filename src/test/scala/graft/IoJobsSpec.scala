@@ -30,6 +30,38 @@ class IoJobsSpec extends SparkSpec {
     assert(row2.getDouble(1) == 3.0 && row2.isNullAt(2)) // empty cell -> null
   }
 
+  test("readWideCsv: the header read on the driver names the columns as " +
+    "Spark's own header inference does") {
+    // the reader as it was, with a Spark job for the header line
+    def inferred(path: String) = {
+      val raw = spark.read.option("header", true).csv(path)
+      raw.select(to_timestamp(col(raw.columns.head), MikeCsv.TimeFmt)
+        .cast("timestamp_ntz").as("time") +:
+        raw.columns.tail.map(s => col(s).cast("double").as(s)): _*)
+    }
+    def sameAsInferred(path: String): Seq[String] = {
+      val (got, want) = (MikeCsv.readWideCsv(spark, path), inferred(path))
+      assert(got.schema == want.schema)
+      assert(got.collect().toSeq == want.collect().toSeq)
+      got.columns.toSeq
+    }
+    val dir = tmpDir("wideheader")
+    // a sink directory (part file beside _SUCCESS and .crc files), with a
+    // station name the header must quote
+    val wide = Seq(("2024-01-01 00:00:00", 1.5, 2.5), ("2024-01-01 00:15:00", 3.0, 4.0))
+      .toDF("s", "Kelani, Hanwella", "StB")
+      .select(to_timestamp($"s").cast("timestamp_ntz").as("time"),
+        $"`Kelani, Hanwella`", $"StB")
+    MikeCsv.writeWideCsv(wide, s"$dir/out")
+    assert(sameAsInferred(s"$dir/out") == Seq("time", "Kelani, Hanwella", "StB"))
+    // one file: a byte order mark, a blank first line, a quoted comma-bearing
+    // name and a duplicate name
+    val one = java.nio.file.Paths.get(dir, "res.csv")
+    Files.writeString(one, "\uFEFF\nTime Stamp,\"St, A\",StB,StB\n" +
+      "2024-01-01 00:00:00,1.0,2.0,3.0\n2024-01-01 00:15:00,,5.0,6.0\n")
+    assert(sameAsInferred(one.toString) == Seq("time", "St, A", "StB2", "StB3"))
+  }
+
   test("headerless series round-trip") {
     val s = Seq(("2024-01-01 00:00:00", 0.06), ("2024-01-01 00:15:00", 49.01))
       .toDF("ts", "value")

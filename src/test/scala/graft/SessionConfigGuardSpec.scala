@@ -6,13 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps seven invariants from drifting back: `GraftSession` is the only place
+/** Keeps eight invariants from drifting back: `GraftSession` is the only place
   * that builds a SparkSession, no CLI job reads its config through Spark
   * (`JobConfig` parses it on the driver), the only mains are the CLI jobs and
   * three tools, no env var is read outside `GraftSession` and `Bench`, every
   * curation-job config key is set by some test, every pivot names its values,
-  * and concurrent Spark actions go through `Concurrent` rather than the global
-  * ExecutionContext. */
+  * concurrent Spark actions go through `Concurrent` rather than the global
+  * ExecutionContext, and `Concurrent` is the only place that makes threads. */
 class SessionConfigGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -101,5 +101,11 @@ class SessionConfigGuardSpec extends AnyFunSuite {
     val offenders = hits(main, "ExecutionContext.Implicits.global")
     assert(offenders.isEmpty, s"submit concurrent actions through " +
       s"graft.Concurrent: $offenders")
+  }
+
+  test("threads and thread pools are made only in Concurrent") {
+    val offenders = (hits(main, "Executors.") ++ hits(main, "new Thread("))
+      .filterNot(_.startsWith("graft/Concurrent.scala:"))
+    assert(offenders.isEmpty, s"run concurrent work through graft.Concurrent: $offenders")
   }
 }

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
 import graft.jobs.{ExtractToWarehouseJob, TideInputJob}
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class WarehouseJobSpec extends SparkSpec {
@@ -191,21 +195,58 @@ class WarehouseJobSpec extends SparkSpec {
       .toDF("s", "value")
       .select(to_timestamp($"s").cast("timestamp_ntz").as("time"), $"value")
       .write.parquet(s"$dir/series")
+    Seq((1, "2024-01-01 00:05:00", 1.0), (2, "2024-01-01 00:10:00", 2.0))
+      .toDF("obs_id", "s", "value")
+      .select($"obs_id", to_timestamp($"s").cast("timestamp_ntz").as("time"), $"value")
+      .write.parquet(s"$dir/raw_series")
+    Files.writeString(dir.resolve("raw_stations.csv"),
+      "obs_id,station_name,latitude,longitude\n1,StA,6.90,79.90\n2,StB,7.00,79.90\n")
+    Files.writeString(dir.resolve("coefficients.csv"),
+      "name,curw_obs_id,coefficient\nC1,1,1.0\n")
     Files.writeString(dir.resolve("tide.json"),
       s"""{"series_path": "$dir/series", "output_path": "$dir/tide_out"}""")
     Files.writeString(dir.resolve("dis.json"),
       s"""{"series_path": "$dir/series", "output_path": "$dir/dis_out"}""")
-    // rainfall step points at a MISSING config -> must fail without stopping others
-    Files.writeString(dir.resolve("prep.json"),
-      s"""{"rainfall_config": "$dir/nope.json", "tide_config": "$dir/tide.json",
-         | "discharge_config": "$dir/dis.json"}""".stripMargin)
-    val status = graft.jobs.PrepMikeInputsJob.run(spark, s"$dir/prep.json",
-      "2024-01-01 00:00:00", "2024-01-01 00:15:00")
-      .map(s => s._1 -> s._2).toMap
-    // raw_rainfall unconfigured -> skipped entirely; rainfall failed; rest ran
-    assert(status == Map("rainfall" -> false, "tide" -> true, "discharge" -> true))
-    assert(new java.io.File(s"$dir/tide_out").exists)
-    assert(new java.io.File(s"$dir/dis_out").exists)
+    Files.writeString(dir.resolve("raw.json"),
+      s"""{"series_path": "$dir/raw_series", "stations_csv": "$dir/raw_stations.csv",
+         | "output_path": "$dir/raw_out"}""".stripMargin)
+    // rainfall fails inside Spark: its series does not exist
+    Files.writeString(dir.resolve("rain.json"),
+      s"""{"series_path": "$dir/no_series", "coefficients_csv": "$dir/coefficients.csv",
+         | "output_path": "$dir/rain_out"}""".stripMargin)
+    // a MISSING step config fails before Spark; neither stops the others
+    def prep(rainfallConfig: String): Map[String, Boolean] = {
+      Files.writeString(dir.resolve("prep.json"),
+        s"""{"rainfall_config": "$rainfallConfig", "tide_config": "$dir/tide.json",
+           | "discharge_config": "$dir/dis.json",
+           | "raw_rainfall_config": "$dir/raw.json"}""".stripMargin)
+      graft.jobs.PrepMikeInputsJob.run(spark, s"$dir/prep.json",
+        "2024-01-01 00:00:00", "2024-01-01 00:15:00")
+        .map(s => s._1 -> s._2).toMap
+    }
+    val all = Map("rainfall" -> false, "discharge" -> true, "tide" -> true,
+      "raw_rainfall" -> true)
+    val sc = spark.sparkContext
+    // the Concurrent.all tags of each job (Spark adds its own SQL tags)
+    val tags = mutable.ArrayBuffer.empty[Seq[String]]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = tags.synchronized {
+        tags += Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(',')).filter(_.startsWith("graft-concurrent-"))
+      }
+    }
+    TestBus.settle(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(prep(s"$dir/rain.json") == all)
+      TestBus.settle(sc)
+    } finally sc.removeSparkListener(listener)
+    Seq("tide_out", "dis_out", "raw_out").foreach(o =>
+      assert(new java.io.File(s"$dir/$o").exists, o))
+    assert(!new java.io.File(s"$dir/rain_out").exists)
+    // every job of the run carries one and the same Concurrent.all tag
+    assert(tags.nonEmpty && tags.forall(_.size == 1) && tags.distinct.size == 1, tags)
+    assert(prep(s"$dir/nope.json") == all) // the others' gates skip them now
     // an off-quarter window is refused before any step writes (P9)
     Files.writeString(dir.resolve("prep2.json"),
       s"""{"tide_config": "$dir/tide2.json"}""")
@@ -218,6 +259,13 @@ class WarehouseJobSpec extends SparkSpec {
     val (s0, e0) = graft.jobs.PrepMikeInputsJob.defaultWindow(
       java.time.LocalDateTime.parse("2024-06-10T14:37:22"))
     assert(s0 == "2024-06-07 00:00:00" && e0 == "2024-06-12 00:00:00")
+  }
+
+  test("PrepMikeInputsJob: a config that names no step runs nothing") {
+    val dir = Files.createTempDirectory("prepnone")
+    Files.writeString(dir.resolve("prep.json"), """{"unrelated": "x"}""")
+    assert(graft.jobs.PrepMikeInputsJob.run(spark, s"$dir/prep.json",
+      "2024-01-01 00:00:00", "2024-01-01 00:15:00") == Nil)
   }
 
   test("TideInputJob: config -> spine-aligned cleansed patched headerless CSV") {
