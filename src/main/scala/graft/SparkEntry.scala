@@ -2063,7 +2063,7 @@ object SparkEntry {
   }
 
   /** Batch incremental dedup — admission of a new batch against the EXISTING
-    * corpus (the streaming gate's batch twin): exact copies of corpus docs
+    * corpus: exact copies of corpus docs
     * (id + 100000) must be rejected, genuinely novel docs (id + 200000,
     * synthetic unique text) admitted. The candidate join runs incoming ×
     * corpus only — a daily increment never re-dedups the lake. */

@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** THE schema seam for the events table's time column.
   *
@@ -54,21 +54,5 @@ object EventsTs {
   def prepareSession(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-  }
-
-  /** Physical schema of the events files actually present in `dir` — file-source
-    * streams require an explicit schema, and hardcoding one is exactly the
-    * assumption this seam exists to remove. One driver-side footer read; when the
-    * directory holds no events files yet (the poll-a-directory cron shape starts
-    * empty), falls back to the legacy long-ts shape
-    * [[graft.streaming.EventStream.eventSchema]], which `toNanosLong` treats as
-    * already canonical. */
-  def streamSchema(spark: SparkSession, dir: String): StructType = {
-    prepareSession(spark)
-    try spark.read.option("pathGlobFilter", "events*.parquet").parquet(dir).schema
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        graft.streaming.EventStream.eventSchema
-    }
   }
 }

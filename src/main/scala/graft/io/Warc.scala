@@ -149,33 +149,6 @@ object Warc {
     }
   }
 
-  /** Parse an EXPLICIT list of capture files — no glob expansion, no
-    * comma-splitting. `binaryFiles`' path argument is comma-split and then
-    * glob-expanded (Hadoop `setInputPaths` + `GlobPattern`), so a landing
-    * file named `a,b.warc.gz` or carrying `{}[]*?` mis-resolves through it
-    * (r13 advice); here each path is opened EXACTLY as named via the
-    * FileSystem API — the route the streaming watcher uses, whose paths
-    * come from the file-source listing and are already exact. Paths round
-    * through `java.net.URI` when they parse as one (the file source emits
-    * percent-encoded URIs), else are taken verbatim. */
-  def recordsFromPaths(spark: SparkSession, paths: Seq[String],
-                       maxPayloadBytes: Long = DefaultMaxPayloadBytes): Dataset[WarcRecord] = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    if (paths.isEmpty) return spark.emptyDataset[WarcRecord]
-    val bc = sc.broadcast(new SerHadoopConf(sc.hadoopConfiguration))
-    val maxPB = maxPayloadBytes
-    val slices = math.max(1, math.min(paths.size, sc.defaultParallelism))
-    spark.createDataset(sc.parallelize(paths, slices).flatMap { p =>
-      val hp =
-        try new org.apache.hadoop.fs.Path(new java.net.URI(p))
-        catch { case _: Exception => new org.apache.hadoop.fs.Path(p) }
-      val fs = hp.getFileSystem(bc.value.value)
-      val in = fs.open(hp)
-      closeOnExhaust(parseRecords(p, in, maxPB), in)
-    })
-  }
-
   /** WET-style EXPORT sink (r14): re-publish a curated corpus in the
     * interchange format it arrived in — `conversion` records, one gzip
     * MEMBER per record (the Common Crawl member-per-record layout this

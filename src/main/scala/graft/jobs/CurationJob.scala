@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Gopher line-rule quality gate -> near-dup corpus dedup (exact Jaccard,
   * transitive clusters, min-id survivors) -> (optional) exact-substring window
   * scrub -> PII scrub -> deterministic mixture sampling -> (optional) DSIR
-  * importance resample -> partitioned parquet, with a per-stage audit line. Batch analog of the `DedupStream` admission path; the
+  * importance resample -> partitioned parquet, with a per-stage audit line; the
   * reference's job layer (config JSON + CLI + S13 idempotence gate) applied to
   * the beyond-reference operator surface.
   *
@@ -921,10 +921,9 @@ object CurationJob {
     // twin of 5b3's BM25 table, closing the serving stack at the job
     // level): built over the embedding sidecar SEMI-JOINED to exactly what
     // was written, saved cell-partitioned (probes prune at the file
-    // index); day-two ivfPqAdd/ivfPqRemove ticks maintain it under the
-    // frozen-quantizer contract (AnnServeStream.maintain is the streaming
-    // driver). Trained quantizers (iters=2/refineIters=2, not the
-    // oracle's seed pick); the PQ budget is the operator's default (see the
+    // index); day-two ivfPqAdd/ivfPqRemove calls maintain it under the
+    // frozen-quantizer contract. Trained quantizers (iters=2/refineIters=2,
+    // not the oracle's seed pick); the PQ budget is the operator's default (see the
     // measured recall census in BASELINE.md).
     val ivfPqPath = str("ivfpq_index_path", "")
     val tpEmbPath = str("training_embeddings_path", "")

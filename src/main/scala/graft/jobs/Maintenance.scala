@@ -32,16 +32,30 @@ object Maintenance {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  /** S13: idempotence gate — skip a job tick whose output already exists
-    * (ref: inputs/gen_mike_input_rf_linux.py:271-280). Returns true if the job
-    * should run. */
+  /** Done = `dir/marker` exists: the one commit rule behind both gates. */
+  private def committed(dir: Path, marker: String,
+                        conf: Configuration): Boolean = {
+    val m = new Path(dir, marker)
+    m.getFileSystem(conf).exists(m)
+  }
+
+  /** S13: idempotence gate — skip a job tick whose output is already
+    * committed (ref: inputs/gen_mike_input_rf_linux.py:271-280). A plain
+    * file counts once it exists; a directory (a Spark sink) only once
+    * Spark's `_SUCCESS` is in it. The plan runs lazily inside the write,
+    * which creates the directory first, so a failed write leaves a
+    * marker-less directory that the next tick re-runs over. Returns true
+    * if the job should run. */
   def shouldRun(outputPath: String,
                 conf: Configuration = sessionConf()): Boolean = {
     val p = new Path(outputPath)
-    !p.getFileSystem(conf).exists(p)
+    val fs = p.getFileSystem(conf)
+    !fs.exists(p) ||
+      (fs.getFileStatus(p).isDirectory && !committed(p, "_SUCCESS", conf))
   }
 
-  /** Run `job` only if `outputPath` is absent; returns whether it ran. */
+  /** Run `job` only if `outputPath` is not committed; returns whether it
+    * ran. `job` must overwrite what a failed run left behind. */
   def runIdempotent(outputPath: String,
                     conf: Configuration = sessionConf())
                    (job: => Unit): Boolean =
@@ -51,10 +65,8 @@ object Maintenance {
     * MediaCurationJob): true iff `dir/_DONE` exists — i.e. a PRIOR run wrote
     * every output and then stamped the marker. A marker-less partial dir
     * (crash between output writes) reports false and re-runs. */
-  def markerDone(dir: String, conf: Configuration): Boolean = {
-    val m = new Path(dir, "_DONE")
-    m.getFileSystem(conf).exists(m)
-  }
+  def markerDone(dir: String, conf: Configuration): Boolean =
+    committed(new Path(dir), "_DONE", conf)
 
   /** Stamp `dir/_DONE` — the LAST statement of a gated job's run. Fails if
     * the marker already exists (two racing ticks cannot both claim the

@@ -69,14 +69,6 @@ object Bloom {
       .agg(bit_or(col("__bv")).as("bits"))
   }
 
-  /** Merge two filter frames built with the same geometry: bitwise OR —
-    * yesterday's filter plus today's batch filter = the union set's filter,
-    * nothing rescanned. */
-  def merge(a: DataFrame, b: DataFrame, strata: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((strata.map(col) :+ col("word_idx")): _*)
-      .agg(bit_or(col("bits")).as("bits"))
-
   /** Membership test: `df` plus a `might_contain` boolean — k broadcast
     * joins of the (tiny) filter frame against the probe's k word positions,
     * bit tests via bitwise AND; absent words read as zero; `df` is never

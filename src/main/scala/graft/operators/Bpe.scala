@@ -365,42 +365,19 @@ object Bpe {
 
   /** [[vocab]] over an ALREADY-ENCODED (word, bpe) frame — lets callers
     * that hold `encodeWords` output (one pass) derive ids without
-    * re-encoding. */
-  private[operators] def vocabOf(encodedWords: DataFrame): DataFrame =
-    idsOf(encodedWords.select(explode(col("bpe")).as("token")).distinct())
-
-  /** Dense 1-based ids in token sort order — the ONE id rule every vocab
-    * form shares (so realized and closed vocabs agree on the convention,
-    * and the SQL twins re-derive it with a ROW_NUMBER). The window is
-    * UNPARTITIONED by construction (a global dense order is the contract),
-    * and provably bounded (r18 window audit): every BPE token is a
-    * base-alphabet symbol, `</w>`, or one merge rule's output, so the
-    * input is ≤ |alphabet| + nMerges + 1 rows at ANY corpus size — never a
+    * re-encoding. Ids are dense 1-based in token sort order (the SQL twins
+    * re-derive them with a ROW_NUMBER). The window is UNPARTITIONED by
+    * construction (a global dense order is the contract), and provably
+    * bounded (r18 window audit): every BPE token is a base-alphabet
+    * symbol, `</w>`, or one merge rule's output, so the input is
+    * ≤ |alphabet| + nMerges + 1 rows at ANY corpus size — never a
     * corpus-scale single task. Pinned in PlanAuditSpec's unpartitioned-
     * window sweep. */
-  private def idsOf(tokens: DataFrame): DataFrame =
-    tokens.withColumn("token_id",
-      org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("token"))))
-
-  /** The CLOSED byte-level vocab: every base symbol of [[byteAlphabet]]
-    * plus `</w>` plus each merge rule's output — the TOTAL (token,
-    * token_id) table a byte-level pipeline freezes on day one, under which
-    * no input can ever produce an out-of-vocab symbol (the base alphabet
-    * covers all 256 byte values; every merge output is reachable only from
-    * symbols already in the table). A REALIZED vocab ([[vocab]]) carries
-    * only corpus-seen tokens — fine for a one-shot export, but a stream
-    * encoding tomorrow's bytes under yesterday's realized vocab can hit
-    * UNK; the closed table is the streaming contract
-    * (`Packing.encodeIdsFrozen` + `PackingStream` with
-    * `byteLevel = true`). Ids are dense 1-based in token sort order — the
-    * same rule as every vocab here, just over the closed token set. */
-  def closedVocab(spark: org.apache.spark.sql.SparkSession,
-                  merges: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
-    idsOf(((byteAlphabet :+ "</w>") ++ merges.map { case (a, b) => a + b })
-      .distinct.toDF("token"))
-  }
+  private[operators] def vocabOf(encodedWords: DataFrame): DataFrame =
+    encodedWords.select(explode(col("bpe")).as("token")).distinct()
+      .withColumn("token_id",
+        org.apache.spark.sql.functions.row_number().over(
+          org.apache.spark.sql.expressions.Window.orderBy(col("token"))))
 
   /** Per-document BPE token count under a learned rule list: the corpus's
     * distinct words are encoded ONCE (vocab-sized), then a broadcast join

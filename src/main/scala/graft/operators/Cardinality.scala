@@ -52,16 +52,6 @@ object Cardinality {
       .agg(max(col("rho")).as("rho"))
   }
 
-  /** Merge two register frames (same strata, same p): elementwise max —
-    * the property that makes the sketch incremental: yesterday's registers
-    * plus today's batch registers = the union corpus's registers, with
-    * yesterday's values never rescanned. */
-  def mergeRegisters(a: DataFrame, b: DataFrame,
-                     strata: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((strata.map(col) :+ col("bucket")): _*)
-      .agg(max(col("rho")).as("rho"))
-
   /** Cardinality estimate per stratum from a register frame: the standard
     * HLL harmonic mean with the linear-counting fallback in the small
     * range (E ≤ 2.5m with empty registers present). The per-stratum fold

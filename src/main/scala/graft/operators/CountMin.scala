@@ -70,15 +70,6 @@ object CountMin {
       .agg(sum(col("__w")).as("cnt"))
   }
 
-  /** Merge two sketch frames built with the same geometry: counter sum —
-    * the property that makes the sketch incremental: yesterday's sketch
-    * plus today's batch sketch = the union corpus's sketch, with
-    * yesterday's values never rescanned. */
-  def merge(a: DataFrame, b: DataFrame, strata: Seq[String]): DataFrame =
-    a.unionByName(b)
-      .groupBy((strata.map(col) :+ col("row") :+ col("bucket")): _*)
-      .agg(sum(col("cnt")).as("cnt"))
-
   /** Point-frequency estimate: `df` plus an `est` long — d broadcast joins
     * of the (tiny) sketch frame against the probe's d bit fields, min over
     * rows; absent buckets read as zero; `df` is never shuffled. Never an

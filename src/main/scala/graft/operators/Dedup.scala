@@ -197,8 +197,8 @@ object Dedup {
     if (files.isEmpty) {
       val leaves = src.queryExecution.analyzed.collectLeaves()
       // LocalRelation-only: driver-resident rows, re-evaluation is free.
-      // Anything else sourceless (LogicalRDD checkpoints, streaming relations)
-      // stays heavy — conservative in the at-scale direction.
+      // Anything else sourceless (LogicalRDD checkpoints) stays heavy —
+      // conservative in the at-scale direction.
       !leaves.forall(
         _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     }
@@ -676,7 +676,7 @@ object Dedup {
 
   /** Cross-corpus (incoming × corpus) matches with ADAPTIVE exact-duplicate
     * collapse of the CORPUS side — the r7/r10 `collapseExact` lesson applied
-    * to the third pairing route (batch/streaming admission). On a
+    * to the third pairing route (incremental admission). On a
     * duplicate-dense lake every shingle's corpus posting list is multiplied
     * by the duplication factor and the prefix-candidate join pays it per
     * incoming doc; contracting identical shingle sets to their min-id
@@ -753,8 +753,8 @@ object Dedup {
     }
   }
 
-  /** Incremental near-dup matches — the BATCH form of the streaming admission
-    * gate (`DedupStream`): every (incoming doc, existing-corpus doc) pair with
+  /** Incremental near-dup matches — the admission gate for a new batch:
+    * every (incoming doc, existing-corpus doc) pair with
     * exact n-gram Jaccard >= threshold. The prefix-filter candidate join runs
     * CROSS-corpus (incoming tokens against corpus tokens, never corpus ×
     * corpus), so a daily increment costs ∝ |increment| · bucket overlap, not a
@@ -1479,7 +1479,7 @@ object Dedup {
 
   /** The exploded (id, simhash, band, bh) frame of the pigeonhole banding —
     * shared by `simhashBandPairs` and the pair-budget estimator. */
-  private[graft] def simhashBandedFrame(sig: DataFrame, idCol: String,
+  private def simhashBandedFrame(sig: DataFrame, idCol: String,
                                  maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 64)")
     val bands = maxHamming + 1

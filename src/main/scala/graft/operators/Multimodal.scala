@@ -480,10 +480,10 @@ object Multimodal {
         "payload_bytes")
   }
 
-  /** The census kernel shared by [[containerCensus]] and the streaming
-    * driver: (container, brand, duration_ms, video_codec, width, height,
-    * audio_codec, channels, sample_rate, payload_bytes) or None. */
-  private[graft] def probeContainer(payload: Array[Byte]):
+  /** The per-payload census kernel of [[containerCensus]]: (container,
+    * brand, duration_ms, video_codec, width, height, audio_codec, channels,
+    * sample_rate, payload_bytes) or None. */
+  private def probeContainer(payload: Array[Byte]):
       Option[(String, String, Long, Option[String], Option[Int],
         Option[Int], Option[String], Option[Int], Option[Int], Long)] =
     Mp4Codec.probe(payload).map { i =>

@@ -150,7 +150,9 @@ object Packing {
   def encodeIdsWithVocab(docs: DataFrame, idCol: String, textCol: String,
                          merges: Seq[(String, String)]):
       (DataFrame, DataFrame) = {
-    val toks = tokPositions(docs, idCol, textCol)
+    val toks = Dedup.ensureParallel(docs)
+      .select(col(idCol),
+        posexplode(TextFns.words(col(textCol))).as(Seq("__pos", "__word")))
     // LAZY pin (r18, guide §5): the eager form paid a dedicated
     // materialization job per call, but every single-action caller
     // (encodeIdsBpe, and the tokenizedCorpus rows that drop the vocab)
@@ -162,32 +164,14 @@ object Packing {
       toks.select(col("__word").as("word")).distinct(), "word", merges)
       .localCheckpoint(false)
     val vocab = Bpe.vocabOf(encW)
-    (idStreamsFrom(toks, idCol, encW, vocab, frozen = false), vocab)
-  }
-
-  /** The per-doc (id, position, word) explode every id-encode path starts
-    * from — with the standard few-file guard. */
-  private def tokPositions(docs: DataFrame, idCol: String,
-                           textCol: String): DataFrame =
-    Dedup.ensureParallel(docs)
-      .select(col(idCol),
-        posexplode(TextFns.words(col(textCol))).as(Seq("__pos", "__word")))
-
-  /** The shared id-stream assembly ([[encodeIdsWithVocab]]/
-    * [[encodeIdsFrozen]]): word → ordered token ids via the vocab join,
-    * then doc → flattened position-ordered stream. `frozen` switches the
-    * vocab join to left + UNK-0 coalesce and appends the `n_oov` count —
-    * the ONLY differences between the realized and frozen paths. */
-  private def idStreamsFrom(toks: DataFrame, idCol: String, encW: DataFrame,
-                            vocab: DataFrame, frozen: Boolean): DataFrame = {
-    val tokId =
-      if (frozen) coalesce(col("token_id"), lit(0)) else col("token_id")
+    // word → ordered token ids via the vocab join, then doc → flattened
+    // position-ordered stream
     val wordIds = encW
       .select(col("word"), posexplode(col("bpe")).as(Seq("__p", "token")))
-      .join(broadcast(vocab), Seq("token"), if (frozen) "left" else "inner")
+      .join(broadcast(vocab), Seq("token"))
       .groupBy(col("word"))
       .agg(transform(
-        array_sort(collect_list(struct(col("__p"), tokId.as("token_id")))),
+        array_sort(collect_list(struct(col("__p"), col("token_id")))),
         s => s.getField("token_id")).as("__ids"))
       .withColumnRenamed("word", "__word")
     val ids = toks.join(broadcast(wordIds), Seq("__word"))
@@ -195,10 +179,7 @@ object Packing {
       .agg(flatten(transform(
         array_sort(collect_list(struct(col("__pos"), col("__ids")))),
         s => s.getField("__ids"))).as("token_ids"))
-    if (frozen)
-      ids.withColumn("n_oov",
-        size(filter(col("token_ids"), x => x === 0)).cast("long"))
-    else ids
+    (ids, vocab)
   }
 
   /** The shared packing kernels — ONE home for the bin rule
@@ -259,43 +240,23 @@ object Packing {
                       merges: Seq[(String, String)]):
       (DataFrame, DataFrame) = {
     require(tokenBudget >= 1, s"tokenBudget must be >= 1, got $tokenBudget")
-    // lazy pin, same reasoning as encW above: both of cutPieces' references
-    // land in the caller's one final action, which materializes the pin as
-    // it runs — the eager form cost a separate corpus-aggregate job first
+    // lazy pin, same reasoning as encW above: both references to `ids`
+    // below land in the caller's one final action, which materializes the
+    // pin as it runs — the eager form cost a separate corpus-aggregate job
     val (ids0, vocab) = encodeIdsWithVocab(docs, idCol, textCol, merges)
     val ids = ids0.localCheckpoint(false)
-    (cutPieces(docs, ids, idCol, shardCols, tokenBudget,
-      priorBase = null)._1, vocab)
-  }
-
-  /** The shared concat-and-cut walk ([[tokenizedCorpus]]/[[tokenizedBatch]]):
-    * given per-doc id streams, compute each doc's stream prior (the
-    * per-shard prefix sum, PLUS the shard's carried `base_tokens` when
-    * `priorBase` is given — the streaming continuation seam), split spans
-    * at bin boundaries, and slice the id arrays per piece. Returns
-    * (pieces, the based per-doc count frame — idCol, shardCols…, __n,
-    * __base) so a caller deriving carry state doesn't redo the joins. */
-  private def cutPieces(docs: DataFrame, ids: DataFrame, idCol: String,
-                        shardCols: Seq[String], tokenBudget: Long,
-                        priorBase: DataFrame): (DataFrame, DataFrame) = {
-    val counts0 = docs.select((col(idCol) +: shardCols.map(col)): _*)
+    // each doc's stream prior is the per-shard prefix sum of token counts;
+    // spans split at bin boundaries and the id arrays slice per piece
+    val counts = docs.select((col(idCol) +: shardCols.map(col)): _*)
       .join(ids.select(col(idCol),
         size(col("token_ids")).cast("long").as("__n")),
         Seq(idCol), "left")
       .withColumn("__n", coalesce(col("__n"), lit(0L)))
-    val counts =
-      if (priorBase == null) counts0.withColumn("__base", lit(0L))
-      else counts0.join(
-          broadcast(priorBase.select((shardCols.map(col) :+
-            col("base_tokens").cast("long").as("__base")): _*)),
-          shardCols, "left")
-        .withColumn("__base", coalesce(col("__base"), lit(0L)))
     val w = Window.partitionBy(shardCols.map(col): _*).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, -1)
     val b = lit(tokenBudget)
     val pieces = counts
-      .withColumn("__prior",
-        col("__base") + coalesce(sum(col("__n")).over(w), lit(0L)))
+      .withColumn("__prior", coalesce(sum(col("__n")).over(w), lit(0L)))
       .withColumn("__first", floor(col("__prior") / b).cast("long"))
       .withColumn("__last", when(col("__n") > 0,
           floor((col("__prior") + col("__n") - 1) / b).cast("long"))
@@ -320,63 +281,7 @@ object Packing {
       .select((col(idCol) +: shardCols.map(col)) ++ Seq(col("chunk_idx"),
         col("n_tokens_bpe"), col("bin_id"), col("offset_tokens"),
         col("token_ids")): _*),
-      counts)
-  }
-
-  /** [[encodeIdsBpe]] under a FROZEN tokenizer — the day-two encode: merge
-    * rules AND the (token, token_id) vocab come from the day-one training
-    * run (the artifacts [[tokenizedCorpus]]'s job publishes), so a new
-    * batch's ids are consistent with every id already on disk. Symbols
-    * the frozen vocab never saw map to id 0 — the reserved UNK (the
-    * realized-vocab ids are 1-based by construction), surfaced per doc as
-    * `n_oov`; a byte-level tokenizer trained over the full byte alphabet
-    * never produces one. Output: (idCol, token_ids, n_oov). */
-  def encodeIdsFrozen(docs: DataFrame, idCol: String, textCol: String,
-                      merges: Seq[(String, String)], vocab: DataFrame,
-                      byteLevel: Boolean = false): DataFrame = {
-    val toks = tokPositions(docs, idCol, textCol)
-    val encW = Bpe.encodeWords(
-      toks.select(col("__word").as("word")).distinct(), "word", merges,
-      byteLevel)
-    val v = vocab.select(col(vocab.columns.head).as("token"),
-      col(vocab.columns(1)).cast("int").as("token_id"))
-    idStreamsFrom(toks, idCol, encW, v, frozen = true)
-  }
-
-  /** ONE TICK of the streaming tokenized export ([[tokenizedCorpus]]'s
-    * continuous-ingest twin, the `PackingStream` kernel): encode `docs`
-    * under the FROZEN day-one tokenizer ([[encodeIdsFrozen]]) and cut them
-    * into packed pieces CONTINUING each shard's standing token stream —
-    * `priorBase` (shardCols…, base_tokens) carries where every shard's
-    * stream left off, so bin ids keep counting across ticks and a reader
-    * sees ONE continuous packed corpus, not per-batch islands (a batch's
-    * first doc tops up the previous tick's partial final bin).
-    *
-    * Returns (pieces — [[tokenizedCorpus]]'s schema, state' — the batch
-    * shards' advanced (shardCols…, base_tokens); the caller merges it over
-    * its standing state, untouched shards keep their rows). A null
-    * `priorBase` means no carry (every shard starts at token 0 — the
-    * day-one/one-shot call). Deterministic
-    * given (state, batch): a replayed tick recuts identical pieces —
-    * the idempotence the stream driver's overwrite-by-batch sink needs. */
-  def tokenizedBatch(docs: DataFrame, idCol: String, textCol: String,
-                     shardCols: Seq[String], tokenBudget: Long,
-                     merges: Seq[(String, String)], vocab: DataFrame,
-                     priorBase: DataFrame,
-                     byteLevel: Boolean = false): (DataFrame, DataFrame) = {
-    require(tokenBudget >= 1, s"tokenBudget must be >= 1, got $tokenBudget")
-    // lazy pin (r18): materializes inside the caller's first action over
-    // the pieces (the tick's write), then serves the state action cached
-    val ids = encodeIdsFrozen(docs, idCol, textCol, merges, vocab, byteLevel)
-      .localCheckpoint(false)
-    val (pieces, based) = cutPieces(docs, ids, idCol, shardCols,
-      tokenBudget, priorBase)
-    // carry state off the SAME based count frame the cut walk used —
-    // no second docs ⋈ ids join, no drift between the two derivations
-    val newState = based
-      .groupBy(shardCols.map(col): _*)
-      .agg((first(col("__base")) + sum(col("__n"))).as("base_tokens"))
-    (pieces, newState)
+      vocab)
   }
 
   /** The PACKED-EXAMPLE layout — [[packBinsBpe]] plus each doc's token
@@ -462,8 +367,9 @@ object Packing {
   def examples(pieces: DataFrame, idCol: String,
                shardCols: Seq[String]): DataFrame =
     // one sorted piece list per bin, then three parallel in-row projections
-    // — linear (the flatten/transform pattern idStreamsFrom/shardManifest
-    // use), and doc ids keep their NATIVE type (string ids survive)
+    // — linear (the flatten/transform pattern encodeIdsWithVocab and
+    // shardManifest use), and doc ids keep their NATIVE type (string ids
+    // survive)
     pieces.groupBy((shardCols.map(col) :+ col("bin_id")): _*)
       .agg(
         sum(col("n_tokens_bpe")).as("n_tokens"),

@@ -17,20 +17,18 @@ import org.apache.spark.sql.functions._
   * shuffle; at whole-corpus scale swap in the q93 HLL register frame — the
   * report column is the exact twin of that estimate).
   *
-  * The SUM-MERGEABLE intermediate (`reportCarrier`) is split from the
-  * presentation math (`render`) so the report can be maintained
-  * incrementally: carriers from disjoint corpus slices merge by per-stratum
-  * addition ([[mergeCarriers]] — exact, associative), which is what
-  * `streaming.ReportStream`'s versioned folds ride. The derived columns
-  * (means, rates) are computed only at render time. */
+  * The additive per-stratum intermediate (`reportCarrier`) is split from
+  * the presentation math (`render`) so [[corpusReport]] and
+  * [[corpusReportFull]] share both. The derived columns (means, rates) are
+  * computed only at render time. */
 object Reports {
 
   /** The additive per-stratum carrier:
     * (strata, n_docs, n_tokens, ent_sum, low_n, en_n) — every column an
-    * exact long SUM, so carriers of disjoint slices merge by addition. */
-  def reportCarrier(docs: DataFrame, textCol: String,
-                    strataCol: String, langCol: String,
-                    entropyFloorE6: Long = 2000000L): DataFrame = {
+    * exact long SUM. */
+  private def reportCarrier(docs: DataFrame, textCol: String,
+                            strataCol: String, langCol: String,
+                            entropyFloorE6: Long): DataFrame = {
     // the per-doc word/entropy kernels must not run at file-count
     // parallelism on a few-file corpus (r10 receipt lesson)
     val perDoc = Dedup.ensureParallel(docs).select(col(strataCol),
@@ -46,23 +44,14 @@ object Reports {
         sum(col("__en")).as("en_n"))
   }
 
-  /** Exact per-stratum addition of two carriers (disjoint corpus slices). */
-  def mergeCarriers(a: DataFrame, b: DataFrame, strataCol: String): DataFrame =
-    a.unionByName(b).groupBy(col(strataCol))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("ent_sum")).as("ent_sum"),
-        sum(col("low_n")).as("low_n"),
-        sum(col("en_n")).as("en_n"))
-
   /** Presentation math over a carrier + a per-stratum vocabulary frame
-    * (`vocab(strataCol, n_distinct_tokens)` — exact counts batch-side, the
-    * HLL estimate stream-side). LEFT join: a stratum whose docs all tokenize
-    * to zero words has carrier rows but no vocab row, and an audit artifact
+    * (`vocab(strataCol, n_distinct_tokens)`, exact counts). LEFT join: a
+    * stratum whose docs all tokenize to zero words has carrier rows but no
+    * vocab row, and an audit artifact
     * that silently omits a stratum misanswers "what did we train on" (r9
     * ADVICE) — it renders with n_distinct_tokens = 0 instead. */
-  def render(carrier: DataFrame, vocab: DataFrame,
-             strataCol: String): DataFrame = {
+  private def render(carrier: DataFrame, vocab: DataFrame,
+                     strataCol: String): DataFrame = {
     val d = graft.ops.Quantiles.div _
     carrier.join(vocab, Seq(strataCol), "left")
       .select(col(strataCol), col("n_docs"), col("n_tokens"),
@@ -95,7 +84,7 @@ object Reports {
     * SQL-reproducible without a lexicographic sort assumption) from a
     * (strata, __t, cnt) count frame. Heap-aggregated (`TopKAgg`): the shuffle
     * carries ≤ k rows per (stratum, mapper), never the vocabulary. */
-  private[graft] def topTokens(counts: DataFrame, strataCol: String,
+  private def topTokens(counts: DataFrame, strataCol: String,
                                k: Int): DataFrame =
     graft.ops.TopK.topKPerGroup(counts, Seq(strataCol), col("cnt"),
         graft.functions.RollingHash64(col("__t")),
@@ -112,10 +101,7 @@ object Reports {
     *    (`DataMix.sourceTokenKl`'s exact e6-integer convention), the
     *    reweighting signal;
     *  - `top_tokens`: the stratum's `k` heaviest tokens with exact counts
-    *    ("tok:cnt,…") — batch-exact here; the streaming twin
-    *    (`ReportStream.currentReport`) serves the same column from the
-    *    Count-Min store over a bounded candidate pool, the same
-    *    estimate-for-exact swap the vocabulary column makes with HLL.
+    *    ("tok:cnt,…").
     * Strata whose docs all tokenize to zero words render with kl 0 and an
     * empty token list (LEFT joins — the audit must not drop them).
     * Cost: two extra token passes over the corpus beyond [[corpusReport]]'s

@@ -5,8 +5,8 @@ import graft.operators.Bloom
 import org.apache.spark.sql.functions._
 
 /** Bloom membership sketches: word exactness vs a local reference, the
-  * no-false-negative contract, the merge law, and the false-positive rate
-  * staying near theory. */
+  * no-false-negative contract, and the false-positive rate staying near
+  * theory. */
 class BloomSpec extends SparkSpec {
   import spark.implicits._
 
@@ -48,17 +48,6 @@ class BloomSpec extends SparkSpec {
       .filter(col("might_contain")).count()
     // theory: (1 - e^(-kn/m))^3 ~ 6.7e-4 -> expect ~7 of 10000; allow 1%
     assert(fp < 100L, s"false positives: $fp / 10000")
-  }
-
-  test("merge: filter(A union B) == OR-merge of the parts") {
-    val a = (0 until 1500).map(i => s"a$i").toDF("v")
-    val b = (1000 until 2500).map(i => s"a$i").toDF("v")
-    val merged = Bloom.merge(
-        Bloom.build(a, Nil, col("v")), Bloom.build(b, Nil, col("v")), Nil)
-      .as[(Int, Long)].collect().toMap
-    val whole = Bloom.build(a.unionByName(b), Nil, col("v"))
-      .as[(Int, Long)].collect().toMap
-    assert(merged === whole)
   }
 
   test("probe superset contract vs an exact membership join") {

@@ -4,9 +4,8 @@ import graft.functions.{Mix64, RollingHash64}
 import graft.operators.Cardinality
 import org.apache.spark.sql.functions._
 
-/** HLL register sketches: register exactness vs a local reference, the
-  * merge law, and estimate accuracy in both HLL and linear-counting
-  * ranges. */
+/** HLL register sketches: register exactness vs a local reference, and
+  * estimate accuracy in both HLL and linear-counting ranges. */
 class CardinalitySpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,18 +29,6 @@ class CardinalitySpec extends SparkSpec {
         .as[(Int, Int)].collect().toMap
       assert(got === refRegisters(values, p), s"p=$p")
     }
-  }
-
-  test("mergeRegisters: registers(A union B) == max-merge of the parts") {
-    val a = (0 until 3000).map(i => s"a$i").toDF("v")
-    val b = (1500 until 4500).map(i => s"a$i").toDF("v")
-    val merged = Cardinality.mergeRegisters(
-        Cardinality.hllRegisters(a, Nil, col("v")),
-        Cardinality.hllRegisters(b, Nil, col("v")), Nil)
-      .as[(Int, Int)].collect().toMap
-    val whole = Cardinality.hllRegisters(a.unionByName(b), Nil, col("v"))
-      .as[(Int, Int)].collect().toMap
-    assert(merged === whole)
   }
 
   test("hllEstimate: within 10% on 20k distinct (p=8), partition-invariant") {

@@ -5,7 +5,7 @@ import graft.operators.CountMin
 import org.apache.spark.sql.functions._
 
 /** Count-Min frequency sketches: counter exactness vs a local reference,
-  * the never-undercount contract, the merge law, weighted build equivalence,
+  * the never-undercount contract, weighted build equivalence,
   * and heavy-hitter recall over a bounded candidate set. */
 class CountMinSpec extends SparkSpec {
   import spark.implicits._
@@ -55,18 +55,6 @@ class CountMinSpec extends SparkSpec {
       assert(got(v) === refEstimate(v, cs), s"estimate mismatch for $v")
       assert(got(v) >= exact(v), s"undercount for $v: ${got(v)} < ${exact(v)}")
     }
-  }
-
-  test("merge: sketch(A union B) == counter-sum merge of the parts") {
-    val a = (0 until 4000).map(i => s"t${i % 500}").toDF("v")
-    val b = (0 until 3000).map(i => s"t${i % 800}").toDF("v")
-    val merged = CountMin.merge(
-        CountMin.build(a, Nil, col("v"), WLog2, D),
-        CountMin.build(b, Nil, col("v"), WLog2, D), Nil)
-      .as[(Int, Int, Long)].collect().toSet
-    val whole = CountMin.build(a.unionByName(b), Nil, col("v"), WLog2, D)
-      .as[(Int, Int, Long)].collect().toSet
-    assert(merged === whole)
   }
 
   test("weighted build from a (value, count) frame == raw-occurrence build") {

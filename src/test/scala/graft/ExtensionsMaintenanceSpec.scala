@@ -92,6 +92,37 @@ class ExtensionsMaintenanceSpec extends SparkSpec {
     assert(runs == 1)
   }
 
+  test("S13 idempotence gate: a Spark write that failed in a task re-runs") {
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    val out = Files.createTempDirectory("gate-crash").toString + "/tide.csv"
+    def series(failAt: Long) = {
+      val value = udf { (id: Long) =>
+        if (id == failAt) throw new IllegalStateException("task failure")
+        id.toDouble
+      }
+      spark.range(4).select(
+        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("time"),
+        value(col("id")).as("value"))
+    }
+    val success = Paths.get(out, "_SUCCESS")
+    // the plan runs inside the write, which has already made the directory
+    intercept[Exception] {
+      Maintenance.runIdempotent(out) {
+        graft.io.MikeCsv.writeHeaderlessSeries(series(failAt = 2L), out)
+      }
+    }
+    assert(Files.isDirectory(Paths.get(out)) && !Files.exists(success))
+    var runs = 0
+    assert(Maintenance.runIdempotent(out) {
+      graft.io.MikeCsv.writeHeaderlessSeries(series(failAt = -1L), out)
+      runs += 1
+    })
+    assert(Files.exists(success))
+    assert(graft.io.MikeCsv.readHeaderlessSeries(spark, out).count() == 4L)
+    assert(!Maintenance.runIdempotent(out) { runs += 1 })
+    assert(runs == 1)
+  }
+
   test("gates default to the ACTIVE session's Hadoop conf, not a bare one") {
     // jobs configure remote-FS credentials/endpoints via spark.hadoop.*,
     // which land in the session's hadoopConfiguration — a default-arg

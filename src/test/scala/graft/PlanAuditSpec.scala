@@ -72,7 +72,7 @@ class PlanAuditSpec extends SparkSpec {
   //    Quantiles.rankBuckets runs over the BIN HISTOGRAM (one row per
   //    distinct value/binStep bin), bounded by the e6 score range /
   //    binStep, never by corpus rows (q132's twin is lang-partitioned).
-  //  - q151-family (token-id vocabs, Bpe.idsOf): `row_number() over
+  //  - q151-family (token-id vocabs, Bpe.vocabOf): `row_number() over
   //    (order by token)` on the DISTINCT BPE TOKEN set — every BPE token
   //    is a base-alphabet symbol, </w>, or one merge rule's output, so the
   //    input is ≤ |alphabet| + nMerges + 1 rows at ANY corpus size.

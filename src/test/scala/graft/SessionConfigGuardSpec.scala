@@ -6,13 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps eight invariants from drifting back: `GraftSession` is the only place
+/** Keeps nine invariants from drifting back: `GraftSession` is the only place
   * that builds a SparkSession, no CLI job reads its config through Spark
   * (`JobConfig` parses it on the driver), the only mains are the CLI jobs and
   * three tools, no env var is read outside `GraftSession` and `Bench`, every
   * curation-job config key is set by some test, every pivot names its values,
   * concurrent Spark actions go through `Concurrent` rather than the global
-  * ExecutionContext, and `Concurrent` is the only place that makes threads. */
+  * ExecutionContext, `Concurrent` is the only place that makes threads, and
+  * nothing runs Structured Streaming (the system is a batch cron ETL). */
 class SessionConfigGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -107,5 +108,11 @@ class SessionConfigGuardSpec extends AnyFunSuite {
     val offenders = (hits(main, "Executors.") ++ hits(main, "new Thread("))
       .filterNot(_.startsWith("graft/Concurrent.scala:"))
     assert(offenders.isEmpty, s"run concurrent work through graft.Concurrent: $offenders")
+  }
+
+  test("no Structured Streaming in src/main") {
+    val offenders =
+      Seq("readStream", "writeStream", "foreachBatch").flatMap(hits(main, _))
+    assert(offenders.isEmpty, s"the ticks are batch cron jobs: $offenders")
   }
 }

@@ -21,7 +21,7 @@ class TestdataCanarySpec extends SparkSpec {
       tsType == LongType || tsType == TimestampNTZType || tsType == TimestampType,
       s"events.ts arrived as $tsType — a physical encoding graft.io.EventsTs.toNanosLong " +
         "does not normalize. Teach the seam (src/main/scala/graft/io/EventsTs.scala) the " +
-        "new encoding; every time-series query and stream source flows through it.")
+        "new encoding; every time-series query flows through it.")
   }
 
   test("EventsTs normalizes the real events file to a canonical nanos long") {

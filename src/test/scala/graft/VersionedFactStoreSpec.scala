@@ -99,9 +99,8 @@ class VersionedFactStoreSpec extends SparkSpec {
 
   // ---- compact crash battery -----------------------------------------------
   // Compaction's input is the partition it rewrites, so a driver death inside
-  // the publish must never be able to destroy rows (the streaming stores pin
-  // the same class with _SUCCESS-gated versions; the fold pins it with
-  // stage→publish-beside→retire). Each test materializes one reachable
+  // the publish must never be able to destroy rows (the fold pins the same
+  // class with stage→publish-beside→retire). Each test materializes one reachable
   // intermediate state on disk, asserts READS ARE ALREADY CORRECT in that
   // state, then re-runs compact and asserts it heals to the clean layout.
 

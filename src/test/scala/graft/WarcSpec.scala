@@ -315,26 +315,6 @@ class WarcSpec extends SparkSpec {
         "unambiguous raw deflate body")
   }
 
-  test("recordsFromPaths: comma/glob-hostile file names read exactly as named") {
-    val dir = java.nio.file.Files.createTempDirectory("warcpaths")
-    // a comma (binaryFiles' path-list separator) AND glob metacharacters —
-    // every one of these mis-resolves through a binaryFiles path string
-    val hostile = dir.resolve("cap,01{x}[a]*b?.warc.gz")
-    java.nio.file.Files.write(hostile, gz(Seq(
-      SyntheticWarc.record(1L, "hostile-name doc", wet = true))))
-    val plain = dir.resolve("plain.warc.gz")
-    java.nio.file.Files.write(plain, gz(Seq(
-      SyntheticWarc.record(2L, "plain doc", wet = true))))
-    val docs = Warc.textDocs(Warc.recordsFromPaths(spark,
-        Seq(hostile.toString, plain.toString)))
-      .collect().sortBy(_.url)
-    assert(docs.map(_.url).toSeq ==
-      Seq(1L, 2L).map(SyntheticWarc.uri).sorted)
-    assert(docs.map(_.text).toSet == Set("hostile-name doc", "plain doc"))
-    // empty path list: empty dataset, no job
-    assert(Warc.recordsFromPaths(spark, Nil).isEmpty)
-  }
-
   test("Warc.write: WET export round-trips bit-equal through the parser") {
     val dir = java.nio.file.Files.createTempDirectory("warcwrite").toString
     val docs = Seq(
@@ -356,11 +336,10 @@ class WarcSpec extends SparkSpec {
     // statuses/mimes carry the WET conventions
     val td = Warc.textDocs(Warc.records(spark, dir)).collect()
     assert(td.forall(d => d.http_status == 200 && d.mime == "text/plain"))
-    // exact-path route reads the export too (no glob dependence)
+    // one file per input partition
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".warc.gz")).map(_.getPath).toSeq
     assert(files.size == 2)
-    assert(Warc.textDocs(Warc.recordsFromPaths(spark, files)).count() == 5L)
     // deterministic re-export: same partitions -> byte-identical files
     val dir2 = java.nio.file.Files.createTempDirectory("warcwrite2").toString
     graft.io.Warc.write(docs.repartition(2), dir2)
