@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * last-row patch -> headerless time,value CSV, tagged with the series'
   * `get_obs_end`-derived latest_fgt (ref :176) for downstream run bookkeeping.
   *
-  * Config JSON: { "series_path": "<parquet (time,value)>", "output_path": "<dir>" }
+  * Config JSON: { "series_path": "<parquet: time TIMESTAMP_NTZ, value DOUBLE
+  * (`TideInputJob.SeriesSchema`)>", "output_path": "<dir>" }, or
+  * `series_jdbc_url` + `series_jdbc_table` in place of `series_path`.
   * Usage: DischargeInputJob <config.json> -s "..." -e "..."
   */
 object DischargeInputJob {
@@ -41,7 +43,7 @@ object DischargeInputJob {
           .filter(col("time") >= to_timestamp(lit(start)) &&
             col("time") <= to_timestamp(lit(end)))
       case None =>
-        spark.read.parquet(cfg.req("series_path"))
+        spark.read.schema(TideInputJob.SeriesSchema).parquet(cfg.req("series_path"))
           .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
             col("time") <= lit(end).cast("timestamp_ntz"))
     }

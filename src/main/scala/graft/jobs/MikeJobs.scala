@@ -5,39 +5,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's pipelines restated as single lazy plans (SURVEY.md §3).
-  * Each builder is a pure plan function — no side effects, no collects — so Catalyst
-  * sees the whole tree: the reference's 22-iteration join loop and 114-catchment
-  * nested merge loop each collapse into one shuffle
-  * (ref: inputs/gen_mike_input_rf_linux.py:155-162,180-202). The plan functions
-  * still do no collects: the job layer collects each dim once (`LocalDim`) and
-  * passes in the local frame and what a plan needs from it on the driver —
-  * pivot keys, column orders — so every output plan runs exactly once.
+  * Each builder is a pure plan function: no side effects, and the only values it
+  * reads on the driver are dim-scale ones — station ids, coefficients, the k-NN
+  * map — which it writes into the plan as literals. The job layer collects each
+  * dim once (`LocalDim`), so only the k-NN map's collect starts jobs of its own,
+  * and every output plan runs exactly once. The matrices are built wide, as pandas builds
+  * them: the resample aggregates into one column per station, and the row-mean
+  * fill, the neighbor fill and the catchment fold are column expressions over
+  * that row — one aggregate per output, no window, no self-join, where the
+  * reference runs a 22-iteration join loop and a 114-catchment nested merge
+  * loop (ref: inputs/gen_mike_input_rf_linux.py:104-108,155-162,180-202).
   */
 object MikeJobs {
 
   /** 3.1 rainfall input: long obs series + coefficient dim -> per-catchment 15-min
     * wide matrix.
     * series:  (obs_id, time, value)   raw 5-min observations
-    * coeffs:  (name, obs_id, coefficient)  204-row dim -> broadcast
-    * Steps: cleanse negatives (P3) -> right-closed 15-min resample (A1) -> row-mean
-    * impute (W4) -> weighted catchment fold (A3) -> pivot wide (R1).
-    * `catchments` are the output columns: the coefficient table's names in
-    * `sparkOrder`. */
+    * coeffs:  (name, obs_id, coefficient)  local 204-row dim, read on the driver
+    * Steps: cleanse negatives (P3) -> right-closed 15-min resample (A1), one
+    * column per coefficient station -> row-mean impute (W4) -> weighted
+    * catchment fold (A3), one column per catchment in `sparkOrder`. */
   def rainfallInput(spark: SparkSession, series: DataFrame, coeffs: DataFrame,
-                    startTs: String, endTs: String,
-                    catchments: Seq[String]): DataFrame = {
-    val spine = timeSpine(spark, startTs, endTs, 15)
-    val clean = cleanseNegatives(series, "value")
-    val res = resampleSum(clean, "time", 900L, Seq("obs_id"), "value")
-    // align on the 15-min spine so imputation sees explicit gaps
-    val ids = coeffs.select(col("obs_id")).distinct()
-    val grid = broadcast(spine).crossJoin(broadcast(ids))
-    val aligned = grid.join(res, Seq("obs_id", "time"), "left")
-    val imputed = imputeRowMean(aligned, "time", "value")
-    val folded = weightedGroupSum(imputed, coeffs, "obs_id",
-      "name", "time", "value", "coefficient")
-    pivotWide(folded.withColumn("value", round(col("value"), 1)),
-      "time", "name", "value", catchments)
+                    startTs: String, endTs: String): DataFrame = {
+    val members = coeffs.select(col("name"), col("obs_id"), col("coefficient"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq
+    val ids = members.map(_._2).distinct
+    // a station-bucket cell is NULL when the station has no rows in the bucket
+    // (the grid gap imputation fills), else the sum of its cleansed rows with the
+    // pandas 0-quirk: rows whose values all cleansed away sum to 0.0
+    val cells = resampleWide(spark, cleanseNegatives(series, "value"), "obs_id", ids,
+      coalesce(col("value"), lit(0.0)), startTs, endTs, 15)
+    val imputed = cells.withColumn("__mean", rowMean(ids.map(k => col(k.toString))))
+    imputed.select(col("time") +: sparkOrder(members.map(_._1)).map { name =>
+      round(weightedSum(members.collect { case (`name`, k, w) =>
+        coalesce(col(k.toString), col("__mean")) -> w }), 1).as(name)
+    }: _*)
   }
 
   /** 3.2 extract-to-warehouse: wide MIKE result matrix -> long fact rows with
@@ -89,41 +91,40 @@ object MikeJobs {
     * `gen_mike_input_rf_linux_all_stations_raw.py` pipeline: per-station 15-min
     * right-closed resample, negatives cleansed, gaps filled from the 1st then 2nd
     * nearest station (≤ maxKm, k-NN over great-circle distance), remaining gaps
-    * row-mean imputed, rounded to 1 decimal, pivoted wide by station NAME
-    * (ref: :257-294). The k-NN map is computed once from the tiny station dim
-    * (broadcast); every fill is a column-level coalesce — no iterative driver loops.
+    * row-mean imputed, rounded to 1 decimal, one column per station NAME in
+    * `sparkOrder` (ref: :257-294). The k-NN map is collected once from the local
+    * station dim; every fill is a column-level coalesce — no driver loops.
     *
-    * stations: (obs_id, station_name, latitude, longitude); `stationNames` are the
-    * output columns: its names in `sparkOrder`. */
+    * stations: (obs_id, station_name, latitude, longitude), a local dim. */
   def rawRainfallInput(spark: SparkSession, series: DataFrame, stations: DataFrame,
-                       startTs: String, endTs: String, stationNames: Seq[String],
+                       startTs: String, endTs: String,
                        maxKm: Double = 100.0): DataFrame = {
-    // faithful ordering (ref :268-277): raw -> dense 5-min spine (gaps -> NaN) ->
-    // 15-min right-closed resample where an all-NaN bucket sums to 0.0 (the pandas
-    // 0.25 quirk — missing data reads as ZERO rain) -> negatives -> NaN. Only the
-    // negative-reading gaps are then neighbor-filled.
-    val spine5 = timeSpine(spark, startTs, endTs, 5)
-    val ids = stations.select(col("obs_id"))
-    val grid5 = broadcast(spine5).crossJoin(broadcast(ids))
-    val aligned5 = grid5.join(series, Seq("obs_id", "time"), "left")
-    val res = resampleSum(aligned5, "time", 900L, Seq("obs_id"), "value",
-      nullAsZero = true)
-    val aligned = cleanseNegatives(res, "value")
+    val named = stations.select(col("obs_id"), col("station_name")).collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toSeq
+    val ids = named.map(_._1).distinct
+    val located = stations.select(col("obs_id").as("id"), col("latitude"), col("longitude"))
     // neighbor map: rank-1 and rank-2 nearest stations within maxKm
-    val knn = graft.ops.GeoOps.knnJoin(
-      stations.select(col("obs_id").as("id"), col("latitude"), col("longitude")),
-      stations.select(col("obs_id").as("id"), col("latitude"), col("longitude")),
-      k = 2, maxKm = maxKm)
-    val neighbors = knn.groupBy(col("origin_id").as("obs_id"))
-      .pivot("rank", Seq(1, 2))
-      .agg(first(col("neighbor_id")))
-      .select(col("obs_id"), col("1").as("n1"), col("2").as("n2"))
-    val filled = neighborCoalesce(aligned, neighbors, "obs_id", "time", "value")
-    val imputed = imputeRowMean(filled, "time", "value")
-    val named = imputed.join(broadcast(
-        stations.select(col("obs_id"), col("station_name"))), "obs_id")
-    pivotWide(named.withColumn("value", round(col("value"), 1)),
-      "time", "station_name", "value", stationNames)
+    val neighbors = graft.ops.GeoOps.knnJoin(located, located, k = 2, maxKm = maxKm)
+      .select(col("origin_id"), col("rank"), col("neighbor_id")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
+      .groupBy(_._1).map { case (k, ns) => k -> ns.sortBy(_._2).map(_._3) }
+    // faithful ordering (ref :268-277): raw -> dense 5-min spine, so readings off
+    // it drop -> 15-min right-closed resample where a bucket with no readings
+    // sums to 0.0 (the pandas 0.25 quirk — missing data reads as ZERO rain) ->
+    // negatives -> NaN. Only the negative-reading gaps are then neighbor-filled.
+    val onGrid = series.where(col("time").between(lit(startTs).cast("timestamp_ntz"),
+      lit(endTs).cast("timestamp_ntz")) && ceilBucket(col("time"), 300L) === col("time"))
+    val cells = resampleWide(spark, onGrid, "obs_id", ids, col("value"), startTs, endTs, 15)
+      .select(col("time") +: ids.map { k =>
+        val c = coalesce(col(k.toString), lit(0.0))
+        when(c < 0, lit(null)).otherwise(c).as(k.toString)
+      }: _*)
+    val filled = cells.select(col("time") +: ids.map(k => coalesce(
+      (k +: neighbors.getOrElse(k, Nil)).map(n => col(n.toString)): _*).as(k.toString)): _*)
+    val imputed = filled.withColumn("__mean", rowMean(ids.map(k => col(k.toString))))
+    val idOf = named.reverse.map(_.swap).toMap // a name's first station
+    imputed.select(col("time") +: sparkOrder(named.map(_._2)).map(name =>
+      round(coalesce(col(idOf(name).toString), col("__mean")), 1).as(name)): _*)
   }
 
   /** 3.3 discharge/tide input: single long series -> spine-aligned, sentinel-cleansed,
@@ -141,13 +142,8 @@ object MikeJobs {
     * resource lifetimes are Spark-managed and window validation is explicit
     * (RainfallInputJob.validateWindowTs). */
   def tideInput(spark: SparkSession, series: DataFrame,
-                startTs: String, endTs: String, stepMinutes: Int = 15): DataFrame = {
-    val spine = timeSpine(spark, startTs, endTs, stepMinutes)
-    val aligned = alignToSpine(broadcast(spine), series)
-    val clean = cleanseSentinel(aligned, "value")
-    val patched = patchLastRow(clean, "time", "value")
-    patched.na.drop(Seq("value"))
-  }
+                startTs: String, endTs: String, stepMinutes: Int = 15): DataFrame =
+    dischargeInput(spark, cleanseSentinel(series, "value"), startTs, endTs, stepMinutes)
 
   /** 3.3 discharge input — `prepare_mike_dis_input`
     * (ref: inputs/gen_mike_input_dis_linux.py:166-186): 15-min spine left-join
@@ -158,10 +154,17 @@ object MikeJobs {
   def dischargeInput(spark: SparkSession, series: DataFrame,
                      startTs: String, endTs: String,
                      stepMinutes: Int = 15): DataFrame = {
-    val spine = timeSpine(spark, startTs, endTs, stepMinutes)
-    val aligned = alignToSpine(broadcast(spine), series)
-    val patched = patchLastRow(aligned, "time", "value")
-    patched.na.drop(Seq("value"))
+    val aligned = alignToSpine(broadcast(timeSpine(spark, startTs, endTs, stepMinutes)),
+      series)
+    // P6/W2: MIKE needs a closed boundary — a missing or negative value on the
+    // spine's last row is patched to 0 (ref: inputs/gen_mike_input_dis_linux.py:104-106;
+    // inputs/gen_mike_input_tide_linux.py:110-111). That row is the one spine time
+    // in (endTs − step, endTs], which the driver knows: a row predicate, not a
+    // global ranking window over one partition.
+    val last = col("time") > lit(endTs).cast("timestamp_ntz") -
+      expr(s"INTERVAL $stepMinutes MINUTES")
+    aligned.withColumn("value", when(last && (col("value").isNull || col("value") < 0),
+      lit(0.0)).otherwise(col("value"))).na.drop(Seq("value"))
   }
 
   /** 3.5 obs-window rainfall generator — `prepare_mike_rf_input`

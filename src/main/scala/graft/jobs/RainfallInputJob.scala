@@ -1,7 +1,6 @@
 package graft.jobs
 
 import graft.io.MikeCsv
-import graft.ops.TimeSeriesOps.sparkOrder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,13 +8,15 @@ import org.apache.spark.sql.types._
 /** CLI for the rainfall-input pipeline (SURVEY.md §3.1) — the engine's equivalent of
   * `inputs/gen_mike_input_rf_linux.py`: config JSON + `-s/-e` window args, timestamp
   * validation (P9), idempotence gate (S13), the coefficient table read once on
-  * the driver (it names the output columns), then ONE lazy Spark plan and a
-  * single-ordered-file wide CSV sink (S9).
+  * the driver (its stations, weights and catchment names go into the plan as
+  * literals), then ONE lazy Spark plan and a single-ordered-file wide CSV sink
+  * (S9).
   *
   * Config JSON (flat, string-valued like the reference's
   * inputs/configs/rain_config.json):
   * {
-  *   "series_path":  "<parquet with (obs_id, time, value) long layout>",
+  *   "series_path":  "<parquet, long layout: obs_id INT, time TIMESTAMP_NTZ,
+  *                     value DOUBLE (`SeriesSchema`; other types fail the step)>",
   *   "coefficients_csv": "<csv name,curw_obs_id,coefficient>",
   *   "output_path":  "<dir for the wide RF csv>"
   * }
@@ -31,6 +32,9 @@ object RainfallInputJob {
     require(t.getSecond == 0, s"seconds must be 00: $ts")
     require(t.getMinute % 15 == 0, s"minute must be a quarter (00/15/30/45): $ts")
   }
+
+  /** The rain series schema: no footer-inference job. */
+  val SeriesSchema = "obs_id INT, time TIMESTAMP_NTZ, value DOUBLE"
 
   val coeffSchema: StructType = StructType(Seq(
     StructField("name", StringType, nullable = false),
@@ -59,15 +63,13 @@ object RainfallInputJob {
     val outputPath = cfg.req("output_path")
     // S13: skip the tick if the artifact already exists
     Maintenance.runIdempotent(outputPath) {
-      val series = spark.read.parquet(seriesPath)
+      val series = spark.read.schema(SeriesSchema).parquet(seriesPath)
         .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
           col("time") <= lit(end).cast("timestamp_ntz"))
       val coeffs = LocalDim(MikeCsv.readDimCsv(spark, coeffsCsv, coeffSchema)
         .withColumnRenamed("curw_obs_id", "obs_id"), coeffsCsv)
-      val catchments = sparkOrder(LocalDim.column(coeffs, "name"))
-      val wide = MikeJobs.rainfallInput(spark, series, coeffs, start, end,
-        catchments)
-      MikeCsv.writeWideCsv(wide, outputPath)
+      MikeCsv.writeWideCsv(
+        MikeJobs.rainfallInput(spark, series, coeffs, start, end), outputPath)
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.jobs
 
 import graft.io.MikeCsv
-import graft.ops.TimeSeriesOps.sparkOrder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,12 +8,13 @@ import org.apache.spark.sql.types._
 /** CLI for the raw-rainfall (all-stations) input pipeline (SURVEY.md §3.3) — the
   * engine's `inputs/gen_mike_input_rf_linux_all_stations_raw.py`: per-station
   * 15-min resample with the pandas zero-quirk, k-NN neighbor gap-fill cascade,
-  * row-mean impute, station-name pivot over the active stations (read once on
-  * the driver), single ordered wide CSV.
+  * row-mean impute, one column per active station name (the active stations
+  * and their k-NN map are read once on the driver), single ordered wide CSV.
   *
   * Config JSON:
   * {
-  *   "series_path": "<parquet (obs_id, time, value) 5-min raw obs>",
+  *   "series_path": "<parquet, 5-min raw obs: obs_id INT, time TIMESTAMP_NTZ,
+  *                    value DOUBLE (`RainfallInputJob.SeriesSchema`)>",
   *   "stations_csv": "<csv obs_id,station_name,latitude,longitude>",
   *   "output_path": "<dir for the wide csv>"
   * }
@@ -45,7 +45,8 @@ object RawRainfallInputJob {
     // "stations with data in range" semantics
     // (ref: inputs/gen_mike_input_rf_linux_all_stations_raw.py:141-147)
     Maintenance.runIdempotent(outputPath) {
-      val series = spark.read.parquet(cfg.req("series_path"))
+      val series = spark.read.schema(RainfallInputJob.SeriesSchema)
+        .parquet(cfg.req("series_path"))
         .filter(col("time") >= lit(start).cast("timestamp_ntz") &&
           col("time") <= lit(end).cast("timestamp_ntz"))
       val stationsCsv = cfg.req("stations_csv")
@@ -53,9 +54,8 @@ object RawRainfallInputJob {
       val active = LocalDim(stations.join(
         series.select(col("obs_id")).distinct(), Seq("obs_id"), "left_semi"),
         stationsCsv)
-      val names = sparkOrder(LocalDim.column(active, "station_name"))
-      val wide = MikeJobs.rawRainfallInput(spark, series, active, start, end, names)
-      MikeCsv.writeWideCsv(wide, outputPath)
+      MikeCsv.writeWideCsv(
+        MikeJobs.rawRainfallInput(spark, series, active, start, end), outputPath)
     }
   }
 }

@@ -7,10 +7,14 @@ import org.apache.spark.sql.SparkSession
   * (SURVEY.md §7.2; ref inputs/gen_mike_input_tide_linux.py): long series ->
   * spine align -> sentinel cleanse -> last-row patch -> headerless time,value CSV.
   *
-  * Config JSON: { "series_path": "<parquet (time,value)>", "output_path": "<dir>" }
+  * Config JSON: { "series_path": "<parquet: time TIMESTAMP_NTZ, value DOUBLE
+  * (`SeriesSchema`; other column types fail the step)>", "output_path": "<dir>" }
   * Usage: TideInputJob <config.json> -s "..." -e "..."
   */
 object TideInputJob {
+
+  /** The flow series (tide, discharge) schema: no footer-inference job. */
+  val SeriesSchema = "time TIMESTAMP_NTZ, value DOUBLE"
 
   def main(args: Array[String]): Unit = {
     val (cfgPath, start, end) = RainfallInputJob.parseArgs(args)
@@ -25,7 +29,7 @@ object TideInputJob {
     val cfg = JobConfig.read(spark, cfgPath)
     val outputPath = cfg.req("output_path")
     Maintenance.runIdempotent(outputPath) {
-      val series = spark.read.parquet(cfg.req("series_path"))
+      val series = spark.read.schema(SeriesSchema).parquet(cfg.req("series_path"))
       val out = MikeJobs.tideInput(spark, series, start, end)
       MikeCsv.writeHeaderlessSeries(out, outputPath)
     }

@@ -182,11 +182,11 @@ object Packing {
     (ids, vocab)
   }
 
-  /** The shared packing kernels — ONE home for the bin rule
-    * (floor(exclusive-prefix-sum / budget), per shard) and the in-bin
-    * offset rule (exclusive prefix sum per (shard, bin)): [[packBins]],
-    * [[packBinsBpe]], [[packedLayout]] and [[tokenizedCorpus]] all walk
-    * through here, so a packing-rule change lands everywhere at once. */
+  /** The shared packing kernels: the bin rule (floor(exclusive-prefix-sum /
+    * budget), per shard) and the in-bin offset rule (exclusive prefix sum per
+    * (shard, bin)), which [[packBins]], [[packBinsBpe]] and [[packedLayout]]
+    * walk through. [[tokenizedCorpus]] cuts streams at bin boundaries, so it
+    * states the same bin rule inline: a rule change must land there too. */
   private def binsFromCounts(counts: DataFrame, shardCols: Seq[String],
                              idCol: String, nCol: String,
                              tokenBudget: Long): DataFrame = {

@@ -12,10 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `DataFrame => DataFrame` transforms so Catalyst owns planning and Tungsten owns
   * execution. Nothing here collects to the driver; every transform is a narrow map or a
   * single shuffle that scales horizontally: at 100 TB the spine join is a broadcast (the
-  * spine is tiny), the resample is one hash aggregate with map-side partial aggregation,
-  * and the catchment fold is one shuffle on (name, time) instead of the reference's
-  * O(catchments × members) in-memory frame merges
-  * (ref: inputs/gen_mike_input_rf_linux.py:180-202).
+  * spine is tiny) and the resample is one hash aggregate with map-side partial
+  * aggregation. The MIKE matrices are built wide, as the reference builds them: the
+  * resample aggregates straight into one column per station, and the row mean and the
+  * catchment fold are column expressions over that row — no window, no join
+  * (ref: inputs/gen_mike_input_rf_linux.py:104-108,180-202).
   */
 object TimeSeriesOps {
 
@@ -82,43 +83,50 @@ object TimeSeriesOps {
     df.withColumn(valueCol,
       when(col(valueCol) === sentinel, lit(null)).otherwise(col(valueCol)))
 
-  /** A2/W4: row-mean imputation in long layout — a missing value at time t is filled
-    * with the mean over the OTHER series' values at the same t, where the mean is
-    * computed over the pre-fill column (order-insensitive, matching the reference's
-    * mean-before-fill: SURVEY.md §7.4.5; ref inputs/gen_mike_input_rf_linux.py:104-108).
-    * `avg` skips NULLs natively, matching pandas NaN-skipping mean.
-    */
-  def imputeRowMean(df: DataFrame, timeCol: String, valueCol: String): DataFrame =
-    df.withColumn(valueCol,
-      coalesce(col(valueCol), avg(col(valueCol)).over(Window.partitionBy(timeCol))))
-
-  /** P6/W2: MIKE needs a closed boundary — if the final spine row of a series is
-    * missing or negative, patch it to 0.
-    * ref: inputs/gen_mike_input_dis_linux.py:104-106; inputs/gen_mike_input_tide_linux.py:110-111. */
-  def patchLastRow(df: DataFrame, timeCol: String, valueCol: String,
-                   keyCols: Seq[String] = Nil): DataFrame = {
-    val w = (if (keyCols.isEmpty) Window.partitionBy(lit(1))
-             else Window.partitionBy(keyCols.map(col): _*))
-      .orderBy(col(timeCol).desc)
-    df.withColumn("__rn", row_number().over(w))
-      .withColumn(valueCol,
-        when(col("__rn") === 1 && (col(valueCol).isNull || col(valueCol) < 0), lit(0.0))
-          .otherwise(col(valueCol)))
-      .drop("__rn")
+  /** A1 + R1 in one hash aggregate: a long `(keyCol, time, …)` series resampled
+    * right-closed (as `resampleSum`) straight into the wide time × key matrix,
+    * one column per driver-held key, named by it. A cell is the SUM of `value`
+    * over the key's rows in the bucket, NULL when it has none. The spine's rows
+    * enter the aggregate with a NULL key, so every spine time is a row without
+    * a grid join; buckets off the spine drop. No keys, no rows (as an empty
+    * spine × keys grid). */
+  def resampleWide(spark: SparkSession, series: DataFrame, keyCol: String,
+                   keys: Seq[Int], value: Column, startTs: String, endTs: String,
+                   stepMinutes: Int): DataFrame = {
+    val spine = timeSpine(spark, startTs, endTs, stepMinutes)
+    if (keys.isEmpty) spine.where(lit(false))
+    else series.select(col(keyCol).as("__k"), col("time"), value.cast("double").as("__v"))
+      .unionByName(spine.select(lit(null).cast(series.schema(keyCol).dataType).as("__k"),
+        col("time"), lit(null).cast("double").as("__v")))
+      .withColumn("time", ceilBucket(col("time"), stepMinutes * 60L))
+      .where(col("time").between(lit(startTs).cast("timestamp_ntz"),
+        lit(endTs).cast("timestamp_ntz")))
+      .groupBy(col("time"))
+      .agg(sum(when(col("__k") === keys.head, col("__v"))).as(keys.head.toString),
+        keys.tail.map(k => sum(when(col("__k") === k, col("__v"))).as(k.toString)): _*)
   }
 
-  /** A3/J2: per-catchment weighted fold — Σ over member stations of
-    * coefficient × value(t). The reference builds one weighted frame per member and
-    * merges them pairwise (ref: inputs/gen_mike_input_rf_linux.py:180-202, 23 LoC of
-    * nested loops); here it is a single broadcast join + one hash aggregate.
-    * `coeffs` is a small dim (204 rows in the reference) — always broadcast.
-    */
-  def weightedGroupSum(series: DataFrame, coeffs: DataFrame, joinKey: String,
-                       groupCol: String, timeCol: String, valueCol: String,
-                       weightCol: String, outCol: String = "value"): DataFrame =
-    series.join(broadcast(coeffs), joinKey)
-      .groupBy(col(groupCol), col(timeCol))
-      .agg(sum(col(weightCol) * col(valueCol)).as(outCol))
+  /** A2/W4 in wide layout: the mean over the non-NULL `cols` of a row — the
+    * reference's NaN-skipping `mean(axis=1)`, NULL when every column is NULL
+    * (ref: inputs/gen_mike_input_rf_linux.py:104-108). It sums in column
+    * order, as pandas does. Project it as its own column and let each fill
+    * reference that: written inline into every column of a matrix, the
+    * expression grows with the square of the column count, and the generated
+    * code passes the JVM's 64 KB method limit. */
+  def rowMean(cols: Seq[Column]): Column = {
+    val n = cols.map(c => when(c.isNull, 0).otherwise(1)).foldLeft(lit(0))(_ + _)
+    if (cols.isEmpty) lit(null).cast("double")
+    else when(n > 0, cols.map(c => coalesce(c, lit(0.0))).foldLeft(lit(0.0))(_ + _) / n)
+  }
+
+  /** A3/J2 in wide layout: Σ weight × column over `terms`, skipping NULL
+    * columns as SQL SUM does — NULL only when every term is NULL. The weights
+    * are driver-held literals (a coefficient dim), so one catchment is one
+    * expression over its member columns where the reference merges one
+    * weighted frame per member (ref: inputs/gen_mike_input_rf_linux.py:180-202). */
+  def weightedSum(terms: Seq[(Column, Double)]): Column =
+    when(terms.map(_._1.isNotNull).foldLeft(lit(false))(_ || _),
+      terms.map { case (c, w) => coalesce(c * w, lit(0.0)) }.foldLeft(lit(0.0))(_ + _))
 
   /** R1: long -> wide pivot (`time × station` matrix for MIKE interchange).
     * ref: inputs/gen_mike_input_rf_linux.py:155-162 (loop-of-joins). `keys` are
@@ -198,25 +206,5 @@ object TimeSeriesOps {
     tolerated.filter(col("__side") === 1)
       .withColumnRenamed("__lastRt", "asof_time")
       .drop("__side", "__rt")
-  }
-
-  /** W3: prioritized coalesce across neighbor series (gap-fill cascade from 1st then
-    * 2nd nearest neighbor). `neighbors` maps key -> (n1key, n2key); series is long
-    * layout. ref: inputs/gen_mike_input_rf_linux_all_stations_raw.py:277-284.
-    * Two self-joins on (neighborKey, time); the neighbor map is tiny -> broadcast,
-    * and the series side joins are on the same (key, time) layout so AQE can reuse
-    * the exchange. */
-  def neighborCoalesce(series: DataFrame, neighbors: DataFrame,
-                       keyCol: String, timeCol: String, valueCol: String): DataFrame = {
-    val n1 = series.select(col(keyCol).as("__n1k"), col(timeCol).as("__t1"),
-      col(valueCol).as("__v1"))
-    val n2 = series.select(col(keyCol).as("__n2k"), col(timeCol).as("__t2"),
-      col(valueCol).as("__v2"))
-    series
-      .join(broadcast(neighbors), Seq(keyCol), "left")
-      .join(n1, col("n1") === col("__n1k") && col(timeCol) === col("__t1"), "left")
-      .join(n2, col("n2") === col("__n2k") && col(timeCol) === col("__t2"), "left")
-      .withColumn(valueCol, coalesce(col(valueCol), col("__v1"), col("__v2")))
-      .drop("__n1k", "__t1", "__v1", "__n2k", "__t2", "__v2", "n1", "n2")
   }
 }

@@ -148,7 +148,7 @@ class IoJobsSpec extends SparkSpec {
     val coeffs = Seq(("C1", 101, 0.5), ("C1", 102, 0.5), ("C2", 101, 1.0))
       .toDF("name", "obs_id", "coefficient")
     val out = MikeJobs.rainfallInput(spark, series, coeffs,
-      "2024-01-01 00:15:00", "2024-01-01 00:15:00", Seq("C1", "C2"))
+      "2024-01-01 00:15:00", "2024-01-01 00:15:00")
     val row = out.collect().head
     // station 101 bucket = 6.0; station 102 bucket = 0.0 (pandas all-NaN quirk)
     // C1 = 0.5*6 + 0.5*0 = 3.0 ; C2 = 1.0*6 = 6.0

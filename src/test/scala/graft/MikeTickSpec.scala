@@ -13,16 +13,22 @@ import graft.jobs.{ExtractToWarehouseJob, PrepMikeInputsJob}
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types._
 
 /** One cron tick on a seeded synthetic fixture at the reference shapes
   * (FIXTURES.md): `PrepMikeInputsJob.run` over all four generators, then two
   * `ExtractToWarehouseJob.run` calls — an insert, then an update of every fact
   * with new values under the same fgt. It pins (a) the exact number of Spark
-  * jobs each step starts, and (b) the bytes of every MIKE input CSV and of
-  * every warehouse table. `ReferenceFixturesSpec` covers the same shapes on
-  * the reference's real files.
+  * jobs each step starts, (b) the bytes of every MIKE input CSV and of every
+  * warehouse table, and (c) the exchanges in each prep output's plan; it
+  * replays a tick after each prep step fails alone. `ReferenceFixturesSpec`
+  * covers the same shapes on the reference's real files.
   *
   * Fixture: a 481 x 48 water-level result plus one station the 53-row dim does
   * not know, 22 rain stations at 5 minutes over 5 days and a 204-row
@@ -56,30 +62,55 @@ class MikeTickSpec extends SparkSpec {
     } finally c.close()
   }
 
-  test("one MIKE tick: Spark jobs per step and the bytes of every output") {
+  /** The fixture, written once for the suite. */
+  private lazy val fx: String = {
     val dir = Files.createTempDirectory("miketick").toFile
     writeFixtures(spark, dir, new scala.util.Random(7))
+    dir.getAbsolutePath
+  }
+
+  /** A flat JSON config `name.json` in `dir`; returns its path. */
+  private def cfg(dir: File, name: String, kv: (String, String)*): String = {
+    val f = new File(dir, s"$name.json")
+    Files.writeString(f.toPath, kv.map { case (k, v) => s""""$k": "$v"""" }
+      .mkString("{", ", ", "}"))
+    f.getAbsolutePath
+  }
+
+  /** The prep config of one tick in `dir`, every step writing `<dir>/<step>_out`
+    * and reading its fixture series unless `series` names another; returns the
+    * config's path and the outputs by step. */
+  private def prepConfig(dir: File, series: Map[String, String] = Map.empty):
+      (String, Map[String, String]) = {
+    val out = Steps.map(s => s -> s"$dir/${s}_out").toMap
+    def from(step: String) = series.getOrElse(step, s"$fx/${SeriesOf(step)}")
+    (cfg(dir, "prep",
+      "rainfall_config" -> cfg(dir, "rainfall", "series_path" -> from("rainfall"),
+        "coefficients_csv" -> s"$fx/coefficients.csv", "output_path" -> out("rainfall")),
+      "discharge_config" -> cfg(dir, "discharge", "series_path" -> from("discharge"),
+        "output_path" -> out("discharge")),
+      "tide_config" -> cfg(dir, "tide", "series_path" -> from("tide"),
+        "output_path" -> out("tide")),
+      "raw_rainfall_config" -> cfg(dir, "raw_rainfall", "series_path" -> from("raw_rainfall"),
+        "stations_csv" -> s"$fx/raw_stations.csv", "output_path" -> out("raw_rainfall"))),
+      out)
+  }
+
+  /** (step, succeeded, error) of one prep tick over the fixture window. */
+  private def prep(config: String): Seq[(String, Boolean, Option[String])] =
+    PrepMikeInputsJob.run(spark, config, Start, End)
+
+  /** The part files a sink wrote into `dir`: a re-run writes new names. */
+  private def parts(dir: String): Set[String] =
+    new File(dir).listFiles.map(_.getName).filter(_.startsWith("part-")).toSet
+
+  test("one MIKE tick: Spark jobs per step and the bytes of every output") {
+    val run = Files.createTempDirectory("miketick_run").toFile
     val url = "jdbc:derby:memory:miketickspec;create=true"
     val c = DriverManager.getConnection(url)
     try WarehouseDdl.foreach(c.createStatement().execute) finally c.close()
-    def cfg(name: String, kv: (String, String)*): String = {
-      val f = new File(dir, s"$name.json")
-      Files.writeString(f.toPath, kv.map { case (k, v) => s""""$k": "$v"""" }
-        .mkString("{", ", ", "}"))
-      f.getAbsolutePath
-    }
-    val fx = dir.getAbsolutePath
-    val out = Steps.map(s => s -> s"$fx/${s}_out").toMap
-    val prep = cfg("prep",
-      "rainfall_config" -> cfg("rainfall", "series_path" -> s"$fx/rain_series",
-        "coefficients_csv" -> s"$fx/coefficients.csv", "output_path" -> out("rainfall")),
-      "discharge_config" -> cfg("discharge", "series_path" -> s"$fx/flow_series",
-        "output_path" -> out("discharge")),
-      "tide_config" -> cfg("tide", "series_path" -> s"$fx/flow_series",
-        "output_path" -> out("tide")),
-      "raw_rainfall_config" -> cfg("raw_rainfall", "series_path" -> s"$fx/raw_series",
-        "stations_csv" -> s"$fx/raw_stations.csv", "output_path" -> out("raw_rainfall")))
-    def extract(results: String) = cfg(s"extract_$results",
+    val (prepCfg, out) = prepConfig(run)
+    def extract(results: String) = cfg(run, s"extract_$results",
       "results_csv" -> s"$fx/$results", "stations_csv" -> s"$fx/stations.csv",
       "jdbc_url" -> url, "fact_table" -> "facts", "run_table" -> "runs",
       "sim_tag" -> "hourly_run", "model" -> "mike11_2016",
@@ -90,14 +121,16 @@ class MikeTickSpec extends SparkSpec {
     val jobs = new StepJobs
     TestBus.settle(sc)
     sc.addSparkListener(jobs)
+    // a generated method past the JVM's 64 KB limit fails the tick here instead
+    // of running interpreted without a word
+    spark.conf.set("spark.sql.codegen.fallback", "false")
     val counts = try {
       def step[A](body: => A): (A, Map[String, Int]) = {
         val a = body
         TestBus.settle(sc)
         (a, jobs.drain())
       }
-      val (status, prepJobs) = step(PrepMikeInputsJob.run(spark, prep,
-        "2019-05-26 00:00:00", "2019-05-31 00:00:00"))
+      val (status, prepJobs) = step(prep(prepCfg))
       assert(status.map(s => s._1 -> s._2) == Steps.map(_ -> true), status)
       val (insert, insertJobs) = step(ExtractToWarehouseJob.run(spark,
         extract("resmike11_WL.csv"), fgt))
@@ -107,27 +140,109 @@ class MikeTickSpec extends SparkSpec {
       assert(update == (23088L, Seq(Ghost)))
       prepJobs ++ insertJobs.map { case (s, n) => s"${s}_insert" -> n } ++
         updateJobs.map { case (s, n) => s"${s}_update" -> n }
-    } finally sc.removeSparkListener(jobs)
+    } finally {
+      spark.conf.unset("spark.sql.codegen.fallback")
+      sc.removeSparkListener(jobs)
+    }
 
     val hashes = Steps.map(s => s -> csvHash(out(s))) ++
       Tables.map(t => t -> tableHash(url, t))
     assert(counts == ExpectedJobs)
     assert(hashes.toMap == ExpectedHashes)
   }
+
+  test("each MIKE prep output plans as one aggregate: exchanges per sink plan") {
+    val run = Files.createTempDirectory("miketick_plans").toFile
+    val (prepCfg, out) = prepConfig(run)
+    val sinks = new SinkExchanges
+    TestBus.settle(spark.sparkContext)
+    spark.listenerManager.register(sinks)
+    val status = try {
+      val s = prep(prepCfg)
+      TestBus.settle(spark.sparkContext)
+      s
+    } finally spark.listenerManager.unregister(sinks)
+    assert(status.forall(_._2), status)
+    val byStep = out.map { case (step, dir) =>
+      step -> sinks.counts(new File(dir).toURI.getPath.stripSuffix("/")) }
+    assert(byStep == ExpectedExchanges)
+  }
+
+  test("D8 replay: a prep step that fails alone re-runs on the next tick; " +
+    "the committed steps are skipped") {
+    for (broken <- Steps) {
+      val run = Files.createTempDirectory(s"miketick_replay_$broken").toFile
+      // a copy of the step's series whose one part file is cut in half
+      val copy = new File(run, "series")
+      Files.createDirectories(copy.toPath)
+      val part = new File(s"$fx/${SeriesOf(broken)}").listFiles
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .map(f => Files.copy(f.toPath, copy.toPath.resolve(f.getName))).toSeq match {
+          case Seq(p) => p
+          case ps => fail(s"one part file expected: $ps")
+        }
+      val good = Files.readAllBytes(part)
+      Files.write(part, good.take(good.length / 2))
+      val (prepCfg, out) = prepConfig(run, Map(broken -> copy.getAbsolutePath))
+
+      val failed = prep(prepCfg)
+      assert(failed.map(s => s._1 -> s._2) == Steps.map(s => s -> (s != broken)),
+        s"$broken: $failed")
+      // raw_rainfall and discharge fail in a collect before their write;
+      // rainfall and tide in the query stage their write runs first (the
+      // aggregate's shuffle, the series broadcast), before anything commits
+      assert(!new File(out(broken), "_SUCCESS").exists, broken)
+      val committed = Steps.filter(_ != broken).map(s => s -> parts(out(s))).toMap
+
+      Files.write(part, good)
+      val replayed = prep(prepCfg)
+      assert(replayed.forall(_._2), s"$broken: $replayed")
+      assert(committed.map { case (s, _) => s -> parts(out(s)) } == committed, broken)
+      assert(Steps.map(s => s -> csvHash(out(s))).toMap ==
+        ExpectedHashes.filter(h => Steps.contains(h._1)), broken)
+    }
+  }
+
+  test("a rain series with obs_id BIGINT fails its step loudly") {
+    val run = Files.createTempDirectory("miketick_bigint").toFile
+    val wide = Map("rainfall" -> "rain_series", "raw_rainfall" -> "raw_series").map {
+      case (step, name) =>
+        val path = s"$run/$name"
+        spark.read.parquet(s"$fx/$name")
+          .withColumn("obs_id", org.apache.spark.sql.functions.col("obs_id").cast("bigint"))
+          .write.parquet(path)
+        step -> path
+    }
+    val (prepCfg, out) = prepConfig(run, wide)
+    val status = prep(prepCfg)
+    assert(status.map(s => s._1 -> s._2) == Steps.map(s => s -> !wide.contains(s)), status)
+    for ((step, _, err) <- status if wide.contains(step)) {
+      assert(err.exists(_.contains("obs_id")), s"$step: $err")
+      assert(!new File(out(step), "_SUCCESS").exists, step)
+    }
+  }
 }
 
 object MikeTickSpec {
   val Steps = Seq("rainfall", "discharge", "tide", "raw_rainfall")
+  /** The fixture series each prep step reads. */
+  val SeriesOf = Map("rainfall" -> "rain_series", "discharge" -> "flow_series",
+    "tide" -> "flow_series", "raw_rainfall" -> "raw_series")
+  val Start = "2019-05-26 00:00:00"
+  val End = "2019-05-31 00:00:00"
   val Tables = Seq("facts", "runs", "source_dim", "variable_dim", "unit_dim",
     "station_dim")
   val Ghost = "Unmapped Gauge"
 
   /** One plan execution per output; the dims, runs, pivot keys and the result
-    * CSV's header start no job of their own. Before that: rainfall 17,
-    * raw_rainfall 26, extract 22 on an empty warehouse and 27 after, then 5
-    * while the header was read by a Spark job. */
+    * CSV's header start no job of their own, and each prep output is one
+    * aggregate over its wide matrix (raw_rainfall: 3 jobs for its active
+    * stations, 3 for the k-NN map, 2 for the write). Before that: rainfall 9,
+    * raw_rainfall 16, discharge 6, tide 4 with long-form windows and
+    * self-joins; rainfall 17, raw_rainfall 26, extract 22 on an empty warehouse
+    * and 27 after, then 5 while the header was read by a Spark job. */
   val ExpectedJobs: Map[String, Int] = Map(
-    "rainfall" -> 9, "discharge" -> 6, "tide" -> 4, "raw_rainfall" -> 16,
+    "rainfall" -> 3, "discharge" -> 4, "tide" -> 2, "raw_rainfall" -> 8,
     "extract_insert" -> 4, "extract_update" -> 4)
 
   /** Recorded when every step still inferred its pivot keys, range-sorted its
@@ -143,6 +258,31 @@ object MikeTickSpec {
     "variable_dim" -> "03460e4cc8d3d2455f6102cf0b7cefebb9af211aae8d50987cb9fc239c68709c",
     "unit_dim" -> "f273767cc798ca0f5606540ac32e910457a157f3bc03a0a59563fcd33cd3e20e",
     "station_dim" -> "6a6c82f5803294e085e5d6454005253be839fdebc11253ffb732034ecc14512b")
+
+  /** (shuffle, broadcast) exchanges in the initial AQE plan of each prep
+    * sink: one aggregate over the wide matrix, or one spine join. Before that,
+    * with long-form windows and self-joins: rainfall (3, 3), raw_rainfall
+    * (7, 9), discharge (1, 1) and tide (1, 1). */
+  val ExpectedExchanges: Map[String, (Int, Int)] = Map(
+    "rainfall" -> (1, 0), "raw_rainfall" -> (1, 0),
+    "discharge" -> (0, 1), "tide" -> (0, 1))
+
+  /** (shuffle, broadcast) exchanges in the initial AQE plans of every file
+    * write, by output path. */
+  final class SinkExchanges extends QueryExecutionListener {
+    private val byPath = mutable.Map.empty[String, (Int, Int)]
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.optimizedPlan.collectFirst { case w: InsertIntoHadoopFsRelationCommand =>
+        w.outputPath.toUri.getPath.stripSuffix("/") }.foreach { path =>
+        val initial = qe.executedPlan.collect { case a: AdaptiveSparkPlanExec => a.initialPlan }
+        def count(p: SparkPlan => Boolean) = initial.map(_.collect { case n if p(n) => n }.size).sum
+        synchronized(byPath(path) = (count(_.isInstanceOf[ShuffleExchangeLike]),
+          count(_.isInstanceOf[BroadcastExchangeLike])))
+      }
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    def counts(path: String): (Int, Int) = synchronized(byPath(path))
+  }
 
   /** Spark jobs per MIKE step, attributed like mikebench's probe: the first
     * job class on the job's own call site, else on its SQL execution's (jobs

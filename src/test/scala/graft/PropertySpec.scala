@@ -172,13 +172,18 @@ class PropertySpec extends SparkSpec {
   test("impute idempotence: imputing an already-imputed frame changes nothing") {
     val gen = Gen.listOfN(8, Gen.option(Gen.choose(0, 1000)))
     for (vals <- samples(gen, 5) if vals.exists(_.isDefined)) {
-      val df = vals.zipWithIndex.map { case (v, i) =>
-        (s"s$i", "t1", v.map(_.toDouble)) }.toDF("station", "time", "value")
-      val once = TimeSeriesOps.imputeRowMean(df, "time", "value")
-      val twice = TimeSeriesOps.imputeRowMean(once, "time", "value")
-      val a = once.orderBy($"station").select($"value").collect().toSeq
-      val b = twice.orderBy($"station").select($"value").collect().toSeq
-      assert(a == b)
+      // one wide row, a column per station: the fill reads the row mean of
+      // the pre-fill columns, as MikeJobs' rainfall builders do
+      val stations = vals.indices.map(i => s"s$i")
+      val df = Seq(vals.map(_.map(_.toDouble))).toDF("v")
+        .select(stations.indices.map(i => $"v"(i).as(stations(i))): _*)
+      def impute(wide: org.apache.spark.sql.DataFrame) = wide
+        .withColumn("__mean", TimeSeriesOps.rowMean(stations.map(col)))
+        .select(stations.map(s => coalesce(col(s), $"__mean").as(s)): _*)
+      val once = impute(df)
+      val twice = impute(once)
+      assert(once.collect().toSeq == twice.collect().toSeq)
+      assert(once.head().toSeq.forall(_ != null))
     }
   }
 

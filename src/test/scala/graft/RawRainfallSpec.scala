@@ -21,7 +21,7 @@ class RawRainfallSpec extends SparkSpec {
       .toDF("obs_id", "s", "value")
       .select($"obs_id", to_timestamp($"s").cast("timestamp_ntz").as("time"), $"value")
     val wide = MikeJobs.rawRainfallInput(spark, series, stations,
-      "2024-01-01 00:00:00", "2024-01-01 00:30:00", Seq("StA", "StB", "StC"))
+      "2024-01-01 00:00:00", "2024-01-01 00:30:00")
     val rows = wide.orderBy($"time").collect()
     assert(wide.columns.toSeq == Seq("time", "StA", "StB", "StC"))
     // bucket 00:00: only the point AT 00:00 could land here; none exist -> 0.0

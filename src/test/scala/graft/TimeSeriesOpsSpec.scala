@@ -42,42 +42,41 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(out.toSeq == Seq(3.0, 0.0)) // second bucket all-null -> 0.0, not NULL
   }
 
-  test("imputeRowMean uses the pre-fill mean (reference order-sensitivity)") {
-    val df = Seq(
-      ("s1", "t1", Some(2.0)), ("s2", "t1", Some(4.0)),
-      ("s3", "t1", None: Option[Double]), ("s4", "t1", None: Option[Double]))
-      .toDF("station", "time", "value")
-    val out = imputeRowMean(df, "time", "value")
-      .orderBy($"station").select($"value").as[Double].collect()
+  test("rowMean imputation uses the pre-fill mean (reference order-sensitivity)") {
+    val wide = Seq(("t1", Some(2.0), Some(4.0), None: Option[Double],
+      None: Option[Double])).toDF("time", "s1", "s2", "s3", "s4")
+    val stations = Seq("s1", "s2", "s3", "s4")
+    val out = wide.withColumn("__mean", rowMean(stations.map(col)))
+      .select(stations.map(s => coalesce(col(s), $"__mean")): _*)
+      .as[(Double, Double, Double, Double)].head()
     // both gaps get mean(2,4)=3 — NOT a running fill where s4 would see s3's fill
-    assert(out.toSeq == Seq(2.0, 4.0, 3.0, 3.0))
+    assert(out == ((2.0, 4.0, 3.0, 3.0)))
   }
 
-  test("patchLastRow zeroes a missing/negative final row only") {
+  test("discharge input zeroes a missing/negative final spine row only") {
     val df = Seq(
       ("2024-01-01 00:00:00", Some(5.0)),
       ("2024-01-01 00:15:00", Some(-2.0)),
       ("2024-01-01 00:30:00", None: Option[Double]))
       .toDF("s", "value")
-      .select(to_timestamp($"s").as("time"), $"value")
-    val out = patchLastRow(df, "time", "value")
+      .select(to_timestamp($"s").cast("timestamp_ntz").as("time"), $"value")
+    val out = graft.jobs.MikeJobs.dischargeInput(spark, df,
+        "2024-01-01 00:00:00", "2024-01-01 00:30:00")
       .orderBy($"time").select($"value").collect().map(r =>
         if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     assert(out.toSeq == Seq(Some(5.0), Some(-2.0), Some(0.0)))
   }
 
-  test("weightedGroupSum folds coefficient x value per group (hand-computed)") {
-    val ts = Seq((101, "t1", 10.0), (102, "t1", 20.0), (101, "t2", 1.0))
-      .toDF("obs_id", "time", "value")
-    val coeffs = Seq(("C1", 101, 0.3), ("C1", 102, 0.7), ("C2", 101, 1.0))
-      .toDF("name", "obs_id", "coefficient")
-    val out = weightedGroupSum(ts, coeffs, "obs_id", "name", "time", "value",
-      "coefficient")
-      .orderBy($"name", $"time")
-      .select($"name", $"time", round($"value", 9).as("value"))
-      .as[(String, String, Double)].collect()
-    assert(out.toSeq == Seq(
-      ("C1", "t1", 17.0), ("C1", "t2", 0.3), ("C2", "t1", 10.0), ("C2", "t2", 1.0)))
+  test("weightedSum folds coefficient x column per catchment (hand-computed)") {
+    val wide = Seq(("t1", Some(10.0), Some(20.0)), ("t2", Some(1.0), None),
+      ("t3", None, None)).toDF("time", "101", "102")
+    val out = wide.select($"time",
+        round(weightedSum(Seq($"101" -> 0.3, $"102" -> 0.7)), 9).as("C1"),
+        round(weightedSum(Seq($"101" -> 1.0)), 9).as("C2"))
+      .orderBy($"time").as[(String, Option[Double], Option[Double])].collect()
+    // a NULL member is skipped, as SQL SUM skips it; all NULL -> NULL
+    assert(out.toSeq == Seq(("t1", Some(17.0), Some(10.0)),
+      ("t2", Some(0.3), Some(1.0)), ("t3", None, None)))
   }
 
   test("pivotWide / unpivotLong round-trip on deduplicated keys") {
@@ -100,17 +99,22 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(df.as[String].head() == id) // deterministic across evaluations
   }
 
-  test("neighborCoalesce fills from 1st then 2nd neighbor at the same time") {
-    val ts = Seq(
-      ("s1", "t1", None: Option[Double]), ("s2", "t1", Some(7.0)),
-      ("s3", "t1", Some(9.0)),
-      ("s1", "t2", None: Option[Double]), ("s3", "t2", Some(5.0)))
-      .toDF("station", "time", "value")
-    val nb = Seq(("s1", "s2", "s3")).toDF("station", "n1", "n2")
-    val out = neighborCoalesce(ts, nb, "station", "time", "value")
-      .filter($"station" === "s1").orderBy($"time")
-      .select($"value").as[Double].collect()
-    assert(out.toSeq == Seq(7.0, 5.0)) // t1 from n1; t2 falls through to n2
+  test("raw rainfall fills a gap from the 1st, then the 2nd nearest station " +
+    "in the same bucket") {
+    // on a meridian: s1's nearest station is s2, its second s3
+    val stations = Seq((1, "s1", 6.90, 79.90), (2, "s2", 7.00, 79.90),
+      (3, "s3", 7.11, 79.90)).toDF("obs_id", "station_name", "latitude", "longitude")
+    // negative readings are the gaps: s1 in both buckets, s2 in the second
+    val series = Seq((1, "00:05", -1.0), (2, "00:10", 7.0), (3, "00:10", 9.0),
+      (1, "00:20", -1.0), (2, "00:20", -1.0), (3, "00:25", 5.0))
+      .toDF("obs_id", "s", "value")
+      .select($"obs_id", to_timestamp(concat(lit("2024-01-01 "), $"s"))
+        .cast("timestamp_ntz").as("time"), $"value")
+    val out = graft.jobs.MikeJobs.rawRainfallInput(spark, series, stations,
+        "2024-01-01 00:00:00", "2024-01-01 00:30:00")
+      .orderBy($"time").select($"s1").as[Double].collect()
+    // 00:15 from n1 (s2); 00:30 falls through to n2 (s3)
+    assert(out.toSeq == Seq(0.0, 7.0, 5.0))
   }
 
   test("sparkOrder: keys sorted on the driver give the columns Spark's own " +
