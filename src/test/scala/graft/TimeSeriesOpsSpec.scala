@@ -99,8 +99,7 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(df.as[String].head() == id) // deterministic across evaluations
   }
 
-  test("raw rainfall fills a gap from the 1st, then the 2nd nearest station " +
-    "in the same bucket") {
+  test("raw rainfall fills a gap from the 1st, then the 2nd nearest station") {
     // on a meridian: s1's nearest station is s2, its second s3
     val stations = Seq((1, "s1", 6.90, 79.90), (2, "s2", 7.00, 79.90),
       (3, "s3", 7.11, 79.90)).toDF("obs_id", "station_name", "latitude", "longitude")
