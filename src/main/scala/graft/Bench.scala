@@ -51,21 +51,14 @@ object Bench {
     // reported under "failed" in the JSON line — a broken query can't hide.
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
       val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
+      // a query that leaves blocks held after its release fails: they would
+      // pile up across the suite and bleed into its tail
+      try Right(Verify.released(spark, fn(spark, sfDir)) { df =>
         df.write.format("noop").mode("overwrite").save()
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        // free the checkpoint blocks a consumed composite still pins (labels
-        // LogicalRDDs — clearCache below does not cover localCheckpoint RDDs)
-        graft.operators.Dedup.release(df)
-        // drop this query's operator-internal persisted frames before the next
-        // query: 60+ queries x persisted shingle/signature frames otherwise
-        // accumulate block-manager pressure that bleeds into the suite's tail
-        spark.catalog.clearCache()
-        Right(elapsed)
-      } catch { case e: Throwable =>
+        (System.nanoTime() - t0) / 1e9
+      })
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        spark.catalog.clearCache()
         Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"
           .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200))
       }

@@ -415,6 +415,8 @@ object SparkEntry {
       .getPath.stripSuffix("/") +
       s"/graft_q77_index_${new java.io.File(dir).getName.replace('.', '_')}"
     idx.save(tmp)
+    // the saved tables are the artifact: free the in-memory build's pins
+    Seq(idx.cells, idx.centroids, idx.books).foreach(Dedup.release)
     val loaded = Similarity.IvfPqIndex.load(s, tmp)
     Similarity.ivfPqSearch(loaded, emb.filter(col("vec_id") < 10), k = 5,
         nProbe = 1)
@@ -441,6 +443,8 @@ object SparkEntry {
       .getPath.stripSuffix("/") +
       s"/graft_q147_index_${new java.io.File(dir).getName.replace('.', '_')}"
     kept.save(tmp)
+    // the saved tables are the artifact: free the in-memory pins
+    Seq(kept.cells, kept.centroids, kept.books).foreach(Dedup.release)
     val loaded = Similarity.IvfPqIndex.load(s, tmp)
     Similarity.ivfPqSearch(loaded, emb.filter(col("vec_id") < 10), k = 5,
         nProbe = 1)
@@ -994,9 +998,8 @@ object SparkEntry {
     * connected components (unified entry) -> min-id cluster
     * labels, the "keep one survivor per cluster" step after pairwise dedup. */
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame =
-    Dedup.components(
-      Dedup.ngramJaccardPairs(t(s, dir, "documents").filter(col("doc_id") < 2000),
-        "doc_id", "text", n = 3, threshold = 0.5, blockCols = Seq("lang")))
+    Dedup.jaccardComponents(t(s, dir, "documents").filter(col("doc_id") < 2000),
+        "doc_id", "text", n = 3, threshold = 0.5, blockCols = Seq("lang"))
       .select(col("id").as("doc_id"), col("component"))
       .orderBy(col("doc_id"))
 
@@ -1016,16 +1019,17 @@ object SparkEntry {
     val corpus0 = docs.filter(col("doc_id") < 1000)
     val batch1 = docs.filter(col("doc_id") >= 1000 && col("doc_id") < 1500)
     val batch2 = docs.filter(col("doc_id") >= 1500)
-    val labels0 = Dedup.components(
-      Dedup.ngramJaccardPairs(corpus0, "doc_id", "text", n = 3,
-        threshold = 0.5, blockCols = Seq("lang")))
+    val labels0 = Dedup.jaccardComponents(corpus0, "doc_id", "text", n = 3,
+      threshold = 0.5, blockCols = Seq("lang"))
     // each tick's labels are materialized before the next consumes them —
     // the persisted-lake read/write boundary a real daily tick has (the next
     // tick reads the labels frame three times: endpoint probe, contraction,
-    // final relabel)
-    val labels1 = Dedup.admitBatchIntoComponents(labels0, corpus0, batch1,
+    // final relabel); the checkpoint cuts the result off from the first
+    // tick's blocks, so they are freed here
+    val tick1 = Dedup.admitBatchIntoComponents(labels0, corpus0, batch1,
       "doc_id", "text", n = 3, threshold = 0.5, blockCols = Seq("lang"))
-      .localCheckpoint(eager = true)
+    val labels1 = tick1.localCheckpoint(eager = true)
+    Dedup.release(tick1)
     val labels2 = Dedup.admitBatchIntoComponents(labels1,
       corpus0.unionByName(batch1), batch2,
       "doc_id", "text", n = 3, threshold = 0.5, blockCols = Seq("lang"))
@@ -1050,8 +1054,10 @@ object SparkEntry {
     val labels0 = Dedup.components(pairs)
     val deleted = docs.filter(pmod(col("doc_id"), lit(7)) === 3)
       .select(col("doc_id").as("id"))
-    Dedup.forgetFromComponents(labels0, pairs, deleted)
-      .select(col("id").as("doc_id"), col("component"))
+    val kept = Dedup.forgetFromComponents(labels0, pairs, deleted)
+    // both consumers ran CC eagerly; the result no longer reaches the pairs
+    Dedup.release(pairs)
+    kept.select(col("id").as("doc_id"), col("component"))
       .orderBy(col("doc_id"))
   }
 
@@ -1866,8 +1872,9 @@ object SparkEntry {
     val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
       threshold = 0.5, blockCols = Seq("lang"))
-    Dedup.survivorsByScore(docs, "doc_id", pairs, col("n_chars"))
-      .select(col("doc_id"), col("n_chars"))
+    val kept = Dedup.survivorsByScore(docs, "doc_id", pairs, col("n_chars"))
+    Dedup.release(pairs) // CC consumed them eagerly; the result cannot reach them
+    kept.select(col("doc_id"), col("n_chars"))
       .orderBy(col("doc_id"))
   }
 
@@ -1987,6 +1994,7 @@ object SparkEntry {
           bit_count(col("ha").bitwiseXOR(col("hb"))) <= maxHamming)
       .select(col("id_a"), col("id_b"))
     val labels = Dedup.components(brutePairs)
+    Dedup.release(sig) // CC consumed the brute pairs eagerly
     val bruteSurvivors = docs.select(col("doc_id"))
       .join(labels.filter(col("id") =!= col("component"))
         .select(col("id").as("doc_id")), Seq("doc_id"), "left_anti")
@@ -3157,9 +3165,8 @@ object SparkEntry {
     * and assignment all under the hash. */
   private def qSplitByComponent(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
-    val labels = Dedup.components(
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-        threshold = 0.5, blockCols = Seq("lang")))
+    val labels = Dedup.jaccardComponents(docs, "doc_id", "text", n = 3,
+      threshold = 0.5, blockCols = Seq("lang"))
     graft.operators.DataMix.assignSplitByComponent(
         docs.select(col("doc_id")), "doc_id",
         labels.select(col("id"), col("component")),
@@ -3188,9 +3195,8 @@ object SparkEntry {
         queries, "q_id", "q_text", k = 10, excludePairs = gold)
       .select(col("q_id"), col("rn"), col("doc_id").as("neighbor_id"),
         col("score_e6"))
-    val labels = Dedup.components(
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-        threshold = 0.5, blockCols = Seq("lang")))
+    val labels = Dedup.jaccardComponents(docs, "doc_id", "text", n = 3,
+      threshold = 0.5, blockCols = Seq("lang"))
     val qSplit = graft.operators.DataMix.assignSplitByComponent(
         queries.select(col("q_id").as("doc_id")), "doc_id",
         labels.select(col("id"), col("component")),
@@ -3212,9 +3218,8 @@ object SparkEntry {
     * ROW_NUMBER — clustering, keying, and the winner rule all hashed. */
   private def qSurvivorsBy(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
-    val labels = Dedup.components(
-      Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
-        threshold = 0.5, blockCols = Seq("lang")))
+    val labels = Dedup.jaccardComponents(docs, "doc_id", "text", n = 3,
+      threshold = 0.5, blockCols = Seq("lang"))
     Dedup.survivorsBy(docs, "doc_id",
         labels.select(col("id"), col("component")), col("n_chars"))
       .select(col("doc_id"), col("n_chars"))

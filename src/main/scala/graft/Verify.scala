@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.SessionCache
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -53,19 +54,15 @@ object Verify {
   }
 
   /** Run each query, dump its result, return the map of failures
-    * (name -> error). Factored out of main so the guard is spec-testable. */
+    * (name -> error), leftover blocks included ([[released]]). Factored out
+    * of main so the guard is spec-testable. */
   def runQueries(spark: SparkSession, sfDir: String, outDir: String,
-                 queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
+                 queries: Map[String, (SparkSession, String) => DataFrame])
       : Map[String, String] = {
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     queries.foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // free composite checkpoint blocks + session caches between queries:
-        // 60+ queries' persisted prep frames otherwise stack up in one session
-        graft.operators.Dedup.release(df)
-        spark.catalog.clearCache()
+      try released(spark, fn(spark, sfDir)) {
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -73,5 +70,24 @@ object Verify {
       }
     }
     failed.toMap
+  }
+
+  /** Consumes `query`'s result with `consume`, then `Dedup.release`s it (also
+    * when `consume` throws), and throws if blocks the query made are still held: persistent RDDs and
+    * session cache entries that appeared since the call began (a delta, so
+    * blocks other work holds in the session do not count). */
+  def released[T](spark: SparkSession, query: => DataFrame)(
+      consume: DataFrame => T): T = {
+    def rdds = spark.sparkContext.getPersistentRDDs
+    val (rdds0, entries0) = (rdds.keySet, SessionCache.entries(spark))
+    val df = query
+    val r = try consume(df) finally graft.operators.Dedup.release(df)
+    val entries = SessionCache.entries(spark) - entries0
+    val left = rdds.view.filterKeys(!rdds0(_)).values.toSeq.sortBy(_.id)
+      .map(SessionCache.describe) ++
+      Option.when(entries > 0)(s"$entries session cache entries")
+    if (left.nonEmpty) throw new IllegalStateException(
+      "blocks still held after release: " + left.mkString("; "))
+    r
   }
 }

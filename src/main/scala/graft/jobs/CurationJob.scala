@@ -711,6 +711,11 @@ object CurationJob {
     lap("dedup")
     // deduped is materialized (count above) — its input snapshot is dead
     gated.unpersist(blocking = false)
+    // the labels ride in deduped's plan, which the stage pins below release:
+    // publish them now; the training-pairs stage reads the written copy
+    if (trainingPairsPath.nonEmpty)
+      dedupLabels.write.mode("overwrite")
+        .parquet(trainingPairsPath + "_labels")
 
     // STAGE PINNING: every optional stage's output is local-checkpointed.
     // The scrub/novelty/cap operators each reference their input frame
@@ -728,13 +733,9 @@ object CurationJob {
     // newest boundary is ever re-read. Free it immediately; otherwise a
     // full-stage config holds up to 5 corpus copies for the rest of the job.
     var boundary: org.apache.spark.sql.DataFrame = deduped
-    def releaseBoundary(df: org.apache.spark.sql.DataFrame): Unit = {
-      Dedup.release(df) // localCheckpoint boundaries (LogicalRDD-backed)
-      df.unpersist(blocking = false) // persisted stage heads (deduped)
-    }
     def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val pinned = df.localCheckpoint(true)
-      releaseBoundary(boundary)
+      Dedup.release(boundary)
       boundary = pinned
       pinned
     }
@@ -839,7 +840,7 @@ object CurationJob {
           matches.select(col("id_b").as(idCol)).distinct(),
           Seq(idCol), "left_anti"))
         // the pin above is eager, so the matches frame (and the corpus-scale
-        // shingle stores it checkpoints) is fully consumed — free it now
+        // shingle stores it persists) is fully consumed — free it now
         // instead of leaking it across the remaining stages
         Dedup.release(matches)
         (Some({ val c = joined.count(); lap("fuzzy"); c }), joined)
@@ -863,7 +864,7 @@ object CurationJob {
     // in-domain LM on the configured slice vs a base LM on the whole
     // current frame, Gumbel-top-k on the LLR weights
     val dsirCol = str("dsir_domain_col", "")
-    val (afterResample, resampled, freeLmPins) =
+    val (afterResample, resampled) =
       if (dsirCol.nonEmpty) {
         val domainVal = str("dsir_domain_value", "")
         val k = str("dsir_k", "1000").toInt
@@ -875,13 +876,8 @@ object CurationJob {
             idCol, "llr_e6", k)
           .select(col(idCol))
         val joined = mixed.join(picked, Seq(idCol), "left_semi")
-        // the LM bigram frames may be persistIfHeavy-pinned; free them
-        // after the sink write (the last action evaluating this plan) —
-        // the job holds no per-query clearCache sweep (r17 advice)
-        (Some({ val c = joined.count(); lap("dsir"); c }), joined,
-          () => graft.operators.Dedup.releasePin(
-            domainLm.bigrams, baseLm.bigrams))
-      } else (None, mixed, () => ())
+        (Some({ val c = joined.count(); lap("dsir"); c }), joined)
+      } else (None, mixed)
 
     // 5. partitioned parquet sink
     val parts = strSeq("partition_by")
@@ -889,7 +885,10 @@ object CurationJob {
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .parquet(outPath)
     lap("sink_write")
-    freeLmPins()
+    // the sink was the last action over the curated plan (the exports and
+    // the data card re-read the written parquet): free the last boundary
+    // and the DSIR LMs' bigram pins it reaches
+    Dedup.release(resampled)
     val output = spark.read.parquet(outPath).count()
 
     // 5b. optional CO-LOCATED bucketed publication: save the curated corpus
@@ -1032,7 +1031,8 @@ object CurationJob {
         else Seq("test" -> 0.05, "train" -> 0.9, "val" -> 0.05)
       }
       val qSplit = DataMix.assignSplitByComponent(
-          queries.select(col("q_id").as(idCol)), idCol, dedupLabels, splits)
+          queries.select(col("q_id").as(idCol)), idCol,
+          spark.read.parquet(trainingPairsPath + "_labels"), splits)
         .select(col(idCol).as("q_id"), col("split_key"), col("split"))
       negatives
         .join(gold, Seq("q_id"))
@@ -1040,9 +1040,6 @@ object CurationJob {
         .select(col("q_id"), col("gold_id"), col("retriever"),
           col("neighbor_id"), col("rank"), col("split_key"), col("split"))
         .write.mode("overwrite").parquet(trainingPairsPath)
-      dedupLabels.write.mode("overwrite")
-        .parquet(trainingPairsPath + "_labels")
-      graft.operators.Dedup.release(dedupLabels)
       lap("training_pairs")
       // 5b5b. optional retrieval-quality QA card (r17 — q154's operator
       // on the job's own product), one row per retriever, exact e6
@@ -1131,8 +1128,7 @@ object CurationJob {
         graft.operators.Packing.examples(written, idCol, Seq(shardCol))
           .write.mode("overwrite").parquet(exPath)
       // all writes landed — free the encW/ids pins the operator holds
-      graft.operators.Dedup.release(tokenized)
-      graft.operators.Dedup.release(vocab)
+      Seq(tokenized, vocab).foreach(Dedup.release)
       lap("tokenized_export")
     }
     // 5b7. optional MIXTURE PLAN (r17 — q157/q159's operators on the
@@ -1224,9 +1220,6 @@ object CurationJob {
         .write.mode("overwrite").parquet(outPath + "_report")
 
     lap("count+report")
-    // the sink write above consumed the last boundary; nothing reads it again
-    // (output count and the data card re-read the written parquet)
-    releaseBoundary(boundary)
     val stats = Stats(input, afterQuality, afterDedup, output,
       afterWindowScrub, afterResample, afterDecontam,
       afterLineCap, afterNovelty, afterFuzzy, afterHostCap)

@@ -219,12 +219,13 @@ object MediaCurationJob {
     // signature frame never shuffles for the gate
     val admittedSigs = if (rejectedIds == null) sigs
       else sigs.join(broadcast(rejectedIds), Seq("media_id"), "left_anti")
-    val pairs = if (isVideo)
-      Multimodal.videoNearDupPairsFromSigs(admittedSigs, minShared)
-    else Dedup.simhashBandPairs(
+    val (pairs, freePairs) = if (isVideo)
+      (Multimodal.videoNearDupPairsFromSigs(admittedSigs, minShared), () => ())
+    else Dedup.simhashBandPairsManaged(
       admittedSigs.select(col("media_id"), col("phash").as("simhash")),
       "media_id", maxHamming, maxBucket = 4096)
     val labels = Dedup.components(pairs)
+    freePairs() // CC is eager: the labels no longer reach the banded frame
     lap("pairs+cc")
     // EVERYTHING that falls out of the tick is small — junk, store dups, and
     // cluster non-survivors — while the tick's rows carry payload blobs. So

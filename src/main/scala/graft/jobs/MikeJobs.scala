@@ -154,8 +154,7 @@ object MikeJobs {
   def dischargeInput(spark: SparkSession, series: DataFrame,
                      startTs: String, endTs: String,
                      stepMinutes: Int = 15): DataFrame = {
-    val aligned = alignToSpine(broadcast(timeSpine(spark, startTs, endTs, stepMinutes)),
-      series)
+    val aligned = alignToSpine(timeSpine(spark, startTs, endTs, stepMinutes), series)
     // P6/W2: MIKE needs a closed boundary — a missing or negative value on the
     // spine's last row is patched to 0 (ref: inputs/gen_mike_input_dis_linux.py:104-106;
     // inputs/gen_mike_input_tide_linux.py:110-111). That row is the one spine time

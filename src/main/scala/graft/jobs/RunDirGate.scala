@@ -5,8 +5,6 @@ import java.time.{Duration, Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** The cron front-gate of the output-extraction pipeline (T3; SURVEY §2.7) —
   * re-expressing `outputs/extract_mike_data_to_db.sh:5-32`:
@@ -23,9 +21,7 @@ import org.apache.spark.sql.functions._
   *     (ref lines 23-33), yielding `"yyyy-MM-dd H:M:S"`.
   *
   * Directory selection is deliberately driver-side (like the reference's find
-  * loop): the candidate set is run-sized (dozens), not data-sized. The
-  * data-sized analog for multi-directory scans is `fgtFromPath`, which
-  * derives the same fgt per ROW from `input_file_name()` inside the scan. */
+  * loop): the candidate set is run-sized (dozens), not data-sized. */
 object RunDirGate {
 
   /** One admitted run directory: its path, the result CSV inside it, and the
@@ -92,20 +88,5 @@ object RunDirGate {
         } yield RunDir(shown(dir.getPath), shown(csv), fgt)
       }
       .sortBy(_.dir)
-  }
-
-  /** Data-sized analog of the dirname parse for multi-directory scans: derive
-    * each row's fgt from `input_file_name()` with one codegen'd
-    * regexp_extract over the path — no per-directory driver loop, so a
-    * thousand run directories read as ONE distributed scan. Yields null for
-    * paths without a `date_H-M-S` directory component. */
-  def fgtFromPath(path: Column): Column = {
-    val re = "([0-9]{4}-[0-9]{2}-[0-9]{2})_([0-9]{1,2})-([0-9]{1,2})-([0-9]{1,2})[^/]*/"
-    when(regexp_extract(path, re, 1) =!= "",
-      concat(
-        regexp_extract(path, re, 1), lit(" "),
-        regexp_extract(path, re, 2), lit(":"),
-        regexp_extract(path, re, 3), lit(":"),
-        regexp_extract(path, re, 4)))
   }
 }

@@ -68,14 +68,13 @@ object Bm25 {
     * left avgdl drifted forever. Zero-dl rows never join postings, so the
     * serve path is unchanged. */
   final case class Bm25Index(tf: DataFrame, dl: DataFrame, df: DataFrame,
-                             idCol: String, nDocs: Long, totTokens: Long,
-                             pinned: Seq[DataFrame] = Nil) {
-    /** Free the persisted build/tick frames this in-memory index pins
-      * (the pageRank/dedup release contract): call after the final action
-      * on an UNSAVED index — [[save]] calls it itself, the stored tables
-      * are the artifact from then on and [[Bm25Index.load]] pins
-      * nothing. */
-    def release(): Unit = pinned.foreach(_.unpersist(blocking = false))
+                             idCol: String, nDocs: Long, totTokens: Long) {
+    /** Free the persisted build/tick frames this in-memory index pins —
+      * every one is reachable from `tf`, `dl` or `df`, so this is
+      * [[Dedup.release]] on the three: call after the final action on an
+      * UNSAVED index — [[save]] calls it itself, the stored tables are the
+      * artifact from then on and [[Bm25Index.load]] pins nothing. */
+    def release(): Unit = Seq(tf, dl, df).foreach(Dedup.release)
 
     /** Persist as BucketedStore tables `<name>_tf/_dl/_df/_meta`. The
       * 1-row meta frame rides the same save path: a non-persistent
@@ -140,7 +139,7 @@ object Bm25 {
     val meta = dl.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
       .first()
     val (nDocs, totTokens) = (meta.getLong(0), meta.getLong(1))
-    Bm25Index(tf, dl, df, idCol, nDocs, totTokens, pinned = Seq(tf, dl))
+    Bm25Index(tf, dl, df, idCol, nDocs, totTokens)
   }
 
   /** Admission tick: fold a batch of NEW docs into the index — work is
@@ -174,7 +173,7 @@ object Bm25 {
           .as("df"))
     Bm25Index(index.tf.unionByName(btf), index.dl.unionByName(bdl),
       mergedDf, idc, index.nDocs + addedDocs,
-      index.totTokens + addedTokens, pinned = index.pinned ++ Seq(btf, bdl))
+      index.totTokens + addedTokens)
   }
 
   /** Deletion tick (the q86 inverse): drop `ids` (a one-column frame of
@@ -197,7 +196,7 @@ object Bm25 {
     Bm25Index(index.tf.join(broadcast(doomed), Seq(idc), "left_anti"),
       index.dl.join(broadcast(doomed), Seq(idc), "left_anti"),
       newDf, idc, index.nDocs - removedDocs,
-      index.totTokens - removedTokens, pinned = index.pinned :+ rtf)
+      index.totTokens - removedTokens)
   }
 
   /** Serve a query batch from the index: identical semantics (and exact

@@ -339,7 +339,7 @@ object Bpe {
         if (i == chunks.length - 1) applied
         else {
           val cp = applied.localCheckpoint(eager = true)
-          Dedup.release(df)
+          if (i > 0) Dedup.release(df) // the previous chunk's checkpoint
           cp
         }
       }

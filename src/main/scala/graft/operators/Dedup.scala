@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{MinHashSketch, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -161,23 +162,13 @@ object Dedup {
     * at-scale direction. `graft.pin.minInputBytes` is the dial (default
     * 32 MB: above every local-SF bench corpus, far below any production
     * slab; the ×100-amplified sf10 census corpus at 49 MB decompressed
-    * pins, which is exactly the regime the pins were measured to win in). */
+    * pins, which is exactly the regime the pins were measured to win in).
+    * The pin is freed like every other: [[release]] on any consumed frame
+    * whose plan reaches it (a no-op when the gate stayed closed). */
   private[graft] def persistIfHeavy(frame: DataFrame,
                                     src: DataFrame): DataFrame =
     if (heavySource(src)) frame.persist(StorageLevel.MEMORY_AND_DISK)
     else frame
-
-  /** Release contract for [[persistIfHeavy]]-pinned frames (r18, r17
-    * verdict #7): operators that pin and RETURN lazy frames over the pin
-    * (NgramLm's BigramLm.bigrams, Quantiles.rankBuckets' base) cannot free
-    * it themselves — the caller must, once the last action over the
-    * returned frame has run. Bench/Verify sweep per query
-    * (`clearCache()`); long-lived library callers (CurationJob's DSIR
-    * stage, any serving loop holding an LM) call this after their final
-    * consumer materializes. No-op when the size gate kept the pin closed
-    * (unpersist on an uncached frame does nothing). */
-  def releasePin(frames: DataFrame*): Unit =
-    frames.foreach(_.unpersist(blocking = false))
 
   /** The shared "is re-evaluating `src`'s subtree expensive?" gate behind
     * [[persistIfHeavy]] and [[localizeIfHeavy]]. r18 refinements (r17
@@ -241,9 +232,8 @@ object Dedup {
     * it single-task, 10× the cost of the distributed projection). */
   private def shingleFrame(docs: DataFrame, idCol: String, textCol: String,
                            n: Int, blockCols: Seq[String],
-                           viaCheckpoint: Boolean = false,
-                           costWeight: Int = 1): DataFrame = {
-    val built = ensureParallel(docs.select(
+                           costWeight: Int = 1): DataFrame =
+    ensureParallel(docs.select(
       (col(idCol).as("__id") +: col(textCol).as("__text") +: blockCols.map(col)): _*),
       costWeight)
       // exchange (when needed) BEFORE the per-doc shingle computation: without
@@ -252,17 +242,7 @@ object Dedup {
       .withColumn("__sh", TextFns.sortedHashedShingles(col("__text"), n))
       .withColumn("__sz", size(col("__sh")).cast("long"))
       .drop("__text")
-    // viaCheckpoint: the INCREMENTAL paths return a lazy matches frame that
-    // keeps reading the shingle store — there is no eager consumption point
-    // inside the operator where a persist could be freed. An eager
-    // localCheckpoint rides in the result plan as a LogicalRDD instead, so
-    // `Dedup.release(result)` frees it — the same contract the composites
-    // already have (r6 ADVICE: the old form leaked its persist until a
-    // session-wide clearCache). Cost parity: materializing the checkpoint
-    // is the persist's first full scan, paid eagerly instead of lazily.
-    if (viaCheckpoint) built.localCheckpoint(eager = true)
-    else built.persist(StorageLevel.MEMORY_AND_DISK)
-  }
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The empty-shingle filter, applied ON TOP of the persisted shingle frame
     * (never inside its build plan — see `shingleFrame`'s pushdown note). Kept
@@ -696,10 +676,10 @@ object Dedup {
     * route the corpus store is consumed ONLY while the (small) reps /
     * member-group checkpoints materialize, so `releaseCorpus` is invoked
     * RIGHT THERE — the corpus-sized frame never lingers behind a truncated
-    * lineage. Everything the returned plan still pins (shNew's store via the
-    * verify join, reps, member groups) rides it as LogicalRDDs, so the
-    * documented `Dedup.release(result)` contract keeps reaching every
-    * checkpoint. On the direct route `releaseCorpus` is NOT invoked — the
+    * lineage. Everything the returned plan still pins (shNew's persisted
+    * store via the verify join, the reps and member-group checkpoints)
+    * rides it, so the documented `Dedup.release(result)` contract keeps
+    * reaching every block. On the direct route `releaseCorpus` is NOT invoked — the
     * corpus store rides the result plan and the caller's contract frees it.
     * Returns (matches, free) — free re-releases the collapse checkpoints
     * (harmless double-free; for managed callers that never hand the frame
@@ -763,7 +743,7 @@ object Dedup {
     * (adaptive, exact — see `crossMatchesManaged`).
     * Returns (id_a = incoming, id_b = corpus, jaccard).
     *
-    * The result plan carries both sides' checkpointed shingle stores (plus
+    * The result plan carries both sides' persisted shingle stores (plus
     * the collapse checkpoints when the adaptive route engages); call
     * `Dedup.release(result)` after the final action to free them (the
     * composites' contract — no session-wide clearCache needed). */
@@ -783,12 +763,11 @@ object Dedup {
       n: Int, threshold: Double, blockCols: Seq[String],
       forceCollapse: Option[Boolean],
       maxCandidates: Long = 0L): DataFrame = {
-    val shNew = liveShingles(
-      shingleFrame(incoming, idCol, textCol, n, blockCols, viaCheckpoint = true))
-    val shOldH =
-      shingleFrame(corpus, idCol, textCol, n, blockCols, viaCheckpoint = true)
+    val shNew = liveShingles(shingleFrame(incoming, idCol, textCol, n, blockCols))
+    val shOldH = shingleFrame(corpus, idCol, textCol, n, blockCols)
     crossMatchesManaged(shNew, liveShingles(shOldH), threshold, blockCols,
-      releaseCorpus = () => release(shOldH), forceCollapse = forceCollapse,
+      releaseCorpus = () => shOldH.unpersist(blocking = false),
+      forceCollapse = forceCollapse,
       maxCandidates = maxCandidates)._1
   }
 
@@ -816,30 +795,24 @@ object Dedup {
                      textCol: String, n: Int, threshold: Double,
                      blockCols: Seq[String]): DataFrame =
     admissionPairsManaged(corpus, incoming, idCol, textCol, n, threshold,
-      blockCols, viaCheckpoint = true)._1
+      blockCols)._1
 
   private def admissionPairsManaged(corpus: DataFrame, incoming: DataFrame,
                                     idCol: String, textCol: String, n: Int,
-                                    threshold: Double, blockCols: Seq[String],
-                                    viaCheckpoint: Boolean): (DataFrame, () => Unit) = {
-    val shNewH = shingleFrame(incoming, idCol, textCol, n, blockCols, viaCheckpoint)
-    val shOldH = shingleFrame(corpus, idCol, textCol, n, blockCols, viaCheckpoint)
+                                    threshold: Double, blockCols: Seq[String])
+      : (DataFrame, () => Unit) = {
+    val shNewH = shingleFrame(incoming, idCol, textCol, n, blockCols)
+    val shOldH = shingleFrame(corpus, idCol, textCol, n, blockCols)
     val shNew = liveShingles(shNewH)
-    val shOld = liveShingles(shOldH)
     val intra = verifyJaccard(shNew, threshold,
       prefixCandidates(shNew, threshold, blockCols))
-    val (cross, freeCross) = crossMatchesManaged(shNew, shOld, threshold,
-      blockCols, releaseCorpus = () =>
-        if (!viaCheckpoint) shOldH.unpersist(blocking = false)
-        else release(shOldH))
-    (intra.unionByName(cross),
-      () => {
-        freeCross()
-        if (!viaCheckpoint) {
-          shNewH.unpersist(blocking = false)
-          shOldH.unpersist(blocking = false)
-        } else Seq(shNewH, shOldH).foreach(release)
-      })
+    val (cross, freeCross) = crossMatchesManaged(shNew, liveShingles(shOldH),
+      threshold, blockCols,
+      releaseCorpus = () => shOldH.unpersist(blocking = false))
+    (intra.unionByName(cross), () => {
+      freeCross()
+      Seq(shNewH, shOldH).foreach(_.unpersist(blocking = false))
+    })
   }
 
   /** The one-call daily tick: compute the batch's full admission edge set
@@ -853,7 +826,7 @@ object Dedup {
                                textCol: String, n: Int, threshold: Double,
                                blockCols: Seq[String]): DataFrame = {
     val (pairs, free) = admissionPairsManaged(corpus, incoming, idCol, textCol,
-      n, threshold, blockCols, viaCheckpoint = false)
+      n, threshold, blockCols)
     admitIntoComponentsManaged(labels, pairs, "id_a", "id_b", free)
   }
 
@@ -1388,7 +1361,15 @@ object Dedup {
     * set (q59 pins banded == brute force); enable it when feeding cluster
     * resolution, where star connectivity is all that is consumed. */
   def simhashBandPairs(sig: DataFrame, idCol: String, maxHamming: Int,
-                       maxBucket: Int = 0, maxPairs: Long = 0L): DataFrame = {
+                       maxBucket: Int = 0, maxPairs: Long = 0L): DataFrame =
+    simhashBandPairsManaged(sig, idCol, maxHamming, maxBucket, maxPairs)._1
+
+  /** [[simhashBandPairs]] plus the handle that frees its persisted banded
+    * frame — for callers that consume the pairs eagerly ([[components]]),
+    * after which the pairs no longer reach it. */
+  private[graft] def simhashBandPairsManaged(sig: DataFrame, idCol: String,
+      maxHamming: Int, maxBucket: Int = 0,
+      maxPairs: Long = 0L): (DataFrame, () => Unit) = {
     val bands = maxHamming + 1
     def bandVal(sim: Column, b: Int): Column = simhashBandVal(sim, b, bands)
     val banded = simhashBandedFrame(sig, idCol, maxHamming)
@@ -1415,13 +1396,14 @@ object Dedup {
           noEarlierBand)
       .select(col("x.__id").as("id_a"), col("y.__id").as("id_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-    if (star == null) selfPairs
-    else selfPairs.unionByName(star
-      .filter(bit_count(col("__bmin_simhash").bitwiseXOR(col("simhash")))
-        <= maxHamming)
-      .select(col("__bmin").as("id_a"), col("__id").as("id_b"),
-        bit_count(col("__bmin_simhash").bitwiseXOR(col("simhash"))).as("hamming"))
-      .distinct())
+    val pairs = if (star == null) selfPairs
+      else selfPairs.unionByName(star
+        .filter(bit_count(col("__bmin_simhash").bitwiseXOR(col("simhash")))
+          <= maxHamming)
+        .select(col("__bmin").as("id_a"), col("__id").as("id_b"),
+          bit_count(col("__bmin_simhash").bitwiseXOR(col("simhash"))).as("hamming"))
+        .distinct())
+    (pairs, () => banded.unpersist(blocking = false))
   }
 
   /** Cross-corpus signature matches — [[simhashBandPairs]]' ADMISSION form:
@@ -1530,11 +1512,6 @@ object Dedup {
     // seed with min(self, direct neighbors): pair and star clusters — the
     // overwhelming shape of near-dup graphs — converge on the seed itself, so
     // the loop only runs its single confirmation round
-    // free a round's checkpoint blocks once the next round is materialized
-    def freeCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
     // LAZY checkpoints: materialization rides the changed-count job below (one
     // pass per round); eager would add a second full pass per round
     var labels = edges.groupBy(col("src"))
@@ -1570,8 +1547,8 @@ object Dedup {
       val changed = next
         .agg(coalesce(sum(when(col("comp") =!= col("__prev"), 1L).otherwise(0L)),
           lit(0L))).first().getLong(0)
-      freeCheckpoint(labels)
-      freeCheckpoint(stepped)
+      // free the round's checkpoint blocks: the next round is materialized
+      Seq(labels, stepped).foreach(release)
       labels = next.select(col("id"), col("comp"))
       converged = changed == 0L
       i += 1
@@ -1774,10 +1751,6 @@ object Dedup {
     val ids = p.select(col(idA).as("id"))
       .union(p.select(col(idB).as("id"))).distinct()
       .localCheckpoint(eager = false)
-    def freeCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
     // normalize: (u > v), no self loops, deduped
     var edges = p.select(greatest(col(idA), col(idB)).as("u"),
         least(col(idA), col(idB)).as("v"))
@@ -1811,8 +1784,7 @@ object Dedup {
       val nextCnt = small.count()
       val changed = nextCnt != cnt ||
         small.join(edges, Seq("u", "v"), "left_anti").limit(1).count() > 0
-      freeCheckpoint(edges)
-      freeCheckpoint(large)
+      Seq(edges, large).foreach(release)
       edges = small
       cnt = nextCnt
       converged = !changed
@@ -1903,11 +1875,23 @@ object Dedup {
                     n: Int, threshold: Double,
                     blockCols: Seq[String],
                     collapseExact: Boolean = true,
-                    maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
+                    maxCandidates: Long = DefaultMaxCandidates): DataFrame =
+    dedupedCorpusWithLabels(docs, idCol, textCol, n, threshold, blockCols,
+      collapseExact, maxCandidates)._1
+
+  /** [[components]] of the exact n-gram Jaccard pair graph: (id, component)
+    * for every doc with a near-dup. CC is eager, so the pair pass's shingle
+    * store is freed before this returns. */
+  def jaccardComponents(docs: DataFrame, idCol: String, textCol: String,
+                        n: Int, threshold: Double, blockCols: Seq[String],
+                        collapseExact: Boolean = false,
+                        maxCandidates: Long = 0L): DataFrame = {
     val (pairs, free) =
       ngramJaccardPairsManaged(docs, idCol, textCol, n, threshold, blockCols,
         collapseExact, maxCandidates)
-    survivors(docs, idCol, pairs, free)
+    val labels = components(pairs)
+    free()
+    labels
   }
 
   /** [[dedupedCorpus]] that ALSO returns the (id, component) cluster labels
@@ -1922,11 +1906,8 @@ object Dedup {
                               collapseExact: Boolean = true,
                               maxCandidates: Long = DefaultMaxCandidates):
       (DataFrame, DataFrame) = {
-    val (pairs, free) =
-      ngramJaccardPairsManaged(docs, idCol, textCol, n, threshold, blockCols,
-        collapseExact, maxCandidates)
-    val labels = components(pairs)
-    free()
+    val labels = jaccardComponents(docs, idCol, textCol, n, threshold,
+      blockCols, collapseExact, maxCandidates)
     val doomed = labels
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
@@ -1963,9 +1944,12 @@ object Dedup {
                              maxBucket: Int = 4096): DataFrame = {
     val sig = simhash64(docs, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pairs = simhashBandPairs(sig, idCol, maxHamming, maxBucket)
-      .select(col("id_a"), col("id_b"))
-    survivors(docs, idCol, pairs, () => sig.unpersist(blocking = false))
+    val (pairs, freeBanded) =
+      simhashBandPairsManaged(sig, idCol, maxHamming, maxBucket)
+    survivors(docs, idCol, pairs.select(col("id_a"), col("id_b")), () => {
+      freeBanded()
+      sig.unpersist(blocking = false)
+    })
   }
 
   /** Semantic dedup (Abbas et al., "SemDeDup: Data-efficient learning at
@@ -2323,21 +2307,32 @@ object Dedup {
       .join(broadcast(del.select(col("id").as("id_b"))), Seq("id_b"),
         "left_anti")
     val recc = components(sub, "id_a", "id_b")
+    // CC is eager: the result reaches affectedRoots, never del or members
+    Seq(del, members).foreach(release)
     // untouched clusters keep their labels verbatim (second streamed pass)
     lab.join(broadcast(affectedRoots), Seq("component"), "left_anti")
       .select(col("id"), col("component"))
       .unionByName(recc.select(col("id"), col("component")))
   }
 
-  /** Free the checkpoint blocks a CONSUMED dedup-composite result still pins
-    * (the final connected-components labels ride along as a lineage-truncated
-    * LogicalRDD, which `spark.catalog.clearCache()` does not cover). Call after
-    * the final action on the returned frame; the frame cannot be recomputed
-    * afterwards. */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
+  /** The one release for a CONSUMED frame: frees every block its analyzed
+    * plan reaches — the `localCheckpoint` RDDs riding in it as LogicalRDDs,
+    * and every subtree the session cache holds (a `persist`), uncached
+    * outermost first so no freed entry is rebuilt over an inner one. Call
+    * after the final action on `df`; the frame cannot be recomputed
+    * afterwards. Blocks the plan cannot reach are the operator's to free. */
+  def release(df: DataFrame): Unit = {
+    val spark = castToImpl(df.sparkSession)
+    val cache = spark.sharedState.cacheManager
+    val plan = df.queryExecution.analyzed
+    plan.foreach { p =>
+      if (!cache.isEmpty && cache.lookupCachedData(spark, p).isDefined)
+        cache.uncacheQuery(spark, p, cascade = false, blocking = false)
+    }
+    plan.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
+  }
 
   /** Embedding near-dup pairs: cosine >= threshold. Vectors are quantized and
     * norm'd ONCE per row before any pair join, so the per-pair cost is a single

@@ -122,9 +122,7 @@ object LinkGraph {
       .select(col("node"), coalesce(col("out_deg"), lit(0L)).as("out_deg"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"), col("pr_e12"))
       .localCheckpoint(true)
-    Dedup.release(rank)
-    Dedup.release(nodes)
-    Dedup.release(edges)
+    Seq(rank, nodes, edges).foreach(Dedup.release)
     out
   }
 

@@ -239,9 +239,8 @@ object Multimodal {
     * rescales), ≤ 6 = localized edits; beyond ~8 prefer embedding LSH.
     *
     * Cache lifecycle: the banding stage rides a persisted signature frame
-    * with the same session lifecycle as the batch text listings (q24/q25) —
-    * `spark.catalog.clearCache()` frees it between ticks of a long-running
-    * driver. */
+    * reachable from the returned pairs, like the batch text listings
+    * (q24/q25) — `Dedup.release(pairs)` after the last action frees it. */
   def imageNearDupPairs(df: DataFrame, hasher: BatchHasher,
                         maxHamming: Int = 6, maxBucket: Int = 0,
                         maxPairs: Long = 0L,

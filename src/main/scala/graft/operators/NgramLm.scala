@@ -36,10 +36,9 @@ object NgramLm {
     * training vocabulary size. On a heavy (corpus-scale) training source
     * `bigrams` comes back PINNED (size-gated `Dedup.persistIfHeavy`) so the
     * multiply-referencing scoring plans re-tokenize the corpus once, not
-    * once per reference — long-lived callers must free it after their last
-    * scoring action via `Dedup.releasePin(lm.bigrams)` (no-op when the gate
-    * stayed closed); Bench/Verify's per-query `clearCache()` covers the
-    * declared queries. */
+    * once per reference. `Dedup.release` on a scored frame (or on
+    * `lm.bigrams`) after the last scoring action frees the pin (a no-op
+    * when the gate stayed closed). */
   final case class BigramLm(bigrams: DataFrame, contexts: DataFrame,
                             vocabSize: Long)
 

@@ -242,9 +242,10 @@ object Packing {
     require(tokenBudget >= 1, s"tokenBudget must be >= 1, got $tokenBudget")
     // lazy pin, same reasoning as encW above: both references to `ids`
     // below land in the caller's one final action, which materializes the
-    // pin as it runs — the eager form cost a separate corpus-aggregate job
+    // pin as it runs — the eager form cost a separate corpus-aggregate job.
+    // A persist keeps the lineage, so `Dedup.release(pieces)` reaches encW
     val (ids0, vocab) = encodeIdsWithVocab(docs, idCol, textCol, merges)
-    val ids = ids0.localCheckpoint(false)
+    val ids = ids0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // each doc's stream prior is the per-shard prefix sum of token counts;
     // spans split at bin boundaries and the id arrays slice per piece
     val counts = docs.select((col(idCol) +: shardCols.map(col)): _*)

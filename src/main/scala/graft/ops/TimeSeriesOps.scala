@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `CUrW-SL/curw_mike_data_handler`, read-only at /root/reference) as lazy, composable
   * `DataFrame => DataFrame` transforms so Catalyst owns planning and Tungsten owns
   * execution. Nothing here collects to the driver; every transform is a narrow map or a
-  * single shuffle that scales horizontally: at 100 TB the spine join is a broadcast (the
-  * spine is tiny) and the resample is one hash aggregate with map-side partial
-  * aggregation. The MIKE matrices are built wide, as the reference builds them: the
+  * single shuffle that scales horizontally: the spine join broadcasts the series when it
+  * fits and is one sort-merge shuffle when it does not, and the resample is one hash
+  * aggregate with map-side partial aggregation. The MIKE matrices are built wide, as the reference builds them: the
   * resample aggregates straight into one column per station, and the row mean and the
   * catchment fold are column expressions over that row — no window, no join
   * (ref: inputs/gen_mike_input_rf_linux.py:104-108,180-202).
@@ -37,8 +37,9 @@ object TimeSeriesOps {
   /** J1: align a long-layout series onto the dense spine; gaps become NULLs to be
     * imputed. ref: inputs/gen_mike_input_rf_linux.py:162 (loop of 22 sequential
     * left-joins — here it is ONE join; the wide shape comes later from pivot).
-    * The spine side is small — callers should pass `broadcast(spine)` when the series
-    * side is large, keeping this shuffle-free.
+    * The spine is the preserved side of the left join, so Spark can broadcast only
+    * the series: a series under the broadcast threshold is broadcast, a larger one is
+    * sort-merge shuffled. A `broadcast(spine)` hint is ignored.
     */
   def alignToSpine(spine: DataFrame, series: DataFrame, timeCol: String = "time"): DataFrame =
     spine.join(series, Seq(timeCol), "left")

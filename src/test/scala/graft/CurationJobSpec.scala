@@ -503,8 +503,8 @@ class CurationJobSpec extends SparkSpec {
     assert(fetched.length == picked.count().toInt && fetched.nonEmpty)
   }
 
-  test("curation job: training-pairs publication — gold-excluded negatives, cluster-keyed splits") {
-    val dir = Files.createTempDirectory("curationtp")
+  /** 20 docs under `dir/docs` with one planted near-dup cluster {5, 9}. */
+  private def writeTrainingPairsDocs(dir: java.nio.file.Path): Unit = {
     val base = "common alpha beta"
     val docs = (0L until 20L).map { i =>
       val uniq = (0 until 6).map(j => s"u${i}x$j").mkString(" ")
@@ -518,6 +518,33 @@ class CurationJobSpec extends SparkSpec {
     }
     docs.toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/docs")
+  }
+
+  test("curation job: training pairs survive a stage pin on the distributed CC route") {
+    // the dedup labels ride in the deduped corpus's plan, and a stage pin
+    // releases that plan; on the distributed CC route the labels are
+    // checkpoint blocks, which the training-pairs stage must not need
+    val dir = Files.createTempDirectory("curationtppin")
+    writeTrainingPairsDocs(dir)
+    Files.writeString(dir.resolve("cfg.json"),
+      s"""{"documents_path": "$dir/docs", "output_path": "$dir/out",
+         | "min_words": 3, "gopher_rules": false, "redact_pii": false,
+         | "ngram_n": 3, "jaccard_threshold": 0.5, "block_cols": ["lang"],
+         | "line_freq_cap": 100,
+         | "training_pairs_output_path": "$dir/tp",
+         | "training_query_every": 1, "training_query_words": 3,
+         | "training_negatives_k": 3}""".stripMargin)
+    spark.conf.set(graft.operators.Dedup.MaxLocalEdgesKey, "0")
+    try assert(CurationJob.run(spark, s"$dir/cfg.json").get.output == 19)
+    finally spark.conf.unset(graft.operators.Dedup.MaxLocalEdgesKey)
+    assert(spark.read.parquet(s"$dir/tp").count() > 0)
+    assert(spark.read.parquet(s"$dir/tp_labels").filter($"id" === 9L)
+      .select($"component").as[Long].head() == 5L)
+  }
+
+  test("curation job: training-pairs publication — gold-excluded negatives, cluster-keyed splits") {
+    val dir = Files.createTempDirectory("curationtp")
+    writeTrainingPairsDocs(dir)
     (0L until 20L).map(i => (i, Array.tabulate(8)(d =>
         math.sin(i * 0.9 + d * 0.61).toFloat)))
       .toDF("doc_id", "embedding").write.parquet(s"$dir/emb")

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionCache
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -910,12 +911,21 @@ class DedupSpec extends SparkSpec {
     val embOut = Dedup.dedupedCorpusByEmbedding(corpus, "vec_id", "embedding",
       threshold = 0.999)
     assert(embOut.count() == 100)
-    // the ADMISSION paths share the contract (r7, was clearCache-only): the
-    // lazy matches/admit frames carry their shingle/prep stores as
-    // checkpoints that release() frees after the final action
+    // the ADMISSION paths share the contract: the lazy pairs/matches/admit
+    // frames read their shingle stores in the one persisted form (and the
+    // embedding prep checkpoints), which release() frees after the final
+    // action
+    val admitPairs = Dedup.admissionPairs(docs, docs.limit(2), "doc_id",
+      "text", n = 3, threshold = 0.5, blockCols = Seq("lang"))
+    admitPairs.count()
+    val matches = Dedup.incrementalJaccardMatches(docs, docs.limit(2),
+      "doc_id", "text", n = 3, threshold = 0.5, blockCols = Seq("lang"))
+    matches.count()
     val admitJac = Dedup.admitNew(docs, docs.limit(2), "doc_id", "text",
       n = 3, threshold = 0.5, blockCols = Seq("lang"))
     admitJac.count()
+    assert(SessionCache.entries(spark) > 0,
+      "the admission shingle stores are persisted, not checkpointed")
     val admitEmb = Dedup.admitNewByEmbedding(corpus,
       base.select(($"vec_id" + 5000000L).as("vec_id"), $"embedding"),
       "vec_id", "embedding", threshold = 0.999)
@@ -930,16 +940,14 @@ class DedupSpec extends SparkSpec {
     // consumed them; the only blocks left are the results' final label
     // checkpoints and the admission frames' stores, which release() frees
     // once the caller is done
-    Dedup.release(jacOut)
-    Dedup.release(embOut)
-    Dedup.release(admitJac)
-    Dedup.release(admitEmb)
-    Dedup.release(ticked)
+    Seq(jacOut, embOut, admitPairs, matches, admitJac, admitEmb, ticked)
+      .foreach(Dedup.release)
     def residual = spark.sparkContext.getPersistentRDDs.values.toSeq
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (residual.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
     assert(residual.isEmpty,
       s"residual cached blocks after release: ${residual.map(_.toString)}")
+    assert(SessionCache.entries(spark) == 0, "cache entries left after release")
   }
 
   test("semanticDedup: cell-blocked route reproduces the corpus-wide exact answer") {

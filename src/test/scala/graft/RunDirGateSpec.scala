@@ -83,17 +83,6 @@ class RunDirGateSpec extends SparkSpec {
     assert(RunDirGate.fgtFromDirname("2026-08-12_0600").isEmpty)
   }
 
-  test("fgtFromPath derives per-row fgt from input_file_name in one scan") {
-    val root = fixtureTree()
-    val fresh = RunDirGate.freshRunDirs(root.toString, nowMs = nowMs,
-      todayOverride = Some(today))
-    val rows = spark.read.option("header", true)
-      .csv(fresh.map(_.resultCsv): _*)
-      .withColumn("fgt", RunDirGate.fgtFromPath(input_file_name()))
-      .select($"fgt").distinct().as[String].collect().toSet
-    assert(rows == Set(s"$today 06:00:00", s"$today 09:15:30"))
-  }
-
   test("ExtractToWarehouseJob --gated extracts each admitted dir with its dirname fgt") {
     val root = fixtureTree()
     val url = s"jdbc:derby:memory:rungate;create=true"

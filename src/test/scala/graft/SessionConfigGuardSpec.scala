@@ -6,25 +6,35 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps nine invariants from drifting back: `GraftSession` is the only place
+/** Keeps ten invariants from drifting back: `GraftSession` is the only place
   * that builds a SparkSession, no CLI job reads its config through Spark
   * (`JobConfig` parses it on the driver), the only mains are the CLI jobs and
   * three tools, no env var is read outside `GraftSession` and `Bench`, every
   * curation-job config key is set by some test, every pivot names its values,
   * concurrent Spark actions go through `Concurrent` rather than the global
-  * ExecutionContext, `Concurrent` is the only place that makes threads, and
-  * nothing runs Structured Streaming (the system is a batch cron ETL). */
+  * ExecutionContext, `Concurrent` is the only place that makes threads,
+  * nothing runs Structured Streaming (the system is a batch cron ETL), and
+  * no code sweeps the session cache. */
 class SessionConfigGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
 
-  /** `file:line` of every line under `dir` containing `needle`. */
-  private def hits(dir: Path, needle: String): Seq[String] = {
+  /** `file:line` of every line under `dir` containing `needle`; with
+    * `codeOnly`, comment text (scaladoc and block-comment lines, anything
+    * after `//`) does not count. */
+  private def hits(dir: Path, needle: String,
+                   codeOnly: Boolean = false): Seq[String] = {
+    def code(l: String): String = {
+      val t = l.trim
+      if (t.startsWith("*") || t.startsWith("/*")) ""
+      else l.split("//", 2)(0)
+    }
     val files = Files.walk(dir)
     try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
       .flatMap { f =>
         Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (l, i) if l.contains(needle) => s"${main.relativize(f)}:${i + 1}"
+          case (l, i) if (if (codeOnly) code(l) else l).contains(needle) =>
+            s"${main.relativize(f)}:${i + 1}"
         }
       }
     finally files.close()
@@ -114,5 +124,12 @@ class SessionConfigGuardSpec extends AnyFunSuite {
     val offenders =
       Seq("readStream", "writeStream", "foreachBatch").flatMap(hits(main, _))
     assert(offenders.isEmpty, s"the ticks are batch cron jobs: $offenders")
+  }
+
+  test("no code line in src/main sweeps the session cache") {
+    // a sweep hides the blocks a query leaked; Dedup.release frees what a
+    // frame reaches, and Verify/Bench fail a query that leaves blocks held
+    val offenders = hits(main, "clearCache()", codeOnly = true)
+    assert(offenders.isEmpty, s"free frames with Dedup.release: $offenders")
   }
 }
